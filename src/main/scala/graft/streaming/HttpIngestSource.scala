@@ -53,8 +53,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * 503 (retriable "back off") instead of growing driver memory, and
   * committed batches free capacity. Together the two caps make the edge's
   * memory bounded end-to-end: buffer ≤ maxBufferedRows, batch ≤
-  * maxRowsPerTrigger. (The cap is soft by a few rows under concurrent
-  * POSTs — the check-then-put is not atomic.)
+  * maxRowsPerTrigger. The cap is strict: each POST reserves its row with
+  * a CAS check-and-increment before appending, so concurrent handlers
+  * never push the buffer past N.
   *
   * Cost of the durable ack: each accepted row's 200 goes out only after
   * an fsync covering its WAL record — but the fsync is GROUP COMMIT, not

@@ -669,30 +669,46 @@ class StreamingSpec extends SparkSpec {
       "other batches' rows stay untouched")
   }
 
-  test("T8: enrichment pipeline — pooled HTTP transform + keyed write-back") {
+  test("T8: enrichment pipeline — keep-alive HTTP transform + keyed write-back") {
     // stub of the remote /update-salary service (Server/main.go:301):
-    // returns the FIXTURES A.4 stand-in so the result is exactly q23's
+    // returns the FIXTURES A.4 stand-in so the result is exactly q23's.
+    // `mode` picks how it answers; `exchanges` counts requests per client
+    // port, i.e. per connection
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val server = HttpServer.create(new java.net.InetSocketAddress(18700), 16)
+    @volatile var mode = "length"
+    val exchanges = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 16)
     server.createContext("/update-salary", new HttpHandler {
       override def handle(x: HttpExchange): Unit = {
         val body = new String(x.getRequestBody.readAllBytes(), "UTF-8")
+        val nth = exchanges.merge(x.getRemoteAddress.getPort, 1, (a, b) => a + b)
         def field(n: String) =
           ("\"" + n + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(body).get.group(1).toLong
         val resp = s"""{"new_salary":${field("salary") + 1000L * field("yearsofexp")}}"""
         val b = resp.getBytes("UTF-8")
-        x.sendResponseHeaders(200, b.length)
-        x.getResponseBody.write(b)
+        mode match {
+          // a connection closed while idle: the client's next request on
+          // it finds it closed before any byte of a response
+          case "idle-close" if nth > 1 => x.close()
+          case "chunked" => x.sendResponseHeaders(200, 0); x.getResponseBody.write(b)
+          case "close" =>
+            x.getResponseHeaders.set("Connection", "close")
+            x.sendResponseHeaders(200, b.length); x.getResponseBody.write(b)
+          case "500" =>
+            val e = "transform exploded".getBytes("UTF-8")
+            x.sendResponseHeaders(500, e.length); x.getResponseBody.write(e)
+          case _ => x.sendResponseHeaders(200, b.length); x.getResponseBody.write(b)
+        }
         x.close()
       }
     })
     server.setExecutor(null)
     server.start()
     try {
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/update-salary"
       val emp = queries.RelationalPipeline.employeeView(spark, sf)
       val emps = emp.select($"id", $"yearsofexp", $"salary").as[EnrichmentPipeline.Emp]
-      val viaHttp = EnrichmentPipeline.enrich(emps,
-        EnrichmentPipeline.httpTransform("http://localhost:18700/update-salary"), 4)
+      val viaHttp = EnrichmentPipeline.enrich(emps, EnrichmentPipeline.httpTransform(url), 4)
       val viaPure = EnrichmentPipeline.enrich(emps, EnrichmentPipeline.pureTransform, 4)
       val diff = viaHttp.toDF().except(viaPure.toDF()).count() +
         viaPure.toDF().except(viaHttp.toDF()).count()
@@ -703,6 +719,29 @@ class StreamingSpec extends SparkSpec {
       val joined = updated.as("u").join(emp.as("e"), "id")
         .filter($"u.salary" =!= $"e.salary" + lit(1000L) * $"e.yearsofexp")
       assert(joined.isEmpty)
+
+      // one connection per non-empty partition, each carrying its rows
+      val pure = viaPure.collect().sortBy(_.u_id).toSeq
+      val nonEmpty = viaPure.rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).sum().toInt
+      exchanges.clear()
+      assert(viaHttp.collect().sortBy(_.u_id).toSeq == pure)
+      assert(exchanges.size == nonEmpty,
+        s"expected one connection per non-empty partition ($nonEmpty), saw ${exchanges.size}")
+
+      // every framing the stub can answer with gives the same updates.
+      // Connections do not outlive their task, so a server closing idle
+      // ones between two runs cannot reach the second run; what a reused
+      // connection can meet is a close before its reply, and "idle-close"
+      // does that to each connection's second request
+      for (m <- Seq("chunked", "close", "idle-close")) {
+        mode = m
+        assert(viaHttp.collect().sortBy(_.u_id).toSeq == pure, s"stub mode $m")
+      }
+
+      mode = "500"
+      val failed = intercept[org.apache.spark.SparkException](viaHttp.collect())
+      assert(failed.getMessage.contains("HTTP 500") &&
+        failed.getMessage.contains("transform exploded"), failed.getMessage)
     } finally server.stop(0)
   }
 
