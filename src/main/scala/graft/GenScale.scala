@@ -475,7 +475,7 @@ object ProbeIdentity {
 }
 
 /** Append-cost scale probe (round-11): a FIXED 10k-row append into tables
-  * of two sizes. Linked staging (transactAppendFiles) makes the cost a
+  * of two sizes. Linked staging (appendLinked) makes the cost a
   * function of the BATCH plus O(#files) link metadata — near-flat in
   * table size; the pre-fix rewrite staging grew with the table and would
   * show ~10× here.

@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
   * function of the table, so no side files are needed.
   */
 object Graph {
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
   private def $(name: String) = col(name)
 
   private val Scale = 1000000000000L // pr fixed-point: 1.0 == 10^12
@@ -225,8 +226,7 @@ object Graph {
       edgesCk.unpersist(); mins.unpersist()
       edges = next; edgesCk = nextCk; mins = nextMins; sig = nextSig
       cycles += 1
-      if (sys.env.contains("GRAFT_WCC_DEBUG"))
-        System.err.println(s"[wcc] cycle $cycles sig $sig converged $converged")
+      logger.debug(s"[wcc] cycle $cycles sig $sig converged $converged")
     }
     require(converged,
       s"star contraction did not converge after $cycles cycles")

@@ -476,7 +476,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     // the consistency contract: every commit (including DML that never
     // goes near this catalog) must leave the stored value equal to the
-    // expression — enforceConstraints runs on all commit paths, so an
+    // expression — CHECK constraints run on all commit paths, so an
     // UPDATE that touches an input without re-deriving the generated
     // column refuses loudly instead of corrupting silently
     genFields.foreach { f =>

@@ -133,7 +133,8 @@ object SnapshotStore {
 
   /** True when the table's HEAD snapshot spans partition specs — the
     * routing probe DML callers use to pick the per-era scoped
-    * copy-on-write path ([[stagePartialEvolved]]).
+    * copy-on-write path ([[transactPartialWithChanges]] with
+    * `evolvedScoped`).
     */
   private[graft] def spansSpecs(root: String): Boolean =
     isEvolved(latest(root).dataDir)
@@ -197,12 +198,6 @@ object SnapshotStore {
     (segs.head.startsWith("_spec") && !segs.tail.exists(_.startsWith("_"))) ||
       !segs.exists(_.startsWith("_"))
 
-  private def carrySpecs(baseDir: String, dir: String): Unit = {
-    val src = specsFile(baseDir)
-    if (Files.exists(src) && !Files.exists(specsFile(dir)))
-      Files.copy(src, specsFile(dir))
-  }
-
   /** Change the table's partition spec WITHOUT rewriting data — a
     * metadata-only commit (hard-linked files + the specs sidecar), the
     * Iceberg partition-evolution shape. New appends land under the new
@@ -210,7 +205,7 @@ object SnapshotStore {
     * A `_dv` deletion-vector sidecar rides the evolve untouched: its
     * `(file, pos)` keys are snapshot-dir-relative and the link preserves
     * every relative path, so per-era reads ([[readDirEvolved]]), scoped
-    * DML ([[stagePartialEvolved]]) and MoR DML ([[transactMoR]]) all keep
+    * DML ([[transactPartialWithChanges]]) and MoR DML ([[transactMoR]]) all keep
     * honoring it until a full rewrite materializes it away. A RENAME
     * COLUMN mapping rides the same way: the per-era scans apply the
     * [[DirRead]] coalesce projection, so files carrying pre-rename
@@ -220,10 +215,8 @@ object SnapshotStore {
     * referencing columns the table lacks.
     */
   def alterPartitionSpec(spark: SparkSession, root: String,
-      newCols: Seq[String], maxAttempts: Int = 10): Snapshot = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root)
+      newCols: Seq[String], maxAttempts: Int = 10): Snapshot =
+    commitLoop(root, maxAttempts, guarded = false) { base =>
       val schema = readSchema(spark, base)
       val missing = newCols.filterNot(c =>
         schema.fields.exists(_.name.equalsIgnoreCase(c)))
@@ -241,37 +234,24 @@ object SnapshotStore {
         newCols.map(_.toLowerCase),
         s"partition spec of $root is already (${newCols.mkString(", ")})")
       val specs = current :+ (s"_spec${current.size}", newCols)
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      linkParquetTree(Paths.get(base.dataDir), dir)
-      Files.writeString(dir.resolve("_schema.json"), schema.json)
-      writeSpecs(dir.toString, specs)
-      carryStateSidecars(base.dataDir, dir.toString)
-      carryRenames(base.dataDir, dir.toString)
+      val dir = freshDir(root)
+      linkParquetTree(base.dataDir, dir)
+      carryTableState(base.dataDir, dir, Some(schema))
+      writeSpecs(dir, specs)
       // the stats manifest is deliberately NOT carried: a manifest is a
       // COMPLETE file list (absent file = pruned away), and files appended
       // under later specs would be absent — skipping resumes when the
       // migrating OPTIMIZE rebuilds it
-      if (cdcKeys(root).nonEmpty) // a spec change is not a row change
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schema.add(ChangeTypeCol, org.apache.spark.sql.types.StringType))
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      if (tryCommit(root, base.version, dir.toString)) {
-        // current WRITE spec: root-level config, like init's. Written
-        // after the CAS win; appends derive their layout from the
-        // committed sidecar, so a crash here costs nothing but a stale
-        // partitionCols() listing (healed by the next alter/clone)
+      writeChanges(root, dir, noChanges(spark, schema)) // not a row change
+      // current WRITE spec: root-level config, like init's. Written after
+      // the CAS win; appends derive their layout from the committed
+      // sidecar, so a crash here costs nothing but a stale partitionCols()
+      // listing (healed by the next alter/clone)
+      Staged(dir, onWin = _ =>
         if (newCols.nonEmpty)
           Files.writeString(partitionsFile(root), newCols.mkString(","))
-        else Files.deleteIfExists(partitionsFile(root))
-        return Snapshot(base.version + 1, dir.toString)
-      }
-      attempt += 1 // lost the race: orphaned link dir is cleanOrphans food
+        else Files.deleteIfExists(partitionsFile(root)))
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
-  }
 
   /** Table-level CHECK constraints (name → boolean predicate SQL), the
     * public Delta CHECK-constraint contract: EVERY commit to the table —
@@ -385,15 +365,13 @@ object SnapshotStore {
     // survives partitioned writes (partial COW carries it by nested
     // relative path)
     Files.createDirectories(commitsDir(root))
-    // cluster the initial load by its partition columns (REBALANCE: AQE
-    // coalesces slivers AND splits hot values — §2.5): the user's df
-    // arrives with arbitrary partitioning, and an unclustered partitionBy
-    // write of the table's BIGGEST write (the initial load) would fan
-    // tasks × dirs sliver files. stage() itself stays shuffle-free —
-    // OPTIMIZE routes pre-shaped (range/zorder) frames through it.
-    val dfClustered =
-      if (partitionBy.nonEmpty) df.hint("rebalance", partitionBy: _*) else df
-    val dir = stage(root, dfClustered, partitionBy)
+    // clustered by its partition columns (REBALANCE: AQE coalesces slivers
+    // AND splits hot values — §2.5): the user's df arrives with arbitrary
+    // partitioning, and an unclustered partitionBy write of the table's
+    // BIGGEST write (the initial load) would fan tasks × dirs sliver files
+    val dir = writeStaged(root, Some(df), partitionBy)._1
+    // v0 pins its schema like every later version (see [[transactImpl]])
+    Files.writeString(Paths.get(dir, "_schema.json"), df.schema.json)
     if (statsCols.nonEmpty) writeManifest(spark, dir, statsCols)
     if (cdcKeys.nonEmpty && !linkInsertChanges(Paths.get(dir))) {
       // partitioned layout (or zero staged files): the linked-frame
@@ -722,8 +700,8 @@ object SnapshotStore {
 
   private def stampGuard(root: String, txns: Seq[Txn],
       pinCheck: () => Boolean): Boolean = {
-    // every data-staging commit funnels through this guard (the metadata
-    // alterSchema loop does not — ALTERs stay legal from any zone)
+    // every data-staging commit funnels through this guard (the unguarded
+    // commits of [[commitLoop]] do not — ALTERs stay legal from any zone)
     requireWriterTz(root)
     if (txns.nonEmpty) {
       val marks = lastTxnVersions(root, txns.map(_.appId).toSet)
@@ -1054,10 +1032,7 @@ object SnapshotStore {
         org.apache.spark.sql.types.StructType,
       maxAttempts: Int = 10,
       renames: Map[String, String] = Map.empty): Snapshot = {
-    import org.apache.spark.sql.types.StructType
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root)
+    commitLoop(root, maxAttempts, guarded = false) { base =>
       val baseSchema = readSchema(spark, base)
       val evolved = evolve(baseSchema)
       val baseRen = readRenames(base.dataDir)
@@ -1137,44 +1112,31 @@ object SnapshotStore {
       require(lostSpec.isEmpty,
         s"cannot drop/rename partition-spec column(s) " +
           s"${lostSpec.mkString(", ")} of $root (directory layout)")
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      linkParquetTree(Paths.get(base.dataDir), dir)
-      Files.writeString(dir.resolve("_schema.json"), next.json)
-      writeRenames(dir.toString, ren)
-      carrySpecs(base.dataDir, dir.toString)
-      carryStateSidecars(base.dataDir, dir.toString)
-      if (cdcKeys(root).nonEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(next.fields :+ org.apache.spark.sql.types.StructField(
-            ChangeTypeCol, org.apache.spark.sql.types.StringType)))
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      if (tryCommit(root, base.version, dir.toString)) {
-        if (renames.nonEmpty) {
-          // the append-only FEED rename log ([[feedRenames]]): unlike the
-          // per-snapshot `_renames.tsv`, this survives healing rewrites —
-          // old change frames keep their written names forever
-          val lines = renames.map { case (nw, old) =>
-            s"${base.version + 1}\t$old\t$nw" }.mkString("", "\n", "\n")
-          Files.writeString(feedRenamesFile(root), lines,
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-          // a renamed CDC KEY column remaps the root-level _cdc config —
-          // written after the CAS win, like partitionsFile in
-          // alterPartitionSpec (the narrow crash window costs a failed
-          // diff on the NEXT transact, never a wrong feed)
-          val keys = cdcKeys(root)
-          val mapped = keys.map(k =>
-            renames.find(_._2.equalsIgnoreCase(k)).map(_._1).getOrElse(k))
-          if (mapped != keys)
-            Files.writeString(cdcConfigFile(root), mapped.mkString(","))
-        }
-        return Snapshot(base.version + 1, dir.toString)
-      }
-      attempt += 1 // lost the race: the orphaned link dir is cleanOrphans food
+      val dir = freshDir(root)
+      linkParquetTree(base.dataDir, dir)
+      carryTableState(base.dataDir, dir, Some(next))
+      writeRenames(dir, ren) // the evolved mapping replaces the carried one
+      writeChanges(root, dir, noChanges(spark, next))
+      Staged(dir, onWin = v => if (renames.nonEmpty) {
+        // the append-only FEED rename log ([[feedRenames]]): unlike the
+        // per-snapshot `_renames.tsv`, this survives healing rewrites —
+        // old change frames keep their written names forever
+        val lines = renames.map { case (nw, old) =>
+          s"$v\t$old\t$nw" }.mkString("", "\n", "\n")
+        Files.writeString(feedRenamesFile(root), lines,
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.APPEND)
+        // a renamed CDC KEY column remaps the root-level _cdc config —
+        // written after the CAS win, like partitionsFile in
+        // alterPartitionSpec (the narrow crash window costs a failed
+        // diff on the NEXT transact, never a wrong feed)
+        val keys = cdcKeys(root)
+        val mapped = keys.map(k =>
+          renames.find(_._2.equalsIgnoreCase(k)).map(_._1).getOrElse(k))
+        if (mapped != keys)
+          Files.writeString(cdcConfigFile(root), mapped.mkString(","))
+      })
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times altering $root")
   }
 
   /** Every column any era's directory LAYOUT depends on: the current
@@ -1395,78 +1357,67 @@ object SnapshotStore {
     */
   def restore(spark: SparkSession, root: String, toVersion: Long,
       maxAttempts: Int = 10): Snapshot = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val target = at(root, toVersion)
     require(Files.exists(Paths.get(target.dataDir)),
       s"version $toVersion of $root was vacuumed; cannot restore")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root)
-      if (base.version == toVersion) return base // restore to head: no-op
-      val restored = read(spark, target)
-      enforceConstraints(restored,
-        tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      linkParquetTree(Paths.get(target.dataDir), dir)
-      val sj = Paths.get(target.dataDir, "_schema.json")
-      if (Files.exists(sj)) Files.copy(sj, dir.resolve("_schema.json"))
-      // the partition spec travels WITH the snapshot: restoring to a
-      // pre-evolution version must also restore the write-side spec, or
-      // the next append would lay out rows by a spec the restored
-      // snapshot never had
-      carrySpecs(target.dataDir, dir.toString)
-      val effectiveSpec = readSpecs(target.dataDir) match {
-        case s if s.nonEmpty => Some(s.last._2)
-        case _ =>
-          // sidecar-less target WITH files: its PHYSICAL layout is the
-          // truth — the current head's sidecar is NOT (after
-          // evolve→heal→re-evolve, the head sidecar's first spec is the
-          // HEAL-time layout, which the target may predate). An EMPTY
-          // target has no physical truth; the best record is the head
-          // sidecar's ORIGINAL spec (exact for a plain pending
-          // evolution; after a heal the original is unrecorded and the
-          // declared spec stands)
-          if (hasDataFiles(target.dataDir)) {
-            val phys = layoutCols(target.dataDir)
-            if (phys.map(_.toLowerCase) !=
-                partitionCols(root).map(_.toLowerCase)) Some(phys) else None
-          } else readSpecs(base.dataDir) match {
-            case s if s.nonEmpty => Some(s.head._2)
-            case _ => None
-          }
-      }
-      // identity high-water mark rolls back WITH the data (self-consistent
-      // restore semantics; ids re-allocated after the restore can repeat
-      // values that exist only in the undone, still-time-travelable
-      // versions)
-      carryStateSidecars(target.dataDir, dir.toString)
-      carryRenames(target.dataDir, dir.toString)
-      val keys = cdcKeys(root)
-      if (keys.nonEmpty) {
-        // feed schema = the RESTORED version's columns (the table's schema
-        // from this commit on); a column the head grew and the restore
-        // removes simply leaves the feed — consumers track live schema
-        val cols = restored.columns.toIndexedSeq
-        val head = read(spark, base)
-        val headAligned = head.select(cols.map(c =>
-          (if (head.columns.contains(c)) col(c)
-           else lit(null).cast(restored.schema(c).dataType)).as(c)): _*)
-        diffChanges(headAligned, restored, keys)
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      }
-      if (tryCommit(root, base.version, dir.toString)) {
-        effectiveSpec.foreach { cols =>
+    commitLoop(root, maxAttempts, guarded = false) { base =>
+      if (base.version == toVersion) Settled(base) // restore to head: no-op
+      else {
+        val restored = read(spark, target)
+        // one pass of the restored rows through the CHECK constraints, as
+        // observed metrics of a sink-less write
+        if (tableConstraints(root).nonEmpty)
+          checkedWrite(root, restored)(
+            _.write.format("noop").mode("overwrite").save())
+        val dir = freshDir(root)
+        linkParquetTree(target.dataDir, dir)
+        // the pinned schema, the partition spec, the rename mapping and the
+        // identity high-water mark all travel WITH the snapshot: restoring
+        // to a pre-evolution version must also restore the write-side spec
+        // (or the next append would lay out rows by a spec the restored
+        // snapshot never had), and the identity mark rolls back with the
+        // data (ids re-allocated after the restore can repeat values that
+        // exist only in the undone, still-time-travelable versions)
+        carryTableState(target.dataDir, dir)
+        val effectiveSpec = readSpecs(target.dataDir) match {
+          case s if s.nonEmpty => Some(s.last._2)
+          case _ =>
+            // sidecar-less target WITH files: its PHYSICAL layout is the
+            // truth — the current head's sidecar is NOT (after
+            // evolve→heal→re-evolve, the head sidecar's first spec is the
+            // HEAL-time layout, which the target may predate). An EMPTY
+            // target has no physical truth; the best record is the head
+            // sidecar's ORIGINAL spec (exact for a plain pending
+            // evolution; after a heal the original is unrecorded and the
+            // declared spec stands)
+            if (hasDataFiles(target.dataDir)) {
+              val phys = layoutCols(target.dataDir)
+              if (phys.map(_.toLowerCase) !=
+                  partitionCols(root).map(_.toLowerCase)) Some(phys) else None
+            } else readSpecs(base.dataDir) match {
+              case s if s.nonEmpty => Some(s.head._2)
+              case _ => None
+            }
+        }
+        writeChanges(root, dir, {
+          // feed schema = the RESTORED version's columns (the table's schema
+          // from this commit on); a column the head grew and the restore
+          // removes simply leaves the feed — consumers track live schema
+          val cols = restored.columns.toIndexedSeq
+          val head = read(spark, base)
+          val headAligned = head.select(cols.map(c =>
+            (if (head.columns.contains(c)) col(c)
+             else lit(null).cast(restored.schema(c).dataType)).as(c)): _*)
+          diffChanges(headAligned, restored, cdcKeys(root))
+        })
+        Staged(dir, onWin = _ => effectiveSpec.foreach { cols =>
           if (cols.nonEmpty)
             Files.writeString(partitionsFile(root), cols.mkString(","))
           else Files.deleteIfExists(partitionsFile(root))
-        }
-        return Snapshot(base.version + 1, dir.toString)
+        })
       }
-      attempt += 1 // lost the race: the orphaned link dir is cleanOrphans food
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times restoring $root")
   }
 
   /** SHALLOW CLONE: create a NEW independent table whose v0 is the
@@ -1487,22 +1438,19 @@ object SnapshotStore {
       listDir(commitsDir(dstRoot)).isEmpty,
       s"clone target $dstRoot already exists")
     Files.createDirectories(commitsDir(dstRoot))
-    val dir = Paths.get(dstRoot, "data", UUID.randomUUID().toString)
-    Files.createDirectories(dir)
-    linkParquetTree(Paths.get(src.dataDir), dir)
-    val sj = Paths.get(src.dataDir, "_schema.json")
-    if (Files.exists(sj)) Files.copy(sj, dir.resolve("_schema.json"))
-    carrySpecs(src.dataDir, dir.toString) // spec history travels too
-    carryStateSidecars(src.dataDir, dir.toString) // clone continues numbering
-    carryRenames(src.dataDir, dir.toString)
+    val dir = freshDir(dstRoot)
+    linkParquetTree(src.dataDir, dir)
+    // schema, spec history and renames travel; the clone continues identity
+    // numbering
+    carryTableState(src.dataDir, dir)
     val keys = cdcKeys(srcRoot)
-    if (keys.nonEmpty && !linkInsertChanges(dir))
+    if (keys.nonEmpty && !linkInsertChanges(Paths.get(dir)))
       // non-flat clone (partition/spec subtrees, a _dv sidecar whose
       // deleted positions must not enter the feed, renamed physical
       // names): materialize the resolved read the legacy way
-      readDir(spark, dir.toString).withColumn(ChangeTypeCol, lit("insert"))
+      readDir(spark, dir).withColumn(ChangeTypeCol, lit("insert"))
         .write.mode("overwrite").parquet(s"$dir/_changes")
-    if (!tryCommit(dstRoot, expectedCurrent = -1L, dir.toString))
+    if (!tryCommit(dstRoot, expectedCurrent = -1L, dir))
       throw new CommitConflictException(s"clone target $dstRoot already initialized")
     // config markers land only after the v0 commit is won (same race rule
     // as init)
@@ -1511,7 +1459,7 @@ object SnapshotStore {
       Files.copy(constraintsFile(srcRoot), constraintsFile(dstRoot))
     if (Files.exists(partitionsFile(srcRoot)))
       Files.copy(partitionsFile(srcRoot), partitionsFile(dstRoot))
-    Snapshot(0L, dir.toString)
+    Snapshot(0L, dir)
   }
 
   // ---- WRITE-AUDIT-PUBLISH branches ----------------------------------------
@@ -1615,14 +1563,9 @@ object SnapshotStore {
     if (head.version == 0L) return cur
     if (cur.version != baseV)
       return rebasePublish(spark, root, name, br, baseV, head, cur)
-    val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-    Files.createDirectories(dir)
-    linkParquetTree(Paths.get(head.dataDir), dir)
-    val sj = Paths.get(head.dataDir, "_schema.json")
-    if (Files.exists(sj)) Files.copy(sj, dir.resolve("_schema.json"))
-    carrySpecs(head.dataDir, dir.toString)
-    carryStateSidecars(head.dataDir, dir.toString)
-    carryRenames(head.dataDir, dir.toString)
+    val dir = freshDir(root)
+    linkParquetTree(head.dataDir, dir)
+    carryTableState(head.dataDir, dir)
     // the branch's own feed-rename history (a fork starts with an empty
     // log, so every entry is branch-staged): the squash diff must align
     // a column RENAMED on the branch onto its old values in the source
@@ -1647,7 +1590,7 @@ object SnapshotStore {
       // pads for genuinely-new columns, the restore rule; rename-chain
       // resolution for renamed ones) before the squash diff
       import org.apache.spark.sql.functions.{col, lit}
-      val published = readDir(spark, dir.toString)
+      val published = readDir(spark, dir)
       val curDf = read(spark, cur)
       val curAligned = curDf.select(published.columns.toIndexedSeq.map { c =>
         val atBase = nameAtForkBase(c)
@@ -1657,7 +1600,7 @@ object SnapshotStore {
       diffChanges(curAligned, published, keys)
         .write.mode("overwrite").parquet(s"$dir/_changes")
     }
-    if (!tryCommit(root, cur.version, dir.toString))
+    if (!tryCommit(root, cur.version, dir))
       throw new CommitConflictException(
         s"$root advanced while publishing branch '$name'; re-fork")
     // config markers staged on the branch follow the publish — written
@@ -1687,7 +1630,7 @@ object SnapshotStore {
       if (keys.nonEmpty && keys != cdcKeys(root))
         Files.writeString(cdcConfigFile(root), keys.mkString(","))
     }
-    Snapshot(cur.version + 1, dir.toString)
+    Snapshot(cur.version + 1, dir)
   }
 
   /** FAST-FORWARD / REBASE publish (the Iceberg cherry-pick answer to
@@ -2010,10 +1953,6 @@ object SnapshotStore {
     all.foreach(Files.deleteIfExists(_))
   }
 
-  /** One aggregate job validating `out` against every named CHECK
-    * constraint; throws [[ConstraintViolationException]] with per-name
-    * counts. Shared by every commit path (transact / restore).
-    */
   /** Constraint metrics FUSED into the staged write (one job, many
     * metrics): attach a CollectMetrics node to `out` and return the
     * observed frame plus a `check` thunk. The caller writes the observed
@@ -2068,24 +2007,21 @@ object SnapshotStore {
     try walkDeepestFirst(Paths.get(dir)).foreach(Files.deleteIfExists(_))
     catch { case _: Exception => () }
 
-  private def enforceConstraints(out: DataFrame,
-      allConstraints: Seq[(String, org.apache.spark.sql.Column)]): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, count, lit, sum, when}
-    if (allConstraints.nonEmpty) {
-      val aggs = allConstraints.map { case (name, c) =>
-        // coalesce: sum over an EMPTY output is null, and an empty
-        // snapshot trivially satisfies every row constraint
-        coalesce(sum(when(!c, lit(1L)).otherwise(lit(0L))), lit(0L)).as(name)
-      }
-      val row = out.agg(count(lit(1)).as("_n"), aggs: _*).head()
-      val bad = allConstraints.zipWithIndex.collect {
-        case ((name, _), i) if row.getLong(i + 1) > 0 =>
-          s"$name (${row.getLong(i + 1)} rows)"
-      }
-      if (bad.nonEmpty)
-        throw new ConstraintViolationException(
-          s"commit rejected, constraints violated: ${bad.mkString(", ")}")
-    }
+  /** The one constraint checker: runs `write` (the frame's one action)
+    * over `out` with the caller's constraints plus the table's own CHECK
+    * constraints observed in the same job, then throws on any violation,
+    * after `onViolation` cleans up. Staged writes go through it
+    * ([[writeStaged]]), and so does RESTORE's sink-less pass over the
+    * restored rows.
+    */
+  private def checkedWrite(root: String, out: DataFrame,
+      constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil,
+      onViolation: () => Unit = () => ())(write: DataFrame => Unit): Unit = {
+    import org.apache.spark.sql.functions.expr
+    val (observed, check) = constraintsObserved(out, constraints ++
+      tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
+    write(observed)
+    try check() catch { case e: Throwable => onViolation(); throw e }
   }
 
   /** Append (or whole-table replace, `overwrite`) through the commit
@@ -2104,7 +2040,7 @@ object SnapshotStore {
   /** The next unallocated identity value: the `_identity.json` sidecar of
     * the current snapshot's dir, `start` if none was ever written. The
     * sidecar is SNAPSHOT STATE — it rides commits like `_schema.json`
-    * (carried forward by [[carryStateSidecars]] through DML/OPTIMIZE,
+    * (carried forward by [[carryTableState]] through DML/OPTIMIZE,
     * linked by RESTORE/CLONE), so the high-water mark is versioned with
     * the data and protected by the same commit CAS: a writer that read a
     * stale mark loses the CAS and reassigns on rebase.
@@ -2113,46 +2049,6 @@ object SnapshotStore {
     val f = identityFile(latest(root).dataDir)
     if (Files.exists(f)) Files.readString(f).replaceAll("[^0-9-]", "").toLong
     else start
-  }
-
-  /** Carry per-table STATE sidecars (currently the identity high-water
-    * mark) from the base snapshot into a freshly staged dir, unless the
-    * stager already wrote a newer one. Without this, any DML/OPTIMIZE
-    * commit would silently reset identity allocation.
-    */
-  private def carryStateSidecars(baseDir: String, dir: String): Unit = {
-    val src = identityFile(baseDir)
-    if (Files.exists(src) && !Files.exists(identityFile(dir)))
-      Files.copy(src, identityFile(dir))
-  }
-
-  /** Re-attach FIELD METADATA (identity specs, column DEFAULTs) that a
-    * transform's projections dropped: `expr.cast(t).as(name)` aliases
-    * carry `Metadata.empty`, so any rewriting commit (INSERT OVERWRITE,
-    * UPDATE, MERGE, OPTIMIZE) would otherwise strip the table's identity/
-    * default contract from the pinned `_schema.json` — and every later
-    * INSERT would silently stop assigning/filling. Metadata is TABLE
-    * configuration: it survives any data transform, and only alterSchema
-    * changes it — so merge the base's per-column metadata into the staged
-    * schema wherever the staged copy came back empty.
-    */
-  private def carryFieldMetadata(spark: SparkSession, base: Snapshot,
-      dir: String): Unit = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val f = Paths.get(dir, "_schema.json")
-    if (!Files.exists(f)) return
-    val baseSchema = readSchema(spark, base)
-    val staged = DataType.fromJson(Files.readString(f)).asInstanceOf[StructType]
-    val merged = StructType(staged.fields.map { sf =>
-      if (sf.metadata != org.apache.spark.sql.types.Metadata.empty) sf
-      else baseSchema.fields.find(_.name.equalsIgnoreCase(sf.name)) match {
-        case Some(bf) if bf.metadata !=
-          org.apache.spark.sql.types.Metadata.empty =>
-          sf.copy(metadata = bf.metadata)
-        case _ => sf
-      }
-    })
-    if (merged != staged) Files.writeString(f, merged.json)
   }
 
   /** Append with distributed identity assignment — the engine path behind
@@ -2248,45 +2144,10 @@ object SnapshotStore {
           columnFor(f, have(f.name.toLowerCase)).cast(f.dataType).as(f.name)
         } match { case cols => assigned.select(cols: _*) }
       }
-      // appends stage O(batch): fresh files + hard links (identity marks
-      // ride the staged hook either way); only overwrite rewrites
-      if (overwrite)
-        transact(spark, root, maxAttempts, txn = txn, stagedHook = hook,
-          extraTxns = extraTxns, pinCheck = pinCheck,
-          onReplay = onReplay)(assignInto)
-      else {
-        // layout routing, same shape as [[append]]: spanning snapshots
-        // stage the batch under the current spec, partitioned tables take
-        // the link-everything-write-only-the-batch partial staging, flat
-        // tables the linked append — assignment itself is layout-agnostic
-        // and the high-water sidecar rides the staged hook on all three.
-        // An evolve landing mid-append re-routes, like append().
-        def route(): Snapshot =
-          if (spansSpecs(root))
-            transactAppendEvolved(spark, root, maxAttempts, txn,
-              extraTxns, pinCheck, onReplay, hook)(assignInto)
-          else if (partitionCols(root).nonEmpty)
-            transactPartialWithChanges(spark, root, maxAttempts, txn = txn,
-              extraTxns = extraTxns, pinCheck = pinCheck,
-              onReplay = onReplay, stagedHook = hook)(
-              _.limit(0))( // an append touches no existing partition's rows
-              touched => {
-                val a = assignInto(touched)
-                (a, a.withColumn(ChangeTypeCol, lit("insert")))
-              })
-          else transactAppendFiles(spark, root, maxAttempts, txn, hook,
-            extraTxns, pinCheck, onReplay)(assignInto)
-        var reroutes = 0
-        while (true) {
-          try return route()
-          catch {
-            case e: LayoutChangedException =>
-              reroutes += 1
-              if (reroutes > 3) throw e // a flapping layout is not a race
-          }
-        }
-        sys.error("unreachable")
-      }
+      // assignment is layout-agnostic; the high-water sidecar rides the
+      // staged hook on every route
+      routeWrite(spark, root, overwrite, maxAttempts, txn, extraTxns,
+        pinCheck, onReplay, hook)(assignInto)
     } finally cached.foreach(_.unpersist())
   }
 
@@ -2310,164 +2171,6 @@ object SnapshotStore {
     else if (f.metadata.contains("CURRENT_DEFAULT"))
       expr(f.metadata.getString("CURRENT_DEFAULT"))
     else lit(null)
-  }
-
-  /** O(batch) append staging for UNpartitioned tables — the same
-    * link-plus-fresh-files shape [[transactMoR]] uses: the new version's
-    * dir hard-links every base data file (metadata-only; `_dv` deletion
-    * state travels as table state) and writes ONLY the appended rows as
-    * fresh files. Without this, an unpartitioned append pays a full table
-    * rewrite per batch — O(table × batches) under streaming ingest, a
-    * scale-killer the partitioned path never had. CHECK constraints
-    * validate the APPENDED rows only (linked rows were validated by the
-    * commits that wrote them — the partial-copy-on-write rule); on CDC
-    * tables the change set is exactly the appended rows as `insert`s
-    * (universally true for an append). The accreted small files are
-    * OPTIMIZE's job to re-pack, as on any table format.
-    */
-  private def transactAppendFiles(spark: SparkSession, root: String,
-      maxAttempts: Int, txn: Option[Txn],
-      stagedHook: String => Unit = _ => (), extraTxns: Seq[Txn] = Nil,
-      pinCheck: () => Boolean = () => true,
-      onReplay: () => Unit = () => ())(
-      newRows: DataFrame => DataFrame): Snapshot = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    val txns = txn.toSeq ++ extraTxns
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root) // pin BEFORE the guard — see stampGuard
-      if (stampGuard(root, txns, pinCheck)) { onReplay(); return base }
-      if (isEvolved(base.dataDir))
-        throw new LayoutChangedException(
-          s"$root evolved its partition spec mid-append; re-route onto " +
-            "the spanning-layout path")
-      val rows0 = newRows(read(spark, base))
-      val (rows, checkConstraints) = constraintsObserved(rows0,
-        tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      rows.write.mode("append").parquet(dir.toString)
-      try checkConstraints()
-      catch { case e: Throwable => dropStagedDir(dir.toString); throw e }
-      val appendedFiles = { // the new batch's files, BEFORE links arrive
-        val s = Files.list(dir)
-        try s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq
-        finally s.close()
-      }
-      linkParquetTree(Paths.get(base.dataDir), dir)
-      Files.writeString(dir.resolve("_schema.json"),
-        readSchema(spark, base).json)
-      // file-skipping stays live across appends: manifest rows for the
-      // linked files carry over, the new batch's files get their own —
-      // O(batch), like the staging itself
-      carryManifestLinked(spark, base.dataDir, dir.toString, appendedFiles)
-      stagedHook(dir.toString)
-      carryStateSidecars(base.dataDir, dir.toString)
-      carryRenames(base.dataDir, dir.toString)
-      if (cdcKeys(root).nonEmpty) {
-        // change frame = the new batch's staged files, HARD-LINKED (see
-        // [[linkInsertChanges]]), never by re-executing the batch
-        // transform: the data write above already materialized the rows,
-        // so re-running `rows` re-paid the caller's whole upstream plan
-        // once more per append — and a non-deterministic batch would have
-        // written DIFFERENT rows to the feed than to the data. Appends of
-        // ZERO files still need a (schema-correct, empty) frame, which
-        // rows.limit(0) provides without executing the upstream plan.
-        if (appendedFiles.nonEmpty)
-          linkInsertChangeFiles(dir, appendedFiles.map(Paths.get(_)))
-        else rows0.limit(0).withColumn(ChangeTypeCol, lit("insert"))
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      }
-      if (tryCommit(root, base.version, dir.toString, txns))
-        return Snapshot(base.version + 1, dir.toString)
-      attempt += 1 // lost the race: orphaned dir is cleanOrphans food
-    }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
-  }
-
-  /** O(batch) append onto a snapshot that SPANS partition specs: the new
-    * version hard-links every base file (old layouts ride untouched) and
-    * writes ONLY the batch under the CURRENT spec's `_spec<i>/` subtree,
-    * laid out by that spec's columns. Same optimistic-commit + stamp
-    * semantics as [[transactAppendFiles]]; the specs sidecar carries so
-    * reads keep planning per spec.
-    */
-  private def transactAppendEvolved(spark: SparkSession, root: String,
-      maxAttempts: Int, txn: Option[Txn], extraTxns: Seq[Txn] = Nil,
-      pinCheck: () => Boolean = () => true,
-      onReplay: () => Unit = () => (),
-      stagedHook: String => Unit = _ => ())(
-      newRows: DataFrame => DataFrame): Snapshot = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    val txns = txn.toSeq ++ extraTxns
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root) // pin BEFORE the guard — see stampGuard
-      if (stampGuard(root, txns, pinCheck)) { onReplay(); return base }
-      val specs = readSpecs(base.dataDir)
-      if (specs.isEmpty || specs.last._1 == ".")
-        throw new LayoutChangedException(
-          s"$root healed to a single partition spec mid-append; re-route " +
-            "onto the plain path")
-      val (sub, cols) = specs.last
-      val rows0 = newRows(read(spark, base))
-      val (rows, checkConstraints) = constraintsObserved(rows0,
-        tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      val tgt = s"$dir/$sub"
-      // co-locate each partition's rows BEFORE the partitioned write (the
-      // 4181/createJoin rule): a current spec like hours(ts) fans a month
-      // batch over ~700 dirs, and an unclustered write serializes them
-      // through however few tasks the upstream filter left (measured: ONE
-      // task, 1.6 s, on the q110b hours-era insert) while also writing
-      // tasks × dirs sliver files. The REBALANCE hint (not a plain
-      // repartition) keeps the one-file-per-dir goal BOUNDED instead of
-      // absolute: AQE still coalesces slivers, but a hot partition value
-      // larger than the advisory size is SPLIT across several writer
-      // tasks instead of serializing through one (guide §2.5 skew — the
-      // 100 TB single-writer hazard a bare hash-by-partition-cols has).
-      val clustered =
-        if (cols.nonEmpty) rows.hint("rebalance", cols: _*)
-        else rows
-      if (cols.nonEmpty)
-        clustered.write.mode("append").partitionBy(cols: _*).parquet(tgt)
-      else clustered.write.mode("append").parquet(tgt)
-      try checkConstraints()
-      catch { case e: Throwable => dropStagedDir(dir.toString); throw e }
-      val appendedFiles = { // the new batch's files, BEFORE links arrive
-        val w = Files.walk(Paths.get(tgt))
-        try w.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq
-        finally w.close()
-      }
-      linkParquetTree(Paths.get(base.dataDir), dir)
-      Files.writeString(dir.resolve("_schema.json"),
-        readSchema(spark, base).json)
-      stagedHook(dir.toString) // e.g. the identity high-water mark
-      carrySpecs(base.dataDir, dir.toString)
-      carryStateSidecars(base.dataDir, dir.toString)
-      carryRenames(base.dataDir, dir.toString)
-      if (cdcKeys(root).nonEmpty)
-        // change frame from the staged read-back (basePath materializes
-        // the partition columns from the dir names), never by
-        // re-executing the batch transform — the flat append's rule. The
-        // frame is WRITTEN (not hard-linked): partition values live only
-        // in directory names, which a flat linked frame cannot carry.
-        (if (appendedFiles.nonEmpty)
-          spark.read.schema(readSchema(spark, base)).option("basePath", tgt)
-            .parquet(appendedFiles: _*)
-        else rows0.limit(0))
-          .withColumn(ChangeTypeCol, lit("insert"))
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      if (tryCommit(root, base.version, dir.toString, txns))
-        return Snapshot(base.version + 1, dir.toString)
-      attempt += 1 // lost the race: orphaned dir is cleanOrphans food
-    }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
   }
 
   /** The generated columns of `schema` (STORED generation expressions in
@@ -2500,7 +2203,6 @@ object SnapshotStore {
       txn: Option[Txn] = None, extraTxns: Seq[Txn] = Nil,
       pinCheck: () => Boolean = () => true,
       onReplay: () => Unit = () => ()): Snapshot = {
-    import org.apache.spark.sql.functions.{col, lit}
     // identity tables assign ids on EVERY write path — a direct-API,
     // SqlDml, or streaming append must never pad the identity column with
     // NULL just because it skipped the catalog's insert surface
@@ -2534,108 +2236,68 @@ object SnapshotStore {
         columnFor(f, have(f.name.toLowerCase)).cast(f.dataType).as(f.name)
       } match { case cols => rows.select(cols: _*) }
     }
-    // a snapshot spanning partition specs (evolution pending migration):
-    // appends stage O(batch) under the CURRENT spec's subtree; a full
-    // overwrite rewrites in the current spec and HEALS the table back to
-    // single-spec (stage() drops the sidecar); partition-scoped overwrite
-    // has no cross-layout meaning — migrate first. The routing decision
-    // is re-validated per staging attempt (LayoutChangedException) and
-    // re-taken here, so a concurrent evolve/heal between the check and
-    // the commit can never land an append under the wrong layout.
+    routeWrite(spark, root, overwrite, maxAttempts, txn, extraTxns,
+      pinCheck, onReplay)(aligned)
+  }
+
+  /** The write router shared by [[append]] and [[appendWithIdentity]]
+    * (`rows` maps the base to the rows to write):
+    *   - an append stages O(batch) under the pinned base's current layout
+    *     ([[appendLinked]]);
+    *   - a dynamic partition overwrite (`partitionOverwriteMode=dynamic`
+    *     on a partitioned table, the standard Spark contract) replaces
+    *     ONLY the partitions present in the incoming data — literally
+    *     "rewrite touched partitions, hard-link the others", the
+    *     copy-on-write staging of partial DML. It has no cross-layout
+    *     meaning, so it refuses while a spec evolution is pending;
+    *   - any other overwrite rewrites the table in the current spec,
+    *     which also HEALS a spanning table back to single-spec.
+    * A partition-scoped attempt that finds the layout changed under it
+    * ([[LayoutChangedException]]) is re-routed against the new state.
+    */
+  private def routeWrite(spark: SparkSession, root: String,
+      overwrite: Boolean, maxAttempts: Int, txn: Option[Txn],
+      extraTxns: Seq[Txn], pinCheck: () => Boolean, onReplay: () => Unit,
+      stagedHook: String => Unit = _ => ())(
+      rows: DataFrame => DataFrame): Snapshot = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     def route(): Snapshot = {
-    if (isEvolved(latest(root).dataDir)) {
       val dynamic = overwrite &&
         spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
           .equalsIgnoreCase("dynamic")
-      require(!dynamic,
+      require(!dynamic || !isEvolved(latest(root).dataDir),
         s"dynamic partition overwrite on $root while a partition-spec " +
           "evolution is pending; OPTIMIZE (full rewrite) to migrate first")
-      return if (overwrite)
-        transact(spark, root, maxAttempts, txn = txn, extraTxns = extraTxns,
-          pinCheck = pinCheck)(base => aligned(base))
-      else transactAppendEvolved(spark, root, maxAttempts, txn,
-        extraTxns, pinCheck, onReplay) { base =>
-        val a = aligned(base)
-        val keys = cdcKeys(root)
-        if (keys.nonEmpty) {
-          val clash = a.join(base, keys, "left_semi").limit(1)
-          require(clash.isEmpty,
-            s"append to CDC table $root carries already-live key(s) " +
-              s"(${keys.mkString(", ")}) — use MERGE for upserts")
-        }
-        a
-      }
-    }
-    val dynamicOverwrite = overwrite && partitionCols(root).nonEmpty &&
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        .equalsIgnoreCase("dynamic")
-    if (dynamicOverwrite) {
-      // the standard Spark dynamic-partition-overwrite contract: replace
-      // ONLY the partitions present in the incoming data, keep the rest —
-      // here that is literally "rewrite touched partitions, hard-link the
-      // others", the same copy-on-write staging as partial DML
       val parts = partitionCols(root)
-      transactPartialWithChanges(spark, root, maxAttempts, txn = txn,
-          extraTxns = extraTxns, pinCheck = pinCheck) { base =>
-        import org.apache.spark.sql.functions.broadcast
-        val newVals = aligned(base).select(parts.map(col): _*).distinct()
-        val keys = cdcKeys(root)
-        if (keys.nonEmpty) {
-          // table-wide key uniqueness: an overwritten partition must not
-          // introduce a key living in a KEPT partition
-          val kept = base.join(broadcast(newVals), parts, "left_anti")
-          val clash = aligned(base).join(kept, keys, "left_semi").limit(1)
-          require(clash.isEmpty,
-            s"dynamic overwrite of $root carries key(s) " +
-              s"(${keys.mkString(", ")}) already live in a kept partition")
+      if (!overwrite)
+        appendLinked(spark, root, maxAttempts, txn.toSeq ++ extraTxns,
+          pinCheck, onReplay, stagedHook)(rows)
+      else if (dynamic && parts.nonEmpty)
+        transactPartialWithChanges(spark, root, maxAttempts, txn = txn,
+            extraTxns = extraTxns, pinCheck = pinCheck, onReplay = onReplay,
+            stagedHook = stagedHook) { base =>
+          val newVals = rows(base).select(parts.map(col): _*).distinct()
+          val keys = cdcKeys(root)
+          if (keys.nonEmpty) {
+            // table-wide key uniqueness: an overwritten partition must not
+            // introduce a key living in a KEPT partition
+            val kept = base.join(broadcast(newVals), parts, "left_anti")
+            val clash = rows(base).join(kept, keys, "left_semi").limit(1)
+            require(clash.isEmpty,
+              s"dynamic overwrite of $root carries key(s) " +
+                s"(${keys.mkString(", ")}) already live in a kept partition")
+          }
+          base.join(broadcast(newVals), parts, "left_semi")
+        } { old =>
+          val a = rows(old)
+          val keys = cdcKeys(root)
+          (a, if (keys.isEmpty) a.limit(0).withColumn(ChangeTypeCol, lit("insert"))
+            else diffChanges(old, a, keys))
         }
-        base.join(broadcast(newVals), parts, "left_semi")
-      } { old =>
-        val a = aligned(old)
-        val keys = cdcKeys(root)
-        val changes =
-          if (keys.isEmpty) a.limit(0).withColumn(ChangeTypeCol, lit("insert"))
-          else diffChanges(old, a, keys)
-        (a, changes)
-      }
-    }
-    else if (overwrite)
-      transact(spark, root, maxAttempts, txn = txn, extraTxns = extraTxns,
-        pinCheck = pinCheck)(base => aligned(base))
-    else if (partitionCols(root).nonEmpty)
-      // partitioned append is TRUE append: write only the new rows (their
-      // partition dirs merge with linked existing files), hard-link every
-      // existing file — O(appended data), never O(table)
-      transactPartialWithChanges(spark, root, maxAttempts, txn = txn,
-          extraTxns = extraTxns, pinCheck = pinCheck,
-          onReplay = onReplay) { base =>
-        val keys = cdcKeys(root)
-        if (keys.nonEmpty) {
-          val clash = aligned(base).join(base, keys, "left_semi").limit(1)
-          require(clash.isEmpty,
-            s"append to CDC table $root carries already-live key(s) " +
-              s"(${keys.mkString(", ")}) — use MERGE for upserts")
-        }
-        base.limit(0) // an append touches no existing partition's rows
-      } { touched =>
-        val a = aligned(touched) // schema-typed empty frame = the table shape
-        (a, a.withColumn(ChangeTypeCol, lit("insert")))
-      }
-    else if (cdcKeys(root).isEmpty)
-      transactAppendFiles(spark, root, maxAttempts, txn,
-        extraTxns = extraTxns, pinCheck = pinCheck,
-        onReplay = onReplay)(aligned)
-    else transactAppendFiles(spark, root, maxAttempts, txn,
-        extraTxns = extraTxns, pinCheck = pinCheck,
-        onReplay = onReplay) { base =>
-      val a = aligned(base)
-      val keys = cdcKeys(root)
-      val clash = a.join(base, keys, "left_semi").limit(1)
-      require(clash.isEmpty,
-        s"append to CDC table $root carries already-live key(s) " +
-          s"(${keys.mkString(", ")}) — use MERGE for upserts")
-      a
-    }
+      else
+        transactImpl(spark, root, maxAttempts, Nil, txn, Nil,
+          stagedHook = stagedHook, extraTxns = extraTxns, pinCheck = pinCheck,
+          onReplay = onReplay)(base => (rows(base), None))
     }
     var reroutes = 0
     while (true) {
@@ -2648,6 +2310,65 @@ object SnapshotStore {
     }
     sys.error("unreachable")
   }
+
+  /** O(batch) append: the new version's dir hard-links every base data
+    * file (metadata-only; `_dv` deletion state travels as table state)
+    * and writes ONLY the batch as fresh files, under the pinned base's
+    * current layout — flat, hive-partitioned (REBALANCE-clustered by the
+    * partition columns; the fresh files' `col=value/` dirs merge with the
+    * linked ones), or the newest `_spec<i>/` subtree of a snapshot
+    * spanning specs (old layouts ride untouched). The layout is read per
+    * attempt, so an evolve or heal landing mid-append only changes the
+    * retry's layout. Without this, an append pays a full table rewrite
+    * per batch — O(table × batches) under streaming ingest. CHECK
+    * constraints validate the APPENDED rows only (linked rows were
+    * validated by the commits that wrote them — the partial
+    * copy-on-write rule). On CDC tables the batch's keys must be fresh
+    * (one left-semi probe against the base: an `insert` change for a
+    * live key corrupts downstream apply) and the change set is exactly
+    * the appended rows as `insert`s. The accreted small files are
+    * OPTIMIZE's job to re-pack, as on any table format.
+    */
+  private def appendLinked(spark: SparkSession, root: String,
+      maxAttempts: Int, txns: Seq[Txn], pinCheck: () => Boolean,
+      onReplay: () => Unit, stagedHook: String => Unit)(
+      newRows: DataFrame => DataFrame): Snapshot =
+    commitLoop(root, maxAttempts, txns, pinCheck, onReplay) { base =>
+      import org.apache.spark.sql.functions.lit
+      val baseDf = read(spark, base)
+      val rows = newRows(baseDf)
+      val keys = cdcKeys(root)
+      if (keys.nonEmpty)
+        require(rows.join(baseDf, keys, "left_semi").limit(1).isEmpty,
+          s"append to CDC table $root carries already-live key(s) " +
+            s"(${keys.mkString(", ")}) — use MERGE for upserts")
+      val (sub, parts) = currentLayout(root, base)
+      val (dir, files) = writeStaged(root, Some(rows), parts, sub)
+      linkParquetTree(base.dataDir, dir)
+      stagedHook(dir) // e.g. the identity high-water mark
+      carryTableState(base.dataDir, dir, Some(readSchema(spark, base)))
+      // file-skipping stays live across appends: manifest rows for the
+      // linked files carry over, the new batch's files get their own —
+      // O(batch), like the staging itself
+      carryManifestLinked(spark, base.dataDir, dir, files)
+      // change frame = the batch's staged files, never a re-execution of
+      // the batch transform: the data write already materialized the rows
+      // (re-running them re-pays the caller's whole upstream plan, and a
+      // non-deterministic batch would write DIFFERENT rows to the feed).
+      // Flat files are HARD-LINKED (see [[linkInsertChanges]]); partition
+      // values live only in directory names, so a laid-out batch is
+      // written from its read-back, and ZERO files need a schema-correct
+      // empty frame, which rows.limit(0) gives without executing the plan
+      if (keys.nonEmpty && parts.isEmpty && sub == "." && files.nonEmpty)
+        linkInsertChangeFiles(Paths.get(dir), files.map(Paths.get(_)))
+      else writeChanges(root, dir,
+        (if (files.isEmpty) rows.limit(0)
+         else spark.read.schema(readSchema(spark, base))
+           .option("basePath", Paths.get(dir, sub).normalize.toString)
+           .parquet(files: _*))
+          .withColumn(ChangeTypeCol, lit("insert")))
+      Staged(dir)
+    }
 
   /** Latest version whose commit landed at or before `tsMicros` (epoch
     * microseconds) — the `TIMESTAMP AS OF` resolution rule, driven by
@@ -3166,9 +2887,6 @@ object SnapshotStore {
     (df, files.length, total)
   }
 
-  /** Distributed write of a candidate snapshot to a fresh immutable dir.
-    * Unreachable by readers until a commit file points at it.
-    */
   /** The staged frame's names/types with top-level field METADATA overlaid
     * from the table's current pinned schema. Read-back frames and aliased
     * transforms STRIP field metadata (the file source rebuilds
@@ -3183,45 +2901,13 @@ object SnapshotStore {
   private def mergePinnedMetadata(spark: SparkSession, root: String,
       written: org.apache.spark.sql.types.StructType):
       org.apache.spark.sql.types.StructType = {
-    // init's v0 staging has no prior commit — nothing to merge from
-    val baseMeta = (try Some(readSchema(spark, latest(root)))
-      catch { case _: IllegalStateException => None })
-      .map(_.fields.map(f => f.name.toLowerCase -> f.metadata).toMap)
-      .getOrElse(Map.empty[String, org.apache.spark.sql.types.Metadata])
+    val baseMeta = readSchema(spark, latest(root)).fields
+      .map(f => f.name.toLowerCase -> f.metadata).toMap
     org.apache.spark.sql.types.StructType(written.fields.map { f =>
       if (f.metadata == org.apache.spark.sql.types.Metadata.empty)
         f.copy(metadata = baseMeta.getOrElse(f.name.toLowerCase, f.metadata))
       else f
     })
-  }
-
-  private def stage(root: String, df: DataFrame): String =
-    stage(root, df, partitionCols(root))
-
-  /** Partition-aware staging. Partitioned snapshots also pin
-    * `_schema.json` (their COMMITTED column types and order): partition
-    * values live in directory names, and an inference-based read-back
-    * would both re-type them (e.g. a BIGINT partition rediscovered as
-    * INT) and reorder them to the end — the pinned schema keeps every
-    * reader, including the CDC staged-read-back diff, on the written
-    * types.
-    */
-  private def stage(root: String, df: DataFrame, parts: Seq[String]): String = {
-    val dir = Paths.get(root, "data", UUID.randomUUID().toString).toString
-    if (parts.nonEmpty) {
-      require(parts.forall(p => df.columns.exists(_.equalsIgnoreCase(p))),
-        s"partition columns $parts not all present in ${df.columns.toSeq}")
-      df.write.mode("overwrite").partitionBy(parts: _*).parquet(dir)
-    } else df.write.mode("overwrite").parquet(dir)
-    // EVERY staged version pins its schema, not just partitioned/ALTER
-    // dirs: field METADATA (column DEFAULT values, identity specs) does
-    // not survive parquet-footer inference, so a post-ALTER write that
-    // relied on inference would silently drop the table's defaults for
-    // every later INSERT. The written names/types pin as-is; metadata
-    // merges from the current pin (see [[mergePinnedMetadata]]).
-    Files.writeString(Paths.get(dir, "_schema.json"),
-      mergePinnedMetadata(df.sparkSession, root, df.schema).json)
-    dir
   }
 
   /** Read a staged/committed data dir honoring its pinned schema if any —
@@ -3518,19 +3204,9 @@ object SnapshotStore {
     if (ren.nonEmpty)
       Files.writeString(renamesFile(dir),
         ren.map { case (k, olds) => (k +: olds).mkString("\t") }.mkString("\n"))
+    else { Files.deleteIfExists(renamesFile(dir)); () }
 
   private def renamesFile(dir: String): Path = Paths.get(dir, "_renames.tsv")
-
-  /** Carry the rename mapping into a freshly staged dir that HARD-LINKS
-    * base files (append/restore/clone/MoR/partial-optimize): the linked
-    * files still carry physical pre-rename names. Full-rewrite paths must
-    * NOT call this — their staged files are born with logical names.
-    */
-  private def carryRenames(baseDir: String, dir: String): Unit = {
-    val src = renamesFile(baseDir)
-    if (Files.exists(src) && !Files.exists(renamesFile(dir)))
-      Files.copy(src, renamesFile(dir))
-  }
 
   /** Physical data files of a snapshot dir with size and parquet-footer
     * row counts — the `$files` metadata-table backing. Driver-side walk +
@@ -3637,10 +3313,6 @@ object SnapshotStore {
     }
   }
 
-  /** Hard-link every parquet file under `from` into `to`, preserving the
-    * (possibly hive-partitioned) directory layout — the metadata-only
-    * copy shared by ALTER / RESTORE / CLONE.
-    */
   /** All-inserts change frame by HARD LINK instead of a second full write
     * of the data (init / clone / append staged exactly the rows the feed
     * must carry, all typed `insert`). The linked files lack the
@@ -3688,8 +3360,16 @@ object SnapshotStore {
     files.foreach(f => Files.createLink(ch.resolve(f.getFileName), f))
   }
 
-  private def linkParquetTree(from: Path, to: Path,
-      withDv: Boolean = true): Unit = {
+  /** Hard-link every data file under `from` whose `from`-relative path
+    * passes `keep` into `to`, preserving the (possibly hive-partitioned
+    * or spec-spanning) directory layout — the metadata-only copy behind
+    * every staged write: all of the base for ALTER / RESTORE / CLONE /
+    * appends / MoR, the untouched files for partial DML and small-file
+    * compaction.
+    */
+  private def linkParquetTree(fromDir: String, toDir: String,
+      withDv: Boolean = true, keep: Path => Boolean = _ => true): Unit = {
+    val (from, to) = (Paths.get(fromDir), Paths.get(toDir))
     val s = Files.walk(from)
     try s.iterator().asScala
       .filter(f => Files.isRegularFile(f) &&
@@ -3699,10 +3379,11 @@ object SnapshotStore {
         // `_dv` deletion vector is the exception — it is TABLE STATE, not
         // commit metadata: dropping it on a metadata-only link (RESTORE /
         // CLONE / ALTER) would silently resurrect deleted rows.
-        // `withDv = false` is for [[transactMoR]], which writes its own
-        // merged vector instead.
-        val segs = from.relativize(f).iterator().asScala.map(_.toString).toSeq
-        (withDv && segs.head == "_dv") || isDataSegs(segs)
+        // `withDv = false` is for the paths that write their own pruned
+        // or merged vector instead (partial DML, [[transactMoR]]).
+        val rel = from.relativize(f)
+        val segs = rel.iterator().asScala.map(_.toString).toSeq
+        ((withDv && segs.head == "_dv") || isDataSegs(segs)) && keep(rel)
       })
       .foreach { f =>
         val dest = to.resolve(from.relativize(f))
@@ -3711,6 +3392,158 @@ object SnapshotStore {
       }
     finally s.close()
   }
+
+  // ---- the commit pipeline --------------------------------------------------
+  // Every staged write runs the same steps: pin the base, stage a fresh
+  // dir, write the data with its constraints observed, link the kept base
+  // files, carry table state, write the change frame, CAS, and retry on a
+  // lost race. [[commitLoop]] owns the pin, the stamp guard, the CAS and
+  // the retry; each path's attempt function owns only what differs.
+
+  /** What one staging attempt produced: a dir for the CAS plus the work
+    * that may run only after the CAS is won (root-level config, given the
+    * committed version), or a snapshot to return without committing.
+    */
+  private sealed trait Attempt
+  private final case class Staged(dir: String,
+      onWin: Long => Unit = _ => ()) extends Attempt
+  private final case class Settled(snap: Snapshot) extends Attempt
+
+  /** Test seam: fires in every commit attempt after staging, just before
+    * the CAS — the window a racing commit must land in to make the
+    * attempt lose (SqlDmlSpec and SnapshotStoreSpec drive deterministic
+    * interleaves through it).
+    */
+  private[graft] var commitTestHook: () => Unit = () => ()
+
+  /** The optimistic-commit loop behind every write path. Each attempt
+    * pins `latest(root)` BEFORE the stamp guard (see [[stampGuard]]),
+    * stages against that base, and CASes version base+1; a lost race
+    * re-runs `stage` against the winner's snapshot (the rebase) — so it
+    * MUST be a pure function of the base. A replayed stamp
+    * fires `onReplay` and returns the head unchanged. `guarded = false`
+    * is for commits that carry no stamps and write no generated
+    * partition values (ALTER, RESTORE, small-file compaction): they skip
+    * the guard's writer-zone check and stay legal from any session zone.
+    */
+  private def commitLoop(root: String, maxAttempts: Int,
+      txns: Seq[Txn] = Nil, pinCheck: () => Boolean = () => true,
+      onReplay: () => Unit = () => (), guarded: Boolean = true)(
+      stage: Snapshot => Attempt): Snapshot = {
+    var attempt = 0
+    while (attempt < maxAttempts) {
+      val base = latest(root)
+      if (guarded && stampGuard(root, txns, pinCheck)) { onReplay(); return base }
+      stage(base) match {
+        case Settled(snap) => return snap
+        case Staged(dir, onWin) =>
+          commitTestHook()
+          if (tryCommit(root, base.version, dir, txns)) {
+            onWin(base.version + 1)
+            return Snapshot(base.version + 1, dir)
+          }
+      }
+      attempt += 1 // lost the race: the orphaned dir is cleanOrphans food
+    }
+    throw new CommitConflictException(
+      s"lost the commit race $maxAttempts times at $root")
+  }
+
+  /** A fresh staging dir: unreachable by readers until a commit points
+    * at it.
+    */
+  private def freshDir(root: String): String =
+    Files.createDirectories(
+      Paths.get(root, "data", UUID.randomUUID().toString)).toString
+
+  /** The one staged data write: a fresh dir; `out` (when given) written
+    * with its constraints observed in the same job ([[checkedWrite]]),
+    * REBALANCE-clustered by `parts` when `rebalance`, laid out by
+    * `partitionBy(parts)` under the `sub` subtree (a `_spec<i>` era, or
+    * "." for the dir itself); a violation deletes the dir before it
+    * throws. Returns the dir and the freshly written files — listed
+    * before any base file is linked in.
+    *
+    * REBALANCE (not a plain repartition) co-locates each partition's rows
+    * before the fan-out write: an unclustered partitionBy write makes
+    * every task write a sliver into every dir (tasks × dirs files — on a
+    * high-cardinality layout like hours(ts), thousands), and a bare
+    * hash-by-partition-cols serializes a hot value through one writer.
+    * REBALANCE keeps the one-file-per-dir goal bounded: AQE coalesces
+    * slivers AND splits a hot value across writer tasks (guide §2.5
+    * skew). Callers whose frame is already shaped (OPTIMIZE's range/
+    * z-order repack, small-file compaction) pass `rebalance = false`.
+    */
+  private def writeStaged(root: String, out: Option[DataFrame],
+      parts: Seq[String] = Nil, sub: String = ".", rebalance: Boolean = true,
+      constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil):
+      (String, Seq[String]) = {
+    val dir = freshDir(root)
+    val tgt = Paths.get(dir, sub).normalize
+    out.foreach(df => checkedWrite(root, df, constraints,
+        () => dropStagedDir(dir)) { observed =>
+      val w = (if (rebalance && parts.nonEmpty)
+        observed.hint("rebalance", parts: _*) else observed).write.mode("append")
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tgt.toString)
+    })
+    val files =
+      if (!Files.isDirectory(tgt)) Nil
+      else {
+        val s = Files.walk(tgt)
+        try s.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".parquet")).toSeq
+        finally s.close()
+      }
+    (dir, files)
+  }
+
+  /** The layout new rows are written under: the newest spec's subtree and
+    * columns on a snapshot spanning specs, else the table's partition
+    * columns at the top level.
+    */
+  private def currentLayout(root: String, base: Snapshot): (String, Seq[String]) =
+    readSpecs(base.dataDir).lastOption.getOrElse((".", partitionCols(root)))
+
+  /** Carry the table state a staged dir inherits from snapshot dir `from`,
+    * each file only where the stager did not write its own: the pinned
+    * `_schema.json` (`schema`, when given, is pinned first), the identity
+    * high-water mark ([[identityNext]]) and — for dirs that hard-link
+    * `from`'s files (`linked`) — the specs sidecar and the rename mapping,
+    * which describe how to read those linked files. Without the carry, a
+    * DML/OPTIMIZE commit would silently reset identity allocation. Full
+    * rewrites pass `linked = false`: their files are born in the current
+    * spec under logical names, which heals both sidecars away.
+    */
+  private def carryTableState(from: String, dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      linked: Boolean = true): Unit = {
+    schema.foreach(s => Files.writeString(Paths.get(dir, "_schema.json"), s.json))
+    val carried: Seq[String => Path] = Seq((d: String) => Paths.get(d, "_schema.json"),
+      identityFile _) ++ (if (linked) Seq(specsFile _, renamesFile _) else Nil)
+    carried.foreach { f =>
+      if (Files.exists(f(from)) && !Files.exists(f(dir))) Files.copy(f(from), f(dir))
+    }
+  }
+
+  /** Write the commit's change frame under the staged dir — CDC tables
+    * only, so `changes` is never built on a table without a feed.
+    */
+  private def writeChanges(root: String, dir: String, changes: => DataFrame): Unit =
+    if (cdcKeys(root).nonEmpty) {
+      val ch = changes
+      require(ch.columns.contains(ChangeTypeCol),
+        s"supplied change frame lacks $ChangeTypeCol")
+      ch.write.mode("overwrite").parquet(s"$dir/_changes")
+    }
+
+  /** The empty change frame of a commit that changes no rows (ALTER,
+    * layout-only compaction): schema-correct, so feed reads span it.
+    */
+  private def noChanges(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      schema.add(ChangeTypeCol, org.apache.spark.sql.types.StringType))
 
   /** The CAS: own version expectedCurrent+1 iff nobody else does yet.
     * The pointer content is written to a temp file first, then published
@@ -3890,11 +3723,9 @@ object SnapshotStore {
     */
   def optimizeSmallFiles(spark: SparkSession, root: String, targetRows: Long,
       smallFileRows: Long, maxAttempts: Int = 10): Snapshot = {
-    import org.apache.spark.sql.functions.{col, concat, input_file_name, lit, substring_index}
+    import org.apache.spark.sql.functions.col
     val hive = partitionCols(root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root)
+    commitLoop(root, maxAttempts, guarded = false) { base =>
       require(!isEvolved(base.dataDir),
         s"optimizeSmallFiles on $root while a partition-spec evolution is " +
           "pending; run a full OPTIMIZE (it also migrates the layout)")
@@ -3915,55 +3746,38 @@ object SnapshotStore {
             case (groups, lone) => (groups.flatten.toSeq, lone.flatten.toSeq)
           }
       val kept = keptLarge ++ keptLone
-      if (small.size <= 1) return base // nothing to gain from a rewrite
-      val schema = readSchema(spark, base)
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      val smallPaths = small.map(f => s"${base.dataDir}/${f._1}")
-      val nSmall = small.map(_._3).sum
-      if (nSmall > 0) {
+      if (small.size <= 1) Settled(base) // nothing to gain from a rewrite
+      else {
+        val schema = readSchema(spark, base)
+        val smallPaths = small.map(f => s"${base.dataDir}/${f._1}")
+        val nSmall = small.map(_._3).sum
         val parts = math.max(1, ((nSmall + targetRows - 1) / targetRows).toInt)
-        if (hive.isEmpty)
-          spark.read.schema(schema).parquet(smallPaths: _*)
-            .repartition(parts).write.mode("append").parquet(dir.toString)
-        else
-          // one job for ALL fragmented partitions: basePath materializes
-          // each file's partition values from its directory; the range
-          // shuffle co-locates each partition's rows so file count stays
-          // O(fragmented partitions), never tasks × partitions
-          spark.read.schema(schema).option("basePath", base.dataDir)
-            .parquet(smallPaths: _*)
-            .repartitionByRange(parts, hive.map(col): _*)
-            .write.mode("append").partitionBy(hive: _*).parquet(dir.toString)
-      } // all-empty smalls: dropping them IS the compaction
-      val packedFiles = { // the freshly written files, BEFORE any link
-        val s = Files.walk(dir)
-        try s.iterator().asScala.filter(Files.isRegularFile(_))
-          .map(_.toString).filter(_.endsWith(".parquet")).toSeq
-        finally s.close()
+        // all-empty smalls: dropping them IS the compaction. Partitioned:
+        // one job for ALL fragmented partitions — basePath materializes
+        // each file's partition values from its directory, and the range
+        // shuffle co-locates each partition's rows so file count stays
+        // O(fragmented partitions), never tasks × partitions
+        val packed =
+          if (nSmall == 0) None
+          else if (hive.isEmpty)
+            Some(spark.read.schema(schema).parquet(smallPaths: _*)
+              .repartition(parts))
+          else Some(spark.read.schema(schema).option("basePath", base.dataDir)
+            .parquet(smallPaths: _*).repartitionByRange(parts, hive.map(col): _*))
+        val (dir, packedFiles) = writeStaged(root, packed, hive, rebalance = false)
+        val smallRel = small.map(_._1).toSet
+        linkParquetTree(base.dataDir, dir,
+          keep = rel => !smallRel(rel.toString))
+        carryTableState(base.dataDir, dir, Some(schema))
+        // layout-only: byte-identical data, EMPTY change set (the q88
+        // OPTIMIZE-silence contract)
+        writeChanges(root, dir, noChanges(spark, schema))
+        carryManifestLinked(spark, base.dataDir, dir, packedFiles,
+          keptRel = Some(kept.map(_._1).toSet),
+          bloomExpectedItems = math.max(targetRows, 1000L))
+        Staged(dir)
       }
-      kept.foreach { case (rel, _, _) =>
-        val dest = dir.resolve(rel)
-        Files.createDirectories(dest.getParent)
-        Files.createLink(dest, Paths.get(base.dataDir, rel))
-      }
-      Files.writeString(dir.resolve("_schema.json"), schema.json)
-      carryStateSidecars(base.dataDir, dir.toString)
-      // layout-only: byte-identical data, EMPTY change set (the q88
-      // OPTIMIZE-silence contract)
-      if (cdcKeys(root).nonEmpty)
-        readDir(spark, dir.toString).limit(0)
-          .withColumn(ChangeTypeCol, lit("insert"))
-          .write.mode("overwrite").parquet(s"$dir/_changes")
-      carryManifestLinked(spark, base.dataDir, dir.toString, packedFiles,
-        keptRel = Some(kept.map(_._1).toSet),
-        bloomExpectedItems = math.max(targetRows, 1000L))
-      if (tryCommit(root, base.version, dir.toString))
-        return Snapshot(base.version + 1, dir.toString)
-      attempt += 1 // lost the race: orphaned dir is cleanOrphans food
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
   }
 
   /** VACUUM: drop all but the newest `keepLast` versions and delete their
@@ -4217,7 +4031,7 @@ object SnapshotStore {
       stagedHook: String => Unit = _ => ())(
       matchedRows: DataFrame => DataFrame)(
       transform: DataFrame => (DataFrame, DataFrame)): Snapshot = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val parts = partitionCols(root)
     require(parts.nonEmpty || evolvedScoped,
       s"transactPartialWithChanges requires a partitioned table ($root)")
@@ -4226,22 +4040,16 @@ object SnapshotStore {
     // re-routing while DML callers surface it loudly — an entry require
     // would turn the route-then-evolve race into a user-facing abort on
     // the one path built to absorb it
-    val txns = txn.toSeq ++ extraTxns
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root) // pin BEFORE the guard — see stampGuard
-      if (stampGuard(root, txns, pinCheck)) { onReplay(); return base }
+    commitLoop(root, maxAttempts, txn.toSeq ++ extraTxns, pinCheck,
+        onReplay) { base =>
       if (isEvolved(base.dataDir)) {
         if (!evolvedScoped)
           throw new LayoutChangedException(
             s"$root spans partition specs (evolution pending); partition-" +
               "scoped operations have no meaning across two layouts — " +
               "OPTIMIZE (full rewrite) to migrate to the current spec first")
-        stagePartialEvolved(spark, root, base, txns, constraints,
-          matchedRows, transform, stagedHook) match {
-          case Some(s) => return s
-          case None => attempt += 1 // lost the race; retry against the head
-        }
+        Staged(stagePartialEvolved(spark, root, base, constraints,
+          matchedRows, transform, stagedHook))
       }
       else if (parts.isEmpty)
         // only reachable with evolvedScoped: a concurrent migration healed
@@ -4272,12 +4080,9 @@ object SnapshotStore {
             touchedValRows.map(_.get(0)).toIndexedSeq: _*))
         else baseDf.join(broadcast(touchedVals), parts, "left_semi")
       val (out, changes) = transform(rowsTouched)
-      val (outObs, checkConstraints) = constraintsObserved(out, constraints ++
-        tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
       // touched partition DIRS from the matched rows' own files — in the
       // URI-ENCODED relative form the lineage column carries, and decoded
-      // to on-disk names for the link-exclusion walk below
-      val basePath = Paths.get(base.dataDir).toAbsolutePath.normalize()
+      // to on-disk names for the link-exclusion below
       val rawTouched = matched.select(col(DvFileCol)).distinct()
         .collect().map(_.getString(0))
       val touchedDirsEnc = rawTouched.flatMap { rel =>
@@ -4287,57 +4092,24 @@ object SnapshotStore {
       val touchedDirs = touchedDirsEnc.map { enc =>
         Paths.get(java.net.URI.create("file:///" + enc)).toString.stripPrefix("/")
       }
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
-      // co-locate each partition's rows into one task BEFORE the
-      // partitioned write (the createJoin rule): without this, every task
-      // writes a sliver into every touched dir — on a high-cardinality
-      // layout (hours(ts): thousands of dirs) a plain append explodes
-      // into tasks × dirs files, which the next scan then pays for. The
-      // REBALANCE hint keeps that goal bounded: AQE splits a hot
-      // partition value across writers instead of one task (§2.5 skew).
-      outObs.hint("rebalance", parts: _*)
-        .write.mode("overwrite").partitionBy(parts: _*).parquet(dir.toString)
-      try checkConstraints()
-      catch { case e: Throwable => dropStagedDir(dir.toString); throw e }
-      val freshFiles = { // the rewritten partitions' files, BEFORE links
-        val w = Files.walk(dir)
-        try w.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSeq
-        finally w.close()
-      }
+      val (dir, freshFiles) = writeStaged(root, Some(out), parts,
+        constraints = constraints)
+      // link every untouched partition's files into the new version
+      linkParquetTree(base.dataDir, dir, withDv = false,
+        keep = rel => !touchedDirs(Option(rel.getParent).fold("")(_.toString)))
+      stagedHook(dir) // e.g. the identity high-water mark
       // names/types from the linked layout's read, metadata from the
       // base pin — the read-back strips it (see mergePinnedMetadata)
-      Files.writeString(dir.resolve("_schema.json"),
-        mergePinnedMetadata(spark, root, baseDf.schema).json)
-      stagedHook(dir.toString) // e.g. the identity high-water mark
-      carryStateSidecars(base.dataDir, dir.toString)
-      carryRenames(base.dataDir, dir.toString)
+      carryTableState(base.dataDir, dir,
+        Some(mergePinnedMetadata(spark, root, baseDf.schema)))
       // file-skipping continuity on partitioned tables: untouched files'
       // manifest rows carry path-rewritten (their relative layout is
       // link-preserved), touched partitions' rows drop and their fresh
       // files re-aggregate — O(manifest) + O(rewritten batch), so a
       // post-OPTIMIZE stats manifest survives appends and partial DML
       // instead of dying on the first write
-      carryManifestLinked(spark, base.dataDir, dir.toString, freshFiles,
+      carryManifestLinked(spark, base.dataDir, dir, freshFiles,
         dropDirs = touchedDirsEnc)
-      // link every untouched partition's files into the new version
-      val s = Files.walk(basePath)
-      try s.iterator().asScala
-        .filter(f => Files.isRegularFile(f) &&
-          f.getFileName.toString.endsWith(".parquet") &&
-          // skip snapshot-local metadata dirs (_changes/_manifest) and the
-          // rewritten partitions
-          !basePath.relativize(f).iterator().asScala.exists(
-            _.toString.startsWith("_")) &&
-          !touchedDirs.contains(
-            basePath.relativize(f.getParent).toString))
-        .foreach { f =>
-          val dest = dir.resolve(basePath.relativize(f))
-          Files.createDirectories(dest.getParent)
-          Files.createLink(dest, f)
-        }
-      finally s.close()
       if (hasDv(base.dataDir)) {
         // deletion-vector carry-forward: linked files keep their deleted
         // positions. Entries pointing into REWRITTEN partitions reference
@@ -4352,20 +4124,12 @@ object SnapshotStore {
           .isin(touchedDirsEnc.toSeq: _*))
         if (!kept.isEmpty)
           kept.coalesce(1).write.mode("overwrite")
-            .parquet(dvDir(dir.toString).toString)
+            .parquet(dvDir(dir).toString)
       }
-      if (cdcKeys(root).nonEmpty) {
-        require(changes.columns.contains(ChangeTypeCol),
-          s"supplied change frame lacks $ChangeTypeCol")
-        changes.write.mode("overwrite").parquet(s"$dir/_changes")
-      }
-      if (tryCommit(root, base.version, dir.toString, txns))
-        return Snapshot(base.version + 1, dir.toString)
-      attempt += 1 // lost the race: orphaned dir is cleanOrphans food
+      writeChanges(root, dir, changes)
+      Staged(dir)
       }
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
   }
 
   /** One staging attempt of PER-ERA scoped copy-on-write on a snapshot
@@ -4396,14 +4160,14 @@ object SnapshotStore {
     * their logical names (healed), and the sidecar carries forward for
     * the linked files that still store physical ones. Spanning snapshots
     * carry no stats manifest.
-    * Returns None on a lost CAS (caller retries against the new head).
+    * Returns the staged dir; the caller's commit loop owns the CAS.
     */
   private def stagePartialEvolved(spark: SparkSession, root: String,
-      base: Snapshot, txns: Seq[Txn],
+      base: Snapshot,
       constraints: Seq[(String, org.apache.spark.sql.Column)],
       matchedRows: DataFrame => DataFrame,
       transform: DataFrame => (DataFrame, DataFrame),
-      stagedHook: String => Unit = _ => ()): Option[Snapshot] = {
+      stagedHook: String => Unit): String = {
     import org.apache.spark.sql.functions.{broadcast, col, expr}
     val specs = readSpecs(base.dataDir)
     val schema = readSchema(spark, base)
@@ -4439,7 +4203,7 @@ object SnapshotStore {
     val matched = matchedRows(baseL)
     // bounded collect: one row per TOUCHED FILE (never per data row) —
     // in the URI-encoded relative form `_metadata.file_path` carries,
-    // decoded to on-disk names for the link-exclusion walk
+    // decoded to on-disk names for the link exclusion
     val touchedEnc = matched.select(col(DvFileCol)).distinct()
       .collect().map(_.getString(0)).toSet
     def decode(enc: String): String =
@@ -4467,51 +4231,20 @@ object SnapshotStore {
           .project(extraCols = Seq(DvFileCol, DvPosCol)))
         .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     val (out, changes) = transform(rowsTouched)
-    val (outObs, checkConstraints) = constraintsObserved(out, constraints ++
-      tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-    val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-    Files.createDirectories(dir)
     // rewritten rows stage under the CURRENT spec — touched data migrates
     // forward (the same direction the eventual OPTIMIZE takes the rest)
     val (curSub, curCols) = specs.last
-    val tgt = s"$dir/$curSub"
-    if (curCols.nonEmpty)
-      // cluster by the spec's partition columns before the fan-out write
-      // (the 4181/createJoin rule) — a high-cardinality current spec
-      // (hours(ts)) otherwise writes tasks × dirs sliver files. REBALANCE,
-      // not repartition: AQE splits a hot partition value (§2.5 skew)
-      outObs.hint("rebalance", curCols: _*)
-        .write.mode("append").partitionBy(curCols: _*).parquet(tgt)
-    else outObs.write.mode("append").parquet(tgt)
-    try checkConstraints()
-    catch { case e: Throwable => dropStagedDir(dir.toString); throw e }
+    val (dir, _) = writeStaged(root, Some(out), curCols, curSub,
+      constraints = constraints)
     // hard-link every data file OUTSIDE the touched set, in place — each
     // keeps its own era's layout
-    val basePath = Paths.get(base.dataDir).toAbsolutePath.normalize()
-    val walk = Files.walk(basePath)
-    try walk.iterator().asScala
-      .filter { f =>
-        Files.isRegularFile(f) &&
-          f.getFileName.toString.endsWith(".parquet") && {
-            val rel = basePath.relativize(f)
-            isDataSegs(rel.iterator().asScala.map(_.toString).toSeq) &&
-              !touchedDisk.contains(rel.toString)
-          }
-      }
-      .foreach { f =>
-        val dest = dir.resolve(basePath.relativize(f))
-        Files.createDirectories(dest.getParent)
-        Files.createLink(dest, f)
-      }
-    finally walk.close()
-    Files.writeString(dir.resolve("_schema.json"), schema.json)
-    stagedHook(dir.toString) // e.g. the identity high-water mark
-    carrySpecs(base.dataDir, dir.toString)
-    carryStateSidecars(base.dataDir, dir.toString)
+    linkParquetTree(base.dataDir, dir, withDv = false,
+      keep = rel => !touchedDisk(rel.toString))
+    stagedHook(dir) // e.g. the identity high-water mark
     // rename carry: the linked (untouched) files still hold physical
     // pre-rename names; the rewritten files were just staged under
     // logical names and read fine either way (coalesce legs null-fill)
-    carryRenames(base.dataDir, dir.toString)
+    carryTableState(base.dataDir, dir, Some(schema))
     // deletion-vector carry: linked (untouched) files keep their deleted
     // positions; entries for REWRITTEN files drop — their live rows just
     // migrated to fresh files, so a kept entry would dangle (harmless at
@@ -4520,18 +4253,12 @@ object SnapshotStore {
       val kept = d.filter(!col("file").isin(touchedEnc.toSeq: _*))
       if (!kept.isEmpty)
         kept.coalesce(1).write.mode("overwrite")
-          .parquet(dvDir(dir.toString).toString)
+          .parquet(dvDir(dir).toString)
     }
     // no manifest carry: spanning snapshots hold none (alterPartitionSpec
     // drops it); the migrating OPTIMIZE rebuilds stats
-    if (cdcKeys(root).nonEmpty) {
-      require(changes.columns.contains(ChangeTypeCol),
-        s"supplied change frame lacks $ChangeTypeCol")
-      changes.write.mode("overwrite").parquet(s"$dir/_changes")
-    }
-    if (tryCommit(root, base.version, dir.toString, txns))
-      Some(Snapshot(base.version + 1, dir.toString))
-    else None // orphaned dir is cleanOrphans food
+    writeChanges(root, dir, changes)
+    dir
   }
 
   /** MERGE-ON-READ transaction — deletion-vector DML, the public
@@ -4564,11 +4291,8 @@ object SnapshotStore {
       constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil)(
       matched: DataFrame => DataFrame)(
       replace: DataFrame => (DataFrame, DataFrame)): Snapshot = {
-    import org.apache.spark.sql.functions.{col, expr}
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root) // pin BEFORE the guard — see stampGuard
-      if (stampGuard(root, txn.toSeq, () => true)) return base
+    import org.apache.spark.sql.functions.col
+    commitLoop(root, maxAttempts, txn.toSeq) { base =>
       val evolved = isEvolved(base.dataDir)
       // a spanning snapshot reads per era (the shared `_dv` applies to
       // every branch — DV keys are snapshot-dir-relative, unique across
@@ -4582,42 +4306,20 @@ object SnapshotStore {
         "transactMoR: matched() must preserve the lineage columns " +
           s"($DvFileCol, $DvPosCol) — use filters/semi-joins, not projections")
       val (out, changes) = replace(m.drop(DvFileCol, DvPosCol))
-      val dir = Paths.get(root, "data", UUID.randomUUID().toString)
-      Files.createDirectories(dir)
       // replacement rows first (fresh uuid-named files — no collision with
       // the links), then the metadata-only link of every base data file.
       // The isEmpty probe stays on the UNOBSERVED frame (metrics under its
       // limit(1) would be partial — [[constraintsObserved]] contract); an
-      // empty replacement trivially satisfies every row constraint, same
-      // as the old pre-write aggregate over zero rows.
-      if (!out.isEmpty) {
-        val (outObs, checkConstraints) = constraintsObserved(out, constraints ++
-          tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-        val (tgt, cols) =
-          if (evolved) {
-            val (sub, c) = readSpecs(base.dataDir).last
-            (if (sub == ".") dir.toString else s"$dir/$sub", c)
-          } else (dir.toString, partitionCols(root))
-        if (cols.nonEmpty)
-          // cluster by the partition columns before the fan-out write
-          // (the 4181/createJoin rule). REBALANCE, not repartition: AQE
-          // splits a hot partition value across writers (§2.5 skew)
-          outObs.hint("rebalance", cols: _*)
-            .write.mode("append").partitionBy(cols: _*).parquet(tgt)
-        else outObs.write.mode("append").parquet(tgt)
-        try checkConstraints()
-        catch { case e: Throwable => dropStagedDir(dir.toString); throw e }
-      }
-      val basePath = Paths.get(base.dataDir).toAbsolutePath.normalize()
-      linkParquetTree(basePath, dir, withDv = false)
+      // empty replacement writes nothing and trivially satisfies every
+      // row constraint.
+      val (sub, cols) = currentLayout(root, base)
+      val (dir, _) = writeStaged(root, if (out.isEmpty) None else Some(out),
+        cols, sub, constraints = constraints)
+      linkParquetTree(base.dataDir, dir, withDv = false)
       // pin the schema: the dir now mixes linked and fresh files, and on
       // partitioned layouts the committed column types/order must not be
-      // re-inferred from directory names (same rule as stage())
-      Files.writeString(dir.resolve("_schema.json"),
-        readSchema(spark, base).json)
-      carrySpecs(base.dataDir, dir.toString)
-      carryStateSidecars(base.dataDir, dir.toString)
-      carryRenames(base.dataDir, dir.toString)
+      // re-inferred from directory names
+      carryTableState(base.dataDir, dir, Some(readSchema(spark, base)))
       val newDv = m.select(col(DvFileCol).cast("string").as("file"),
         col(DvPosCol).cast("long").as("pos"))
       val allDv =
@@ -4631,20 +4333,23 @@ object SnapshotStore {
       // vector that filters nothing.
       if (hasDv(base.dataDir) || !newDv.isEmpty)
         allDv.coalesce(1).write.mode("overwrite")
-          .parquet(dvDir(dir.toString).toString)
-      if (cdcKeys(root).nonEmpty) {
-        require(changes.columns.contains(ChangeTypeCol),
-          s"supplied change frame lacks $ChangeTypeCol")
-        changes.write.mode("overwrite").parquet(s"$dir/_changes")
-      }
-      if (tryCommit(root, base.version, dir.toString, txn.toSeq))
-        return Snapshot(base.version + 1, dir.toString)
-      attempt += 1 // lost the race: orphaned dir is cleanOrphans food
+          .parquet(dvDir(dir).toString)
+      writeChanges(root, dir, changes)
+      Staged(dir)
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
   }
 
+  /** The full-rewrite transaction behind [[transact]] and
+    * [[transactWithChanges]]: the transform's output is staged as the
+    * whole new snapshot in the current spec (healing any spec span and
+    * rename mapping), with no cluster columns — OPTIMIZE hands it frames
+    * already range- or z-order-shaped. EVERY staged version pins its
+    * schema: field METADATA (column DEFAULT values, identity specs) does
+    * not survive parquet-footer inference, so a post-ALTER write that
+    * relied on inference would silently drop the table's defaults for
+    * every later INSERT. The written names/types pin as-is; metadata
+    * merges from the current pin (see [[mergePinnedMetadata]]).
+    */
   private def transactImpl(spark: SparkSession, root: String, maxAttempts: Int,
       statsCols: Seq[String], txn: Option[Txn],
       constraints: Seq[(String, org.apache.spark.sql.Column)],
@@ -4652,54 +4357,33 @@ object SnapshotStore {
       stagedHook: String => Unit = _ => (), extraTxns: Seq[Txn] = Nil,
       pinCheck: () => Boolean = () => true,
       onReplay: () => Unit = () => ())(
-      transform: DataFrame => (DataFrame, Option[DataFrame])): Snapshot = {
-    import org.apache.spark.sql.functions.{count, expr, lit, sum, when}
-    val txns = txn.toSeq ++ extraTxns
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latest(root) // pin BEFORE the guard — see stampGuard
-      if (stampGuard(root, txns, pinCheck)) { onReplay(); return base }
+      transform: DataFrame => (DataFrame, Option[DataFrame])): Snapshot =
+    commitLoop(root, maxAttempts, txn.toSeq ++ extraTxns, pinCheck,
+        onReplay) { base =>
       val (out, suppliedChanges) = transform(read(spark, base))
-      // caller-supplied invariants + the table's own persisted CHECK
-      // constraints — every commit path enforces the latter automatically,
-      // fused into the staged write's own job (see [[constraintsObserved]])
-      val (outObs, checkConstraints) = constraintsObserved(out, constraints ++
-        tableConstraints(root).map { case (n, sql) => (n, expr(sql)) })
-      val dir = stage(root, outObs)
-      try checkConstraints()
-      catch { case e: Throwable => dropStagedDir(dir); throw e }
+      val dir = writeStaged(root, Some(out), partitionCols(root),
+        rebalance = false, constraints = constraints)._1
       stagedHook(dir) // e.g. the identity high-water-mark for THIS attempt
-      carryStateSidecars(base.dataDir, dir)
-      carryFieldMetadata(spark, base, dir)
+      carryTableState(base.dataDir, dir,
+        Some(mergePinnedMetadata(spark, root, out.schema)), linked = false)
       if (statsCols.nonEmpty || bloomCols.nonEmpty)
         writeManifest(spark, dir, statsCols, bloomCols, bloomExpectedItems)
-      val keys = cdcKeys(root)
-      if (keys.nonEmpty) {
-        // statement-integrated changes when supplied; otherwise the generic
-        // keyed diff of what was WRITTEN (the staged read-back — avoids
-        // recomputing the transform and captures write-time
-        // canonicalization). Rebase reruns this whole block against the
-        // winner's snapshot, so the feed always reflects committed states.
-        val ch = suppliedChanges.getOrElse {
-          val baseDf = read(spark, base)
-          // first write onto an EMPTY base (createJoin's v1, any
-          // init-then-transact shape): every staged row is an insert —
-          // skip the generic keyed diff, whose two-sided key shuffle
-          // re-sorts the entire staged output to conclude exactly that
-          if (baseDf.isEmpty)
-            readDir(spark, dir).withColumn(ChangeTypeCol,
-              org.apache.spark.sql.functions.lit("insert"))
-          else diffChanges(baseDf, readDir(spark, dir), keys)
-        }
-        require(ch.columns.contains(ChangeTypeCol),
-          s"supplied change frame lacks $ChangeTypeCol")
-        ch.write.mode("overwrite").parquet(s"$dir/_changes")
-      }
-      if (tryCommit(root, base.version, dir, txns))
-        return Snapshot(base.version + 1, dir)
-      attempt += 1
+      // statement-integrated changes when supplied; otherwise the generic
+      // keyed diff of what was WRITTEN (the staged read-back — avoids
+      // recomputing the transform and captures write-time
+      // canonicalization). Rebase reruns this whole block against the
+      // winner's snapshot, so the feed always reflects committed states.
+      writeChanges(root, dir, suppliedChanges.getOrElse {
+        val baseDf = read(spark, base)
+        // first write onto an EMPTY base (createJoin's v1, any
+        // init-then-transact shape): every staged row is an insert —
+        // skip the generic keyed diff, whose two-sided key shuffle
+        // re-sorts the entire staged output to conclude exactly that
+        if (baseDf.isEmpty)
+          readDir(spark, dir).withColumn(ChangeTypeCol,
+            org.apache.spark.sql.functions.lit("insert"))
+        else diffChanges(baseDf, readDir(spark, dir), cdcKeys(root))
+      })
+      Staged(dir)
     }
-    throw new CommitConflictException(
-      s"lost the commit race $maxAttempts times at $root")
-  }
 }

@@ -78,12 +78,6 @@ object SqlDml {
     SnapshotStore.readSchema(spark, SnapshotStore.latest(root)).fields
       .find(_.metadata.contains("identity.start")).map(_.name)
 
-  /** Test seam: fires inside each staging attempt (threaded as the
-    * transact machinery's stagedHook), so a spec can land a concurrent
-    * layout transition deterministically in the route-then-stage window.
-    */
-  private[graft] var dmlTestHook: () => Unit = () => ()
-
   /** Re-evaluate a statement's staging ROUTE when a concurrent layout
     * transition invalidated the one already chosen — e.g. a migrating
     * OPTIMIZE heals a spec-spanning table to an UNPARTITIONED single-spec
@@ -171,7 +165,7 @@ object SqlDml {
         else if (SnapshotStore.partitionCols(root).nonEmpty ||
             SnapshotStore.spansSpecs(root))
           SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true, stagedHook = _ => dmlTestHook())(
+            evolvedScoped = true)(
             base => base.alias(alias).filter(coalesce(cond, lit(false))))(build)
         else transactBoth(spark, root, maxAttempts, build)
         }
@@ -199,7 +193,7 @@ object SqlDml {
         else if (SnapshotStore.partitionCols(root).nonEmpty ||
             SnapshotStore.spansSpecs(root))
           SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true, stagedHook = _ => dmlTestHook())(
+            evolvedScoped = true)(
             base => base.alias(alias).filter(coalesce(cond, lit(false))))(build)
         else transactBoth(spark, root, maxAttempts, build)
         }
@@ -298,7 +292,7 @@ object SqlDml {
               SnapshotStore.spansSpecs(root)) &&
             m.notMatchedBySourceActions.isEmpty)
           SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true, stagedHook = _ => dmlTestHook())(
+            evolvedScoped = true)(
             base => base.alias(tAlias).join(source.alias(sAlias),
               expr(m.mergeCondition.sql), "left_semi"))(
             base => mergeFrames(base, tAlias, source, sAlias, m,

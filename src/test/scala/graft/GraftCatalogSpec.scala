@@ -1481,7 +1481,7 @@ class GraftCatalogSpec extends SparkSpec {
       .head() match { case r => r.getLong(0) == r.getLong(1) })
     // REGRESSION: INSERT OVERWRITE rewrites every row — the pinned schema
     // of the new version must keep the identity metadata (a projection
-    // alias drops field metadata; carryFieldMetadata restores it) so
+    // alias drops field metadata; the staged schema pin merges it back) so
     // assignment still runs afterwards
     spark.sql("INSERT OVERWRITE graft.idt (v) SELECT id FROM range(3)")
     spark.sql("INSERT INTO graft.idt (v) VALUES (77)")

@@ -701,4 +701,103 @@ class SnapshotStoreSpec extends SparkSpec {
       "a stranded hint must fall back to the full listing, never " +
         "under-report high-water marks")
   }
+
+  test("overwrite appends report replay: a recommitted txn fires onReplay, version unchanged") {
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    // the plain, dynamic-partition and spanning-layout overwrite routes
+    for ((route, dynamic, evolve) <- Seq(("plain", false, false),
+        ("dynamic", true, false), ("spanning-layout", false, true))) {
+      val root = tmpRoot()
+      SnapshotStore.init(spark, root,
+        Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "k", "v"),
+        partitionBy = if (evolve) Nil else Seq("k"))
+      if (evolve) SnapshotStore.alterPartitionSpec(spark, root, Seq("k"))
+      val prev = spark.conf.getOption(mode)
+      spark.conf.set(mode, if (dynamic) "dynamic" else "static")
+      try {
+        val txn = Some(SnapshotStore.Txn("ow", 1L))
+        val batch = Seq((3L, "a", 30L)).toDF("id", "k", "v")
+        SnapshotStore.append(spark, root, batch, overwrite = true, txn = txn)
+        val v = SnapshotStore.latest(root).version
+        var replayed = false
+        SnapshotStore.append(spark, root, batch, overwrite = true, txn = txn,
+          onReplay = () => { replayed = true })
+        assert(replayed, s"$route overwrite dropped the onReplay signal")
+        assert(SnapshotStore.latest(root).version == v,
+          s"$route overwrite replay must not commit")
+      } finally prev match {
+        case Some(p) => spark.conf.set(mode, p)
+        case None => spark.conf.unset(mode)
+      }
+    }
+  }
+
+  test("every write path that loses its CAS to a racer retries exactly once") {
+    import org.apache.spark.sql.types.StringType
+    def rows(ids: Seq[Long]) =
+      ids.map(i => (i, s"k${i % 3}", i * 10L)).toDF("id", "k", "v")
+    def seed(root: String, parts: Seq[String] = Nil): Unit =
+      SnapshotStore.init(spark, root, rows(0L until 12L), partitionBy = parts)
+    def add(root: String, from: Long): Unit =
+      SnapshotStore.append(spark, root, rows(Seq(from, from + 1)))
+    // (path, table set-up, the commit under test); the racer is always one
+    // non-conflicting append
+    val cases: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("flat append", r => seed(r), r => add(r, 50L)),
+      ("partitioned append", r => seed(r, Seq("k")), r => add(r, 50L)),
+      ("spanning-layout append", r => {
+        seed(r); SnapshotStore.alterPartitionSpec(spark, r, Seq("k"))
+        add(r, 40L)
+      }, r => add(r, 50L)),
+      ("alterSchema ADD COLUMN", r => seed(r),
+        r => SnapshotStore.alterSchema(spark, r, _.add("note", StringType))),
+      ("alterPartitionSpec", r => seed(r),
+        r => SnapshotStore.alterPartitionSpec(spark, r, Seq("k"))),
+      ("restore", r => { seed(r); add(r, 40L) },
+        r => SnapshotStore.restore(spark, r, toVersion = 0L)),
+      ("optimizeSmallFiles", r => { seed(r); add(r, 40L); add(r, 42L) },
+        r => SnapshotStore.optimizeSmallFiles(spark, r, targetRows = 1000L,
+          smallFileRows = 100L)),
+      ("MoR DELETE", r => {
+        seed(r); SnapshotStore.setDmlMode(r, SnapshotStore.MergeOnRead)
+      }, r => SnapshotStore.transactMoR(spark, r)(_.filter($"id" < 3L))(m =>
+        (m.limit(0), m.withColumn(SnapshotStore.ChangeTypeCol, lit("delete"))))),
+      ("partial-COW UPDATE", r => seed(r, Seq("k")),
+        r => SnapshotStore.transactPartialWithChanges(spark, r)(
+          _.filter($"k" === "k1"))(t => (t.withColumn("v", $"v" + 1L),
+          t.withColumn(SnapshotStore.ChangeTypeCol, lit("update_postimage"))))))
+    def contents(root: String): (Seq[String], Seq[String]) = {
+      val df = SnapshotStore.read(spark, root)
+      val cols = df.columns.sorted.toSeq
+      (cols, df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted)
+    }
+    for ((path, setup, op) <- cases) {
+      // serial reference: the racer's commit, then the commit under test
+      val serial = tmpRoot()
+      setup(serial); add(serial, 100L); op(serial)
+      val root = tmpRoot()
+      setup(root)
+      val before = SnapshotStore.latest(root).version
+      // the hook fires in each attempt between staging and CAS; the first
+      // time, the racer commits — so the attempt must lose and retry. The
+      // racer's own commit attempt fires the hook too: not counted
+      var attempts = 0
+      var racing = false
+      SnapshotStore.commitTestHook = () => if (!racing) {
+        attempts += 1
+        if (attempts == 1) {
+          racing = true
+          try add(root, 100L) finally racing = false
+        }
+      }
+      try op(root) finally SnapshotStore.commitTestHook = () => ()
+      assert(attempts == 2, s"$path: expected exactly one retry, got " +
+        s"${attempts - 1}")
+      assert(SnapshotStore.latest(root).version == before + 2,
+        s"$path: the racer and the retried commit must each land once")
+      assert(contents(root) == contents(serial),
+        s"$path: the retried commit must equal the serial application")
+    }
+  }
 }

@@ -209,7 +209,7 @@ class SqlDmlSpec extends SparkSpec {
     // which the statement router must ABSORB by re-routing onto the
     // full-rewrite path, never surface as "re-run the statement".
     var fired = false
-    SqlDml.dmlTestHook = () => {
+    SnapshotStore.commitTestHook = () => {
       if (!fired) {
         fired = true
         SnapshotStore.optimize(spark, root, targetRows = 1000000L)
@@ -217,7 +217,7 @@ class SqlDmlSpec extends SparkSpec {
     }
     try SqlDml.execute(spark, "UPDATE t SET v = v + 1 WHERE id % 10 = 0",
       Map("t" -> root))
-    finally SqlDml.dmlTestHook = () => ()
+    finally SnapshotStore.commitTestHook = () => ()
     assert(fired, "the interleave must actually fire")
     assert(!SnapshotStore.spansSpecs(root) &&
       SnapshotStore.partitionCols(root).isEmpty,
