@@ -125,8 +125,8 @@ object ProbeCow {
   * both DML modes. Copy-on-write pays the O(table) rewrite; merge-on-read
   * writes only the matched positions, so its cost is the matched-row scan
   * — the gap must WIDEN with table size. Also times a post-delete full
-  * scan vs the pre-delete scan to expose the broadcast anti-join's read
-  * overhead.
+  * scan vs the pre-delete scan to expose the read overhead of the
+  * [[org.apache.spark.sql.GraftDvFilter]] predicate plain reads apply.
   *
   * Usage: runMain graft.ProbeDv <rowsSmall> <rowsBig>
   */
@@ -162,7 +162,7 @@ object ProbeDv {
         "DELETE FROM t WHERE id % 1000 = 7", Map("t" -> mor)))
       // first read of the new version pays the once-per-dir prefix-sample
       // job + fresh-plan analysis; the steady-state read is the honest
-      // anti-join overhead
+      // DV-filter overhead
       val scanCold = time(SnapshotStore.read(spark, mor).selectExpr("sum(v)").collect())
       val q2 = SnapshotStore.read(spark, mor).selectExpr("sum(v)")
       val scan1 = time(q2.collect())

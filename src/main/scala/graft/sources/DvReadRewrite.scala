@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * lands a `_dv/` sidecar: the raw scan would resurrect every deleted
   * position (and parquet footer COUNT(*) pushdown would count them). This
   * rule substitutes the relation with the logical plan of
-  * [[SnapshotStore.read]] — the same broadcast anti-join every Scala-API
-  * reader uses — re-aliased to the relation's output attribute ids so the
+  * [[SnapshotStore.read]] — the same [[GraftDvFilter]] predicate every
+  * Scala-API plain read applies (only DML lineage reads anti-join the
+  * vector) — re-aliased to the relation's output attribute ids so the
   * surrounding plan binds unchanged.
   *
   * Both relation shapes are handled, so the rule is injection-order-proof:

@@ -117,7 +117,7 @@ object SnapshotStore {
   // where subdir "." is the dir's top level (the original layout) and
   // each later spec lives under `_spec<i>/` (underscore-prefixed, so
   // Spark's own listing of the top level never descends into it). Reads
-  // plan PER SPEC and union ([[readDirEvolved]]): partition predicates
+  // plan PER SPEC and union ([[readDir]]'s era loop): partition predicates
   // prune directories in new-spec subtrees and fall back to row-group
   // stats on old files — exactly Iceberg's split planning. Any full
   // rewrite (OPTIMIZE, INSERT OVERWRITE, full-COW DML) stages entirely in
@@ -204,7 +204,7 @@ object SnapshotStore {
     * spec; history keeps its layout; reads span both; OPTIMIZE migrates.
     * A `_dv` deletion-vector sidecar rides the evolve untouched: its
     * `(file, pos)` keys are snapshot-dir-relative and the link preserves
-    * every relative path, so per-era reads ([[readDirEvolved]]), scoped
+    * every relative path, so per-era reads ([[readDir]]), scoped
     * DML ([[transactPartialWithChanges]]) and MoR DML ([[transactMoR]]) all keep
     * honoring it until a full rewrite materializes it away. A RENAME
     * COLUMN mapping rides the same way: the per-era scans apply the
@@ -371,7 +371,7 @@ object SnapshotStore {
     // BIGGEST write (the initial load) would fan tasks × dirs sliver files
     val dir = writeStaged(root, Some(df), partitionBy)._1
     // v0 pins its schema like every later version (see [[transactImpl]])
-    Files.writeString(Paths.get(dir, "_schema.json"), df.schema.json)
+    Files.writeString(schemaFile(dir), df.schema.json)
     if (statsCols.nonEmpty) writeManifest(spark, dir, statsCols)
     if (cdcKeys.nonEmpty && !linkInsertChanges(Paths.get(dir))) {
       // partitioned layout (or zero staged files): the linked-frame
@@ -980,12 +980,18 @@ object SnapshotStore {
     * parquet footers otherwise.
     */
   def readSchema(spark: SparkSession, snap: Snapshot):
-      org.apache.spark.sql.types.StructType = {
-    val f = Paths.get(snap.dataDir, "_schema.json")
-    if (Files.exists(f))
-      org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    else spark.read.parquet(snap.dataDir).schema
+      org.apache.spark.sql.types.StructType =
+    pinnedSchema(snap.dataDir).getOrElse(spark.read.parquet(snap.dataDir).schema)
+
+  private def schemaFile(dir: String): Path = Paths.get(dir, "_schema.json")
+
+  /** Snapshot dir `dir`'s pinned schema; None on a dir that pins none. */
+  private def pinnedSchema(dir: String):
+      Option[org.apache.spark.sql.types.StructType] = {
+    val f = schemaFile(dir)
+    if (!Files.exists(f)) None
+    else Some(org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
   def read(spark: SparkSession, snap: Snapshot): DataFrame =
@@ -2910,63 +2916,94 @@ object SnapshotStore {
     })
   }
 
-  /** Read a staged/committed data dir honoring its pinned schema if any —
-    * the one read path shared by [[read]] and the staged read-backs.
-    * Dirs carrying a deletion-vector sidecar (`_dv/`, see [[transactMoR]])
-    * come back with their deleted positions filtered out.
-    */
-  private def readDir(spark: SparkSession, dir: String): DataFrame =
-    if (isEvolved(dir)) readDirEvolved(spark, dir)
-    else if (hasDv(dir)) readDirDv(spark, dir)
-    else plainReadDir(spark, dir)
-
-  /** Read of a snapshot spanning PARTITION SPECS: one scan per spec,
-    * unioned under the pinned schema. The top level (spec 0) is one plain
-    * scan — Spark's listing never descends into the `_spec<i>` subtrees
-    * (underscore prefix) — and each later spec scans its subtree with
-    * `basePath` there, so its partition columns materialize from its OWN
-    * directory layout. Catalyst pushes deterministic predicates through
-    * the Union into every branch: partition filters prune directories
-    * per-spec, data filters reach the parquet row groups — the Iceberg
-    * split-planning shape, from plain DataFrame algebra. A `_dv` deletion
-    * vector (carried through the evolve — table state, like any
-    * metadata-only link) applies as the same codegen'd [[GraftDvFilter]]
-    * predicate on EVERY era branch: DV keys are snapshot-dir-relative, so
-    * one broadcast map serves all branches, and a position recorded
-    * against a pre-evolve file still names the same physical row. A
+  /** Read a staged/committed snapshot dir — the ONE scan behind [[read]],
+    * the staged read-backs and the DML lineage reads. The dir is a list of
+    * partition-spec ERAS ([[readSpecs]]; the single era "." when it spans
+    * none), each scanned at its own root under the rename-extended pinned
+    * schema: the top level never descends into the `_spec<i>` subtrees
+    * (underscore prefix), each later era scans with `basePath` at its
+    * subtree so ITS partition columns materialize from its own layout, and
+    * an era declared with nothing appended under it yet is skipped.
+    * Catalyst pushes deterministic predicates through the Union into every
+    * branch: partition filters prune directories per era, data filters
+    * reach the parquet row groups — the Iceberg split-planning shape. A
     * RENAME COLUMN mapping applies as the [[DirRead]] coalesce projection
-    * on every branch (above the DV filter — the projection ends the
-    * `_metadata`-bearing scan relation), so files written under
-    * pre-rename physical names in ANY era resolve to the logical name.
+    * on every branch, so files written under pre-rename physical names in
+    * ANY era resolve to the logical name; eras union in schema order.
+    *
+    * `files` (snapshot-dir-relative, in the URI-encoded [[DvFileCol]] form)
+    * narrows every era to its share of those files — the planning-time
+    * pruned re-read of a partial DML's touched files.
+    *
+    * A `_dv` deletion vector applies one of two ways. Plain reads filter
+    * every era branch with the codegen'd [[GraftDvFilter]] predicate on the
+    * RAW scan (it needs `_metadata`; see [[dvKeepBroadcast]]). `lineage`
+    * reads carry [[DvFileCol]]/[[DvPosCol]] and drop deleted rows with one
+    * BROADCAST anti-join on `(file, pos)` instead: GraftDvFilter is
+    * nondeterministic, so it would stop DML `matchedRows` predicates from
+    * being pushed into the scan. DV keys are snapshot-dir-relative, so one
+    * vector serves every era. A single-era dir with no vector and no
+    * rename reads as the bare `spark.read.schema(pinned).parquet(dir)`.
     */
-  private def readDirEvolved(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val f = Paths.get(dir, "_schema.json")
-    require(Files.exists(f), s"evolved snapshot dir $dir lacks _schema.json")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val renames = readRenames(dir)
-    val ext = renameExtSchema(schema, renames)
-    val scans = readSpecs(dir).flatMap { case (sub, _) =>
-      if (sub == ".") Some(spark.read.schema(ext).parquet(dir))
-      else {
-        val p = s"$dir/$sub"
-        if (Files.isDirectory(Paths.get(p)))
-          Some(spark.read.schema(ext).option("basePath", p).parquet(p))
-        else None // spec declared, nothing appended under it yet
+  private def readDir(spark: SparkSession, dir: String, lineage: Boolean = false,
+      files: Option[Set[String]] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, expr}
+    val specs = readSpecs(dir)
+    val pinned = pinnedSchema(dir)
+    require(pinned.isDefined || specs.isEmpty,
+      s"evolved snapshot dir $dir lacks _schema.json")
+    val renames = if (pinned.isEmpty) Map.empty[String, Seq[String]] else readRenames(dir)
+    // a fresh reader per era: DataFrameReader options accumulate
+    def reader = pinned.fold(spark.read)(s =>
+      spark.read.schema(renameExtSchema(s, renames)))
+    val eras = if (specs.isEmpty) Seq(".") else specs.map(_._1)
+    def eraOf(rel: String): String =
+      eras.filter(s => s != "." && rel.startsWith(s + "/")).lastOption.getOrElse(".")
+    val eraScans = eras.flatMap { sub =>
+      val at = if (sub == ".") dir else s"$dir/$sub"
+      files match {
+        case None if sub == "." => Some(reader.parquet(dir))
+        case None if !Files.isDirectory(Paths.get(at)) => None // nothing appended yet
+        case None => Some(reader.option("basePath", at).parquet(at))
+        case Some(fs) =>
+          val share = fs.filter(eraOf(_) == sub).toSeq.sorted
+          if (share.isEmpty) None
+          else Some(reader.option("basePath", at)
+            .parquet(share.map(rel => s"$dir/${decodeRel(rel)}"): _*))
       }
     }
-    val filtered =
-      if (!hasDv(dir)) scans
+    // a file list no era holds reads as the empty top-level scan
+    val raw = if (eraScans.nonEmpty) eraScans else Seq(reader.parquet(dir).limit(0))
+    val schema = pinned.getOrElse(raw.head.schema)
+    val extra = if (lineage) Seq(DvFileCol, DvPosCol) else Nil
+    // lineage relativizes against the snapshot dir's unique uuid segment:
+    // the recording side (transactMoR) and the anti-join below derive the
+    // SAME string from _metadata.file_path, so URI escaping of partition
+    // values never has to round-trip through a filesystem walk
+    val uuid = Paths.get(dir).getFileName.toString
+    val scans = if (!lineage) raw else raw.map(_
+      .withColumn(DvFileCol, expr(s"substring_index(_metadata.file_path, '$uuid/', -1)"))
+      .withColumn(DvPosCol, col("_metadata.row_index")))
+    val kept =
+      if (lineage || !hasDv(dir)) scans
       else dvKeepBroadcast(spark, dir, scans.reduce(_.unionByName(_))) match {
-        case None => scans
+        case None => scans // no data files: nothing to filter
         case Some(bc) => scans.map(_.where(
-          org.apache.spark.sql.GraftDvFilter.keepColumn(
-            col("_metadata.row_index"), bc)))
+          org.apache.spark.sql.GraftDvFilter.keepColumn(col("_metadata.row_index"), bc)))
       }
-    filtered.map(b => DirRead(b, schema, renames).project())
-      .reduce(_.unionByName(_))
-      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    // the rename projection ends the `_metadata`-bearing scan relation, so
+    // it goes above the DV filter
+    val branches = kept.map(DirRead(_, schema, renames).project(extra))
+    val out =
+      if (specs.isEmpty) branches.head
+      else branches.reduce(_.unionByName(_))
+        .select((schema.fieldNames.toIndexedSeq ++ extra).map(col): _*)
+    if (!lineage || !hasDv(dir)) out
+    else {
+      val dv = dvFrame(spark, dir)
+      out.join(broadcast(dv),
+        out(DvFileCol) === dv("file") && out(DvPosCol) === dv("pos"), "left_anti")
+    }
   }
 
   /** DV-applied read WITHOUT lineage columns — the hot path every normal
@@ -3008,10 +3045,9 @@ object SnapshotStore {
     * InputFileBlockHolder serves at scan time — the prefix is sampled
     * from input_file_name() over `sampleFrom` (the holder's own
     * rendering) rather than reconstructed from Hadoop's URI form. None
-    * when the dir has no data files (nothing to filter). Shared by the
-    * single-spec ([[readDirDv]]) and per-era ([[readDirEvolved]]) reads:
-    * DV `file` keys are snapshot-dir-relative, so ONE map serves every
-    * era branch.
+    * when the dir has no data files (nothing to filter). Shared by every
+    * era branch of a plain [[readDir]]: DV `file` keys are
+    * snapshot-dir-relative, so ONE map serves every era.
     */
   private def dvKeepBroadcast(spark: SparkSession, dir: String,
       sampleFrom: DataFrame):
@@ -3030,7 +3066,7 @@ object SnapshotStore {
         s"'$p' does not contain the snapshot dir segment '$uuid/' — " +
         "cannot key the DV map; refusing the read")
       val prefix = p.substring(0, at + uuid.length + 1)
-      val dvMap = spark.read.parquet(dvDir(dir).toString)
+      val dvMap = dvFrame(spark, dir)
         .collect() // bounded: deletes since last OPTIMIZE (see scaladoc)
         .groupBy(_.getAs[String]("file"))
         .map { case (f, rows) =>
@@ -3044,25 +3080,6 @@ object SnapshotStore {
       }
     }
     Some(bc)
-  }
-
-  private def readDirDv(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dr = rawReadDir(spark, dir)
-    dvKeepBroadcast(spark, dir, dr.raw) match {
-      case None => dr.project() // no data files: nothing to filter
-      case Some(bc) =>
-        // DV filter binds on the RAW scan (it needs `_metadata`); the
-        // rename projection (a no-op without renames) goes on top
-        dr.copy(raw = dr.raw.where(
-          org.apache.spark.sql.GraftDvFilter.keepColumn(
-            col("_metadata.row_index"), bc))).project()
-    }
-  }
-
-  private def plainReadDir(spark: SparkSession, dir: String): DataFrame = {
-    val dr = rawReadDir(spark, dir)
-    dr.project()
   }
 
   /** A snapshot dir's RAW scan (physical column names, `_metadata` still
@@ -3134,19 +3151,6 @@ object SnapshotStore {
       org.apache.spark.sql.types.StructType(st.fields.map(f =>
         f.copy(dataType = asNullable(f.dataType), nullable = true)))
     case other => other
-  }
-
-  private def rawReadDir(spark: SparkSession, dir: String): DirRead = {
-    val f = Paths.get(dir, "_schema.json")
-    if (!Files.exists(f)) {
-      val df = spark.read.parquet(dir)
-      return DirRead(df, df.schema, Map.empty)
-    }
-    val schema = org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val renames = readRenames(dir)
-    DirRead(spark.read.schema(renameExtSchema(schema, renames)).parquet(dir),
-      schema, renames)
   }
 
   /** The read schema extended with each rename chain's PHYSICAL names
@@ -3248,70 +3252,34 @@ object SnapshotStore {
   private def dvDir(dir: String): Path = Paths.get(dir, "_dv")
   private[graft] def hasDv(dir: String): Boolean = Files.isDirectory(dvDir(dir))
 
-  /** [[plainReadDir]] plus lineage columns, with this dir's deletion
-    * vector (if any) already applied as a BROADCAST anti-join on
-    * `(file, pos)` — the read half of merge-on-read DML. The DV holds one
-    * tiny row per deleted position (bounded by deletes since the last
-    * OPTIMIZE, never by table size), so the join never shuffles the data
-    * side: each scan task probes a small broadcast hash set, which is the
-    * same asymptotic shape as Delta's per-file DV bitmap lookup.
+  /** Snapshot dir `dir`'s deletion vector: one `(file, pos)` row per
+    * deleted position.
     */
-  private[graft] def readDirLineage(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
-    // relativize against the snapshot dir's unique uuid segment: both the
-    // recording side (transactMoR) and this read derive the SAME string
-    // from _metadata.file_path, so URI escaping of partition values never
-    // has to round-trip through a filesystem walk
-    val uuid = Paths.get(dir).getFileName.toString
-    val dr = rawReadDir(spark, dir)
-    val base = dr.copy(raw = dr.raw
-      .withColumn(DvFileCol,
-        expr(s"substring_index(_metadata.file_path, '$uuid/', -1)"))
-      .withColumn(DvPosCol, col("_metadata.row_index")))
-      .project(extraCols = Seq(DvFileCol, DvPosCol))
-    if (!hasDv(dir)) base
-    else {
-      val dv = spark.read.parquet(dvDir(dir).toString)
-      base.join(broadcast(dv),
-        base(DvFileCol) === dv("file") && base(DvPosCol) === dv("pos"),
-        "left_anti")
-    }
-  }
+  private def dvFrame(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(dvDir(dir).toString)
 
-  /** [[readDirLineage]] for a snapshot dir that SPANS partition specs:
-    * one lineage-bearing scan per era (each era's partition columns
-    * materialize from its own layout via basePath), rename-projected,
-    * unioned, with the shared `_dv` deletion vector anti-joined away.
+  /** Write deletion vector `dv` as staged dir `dir`'s sidecar — one tiny
+    * file: the vector is bounded by deletes since the last OPTIMIZE, not by
+    * table size.
     */
-  private def readDirLineageEvolved(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
-    val f = Paths.get(dir, "_schema.json")
-    require(Files.exists(f), s"evolved snapshot dir $dir lacks _schema.json")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val renames = readRenames(dir)
-    val ext = renameExtSchema(schema, renames)
-    val uuid = Paths.get(dir).getFileName.toString
-    val scans = readSpecs(dir).flatMap { case (sub, _) =>
-      val p = if (sub == ".") dir else s"$dir/$sub"
-      if (sub != "." && !Files.isDirectory(Paths.get(p))) None
-      else Some(spark.read.schema(ext).option("basePath", p).parquet(p)
-        .withColumn(DvFileCol,
-          expr(s"substring_index(_metadata.file_path, '$uuid/', -1)"))
-        .withColumn(DvPosCol, col("_metadata.row_index")))
+  private def writeDv(dv: DataFrame, dir: String): Unit =
+    dv.coalesce(1).write.mode("overwrite").parquet(dvDir(dir).toString)
+
+  /** Carry `from`'s deletion vector into staged `dir`, minus the entries
+    * `dropped` selects: those of files the stage rewrote, whose live rows
+    * moved to fresh files — a kept entry would dangle (harmless at read,
+    * but accumulating forever). No sidecar when nothing is left.
+    */
+  private def carryDv(spark: SparkSession, from: String, dir: String,
+      dropped: org.apache.spark.sql.Column): Unit =
+    if (hasDv(from)) {
+      val kept = dvFrame(spark, from).filter(!dropped)
+      if (!kept.isEmpty) writeDv(kept, dir)
     }
-    val base = DirRead(scans.reduce(_.unionByName(_)), schema, renames)
-      .project(extraCols = Seq(DvFileCol, DvPosCol))
-      .select((schema.fieldNames.toIndexedSeq ++
-        Seq(DvFileCol, DvPosCol)).map(col): _*)
-    if (!hasDv(dir)) base
-    else {
-      val dv = spark.read.parquet(dvDir(dir).toString)
-      base.join(broadcast(dv),
-        base(DvFileCol) === dv("file") && base(DvPosCol) === dv("pos"),
-        "left_anti")
-    }
-  }
+
+  /** The on-disk relative path of a URI-encoded [[DvFileCol]] value. */
+  private def decodeRel(enc: String): String =
+    Paths.get(java.net.URI.create("file:///" + enc)).toString.stripPrefix("/")
 
   /** All-inserts change frame by HARD LINK instead of a second full write
     * of the data (init / clone / append staged exactly the rows the feed
@@ -3517,9 +3485,9 @@ object SnapshotStore {
   private def carryTableState(from: String, dir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       linked: Boolean = true): Unit = {
-    schema.foreach(s => Files.writeString(Paths.get(dir, "_schema.json"), s.json))
-    val carried: Seq[String => Path] = Seq((d: String) => Paths.get(d, "_schema.json"),
-      identityFile _) ++ (if (linked) Seq(specsFile _, renamesFile _) else Nil)
+    schema.foreach(s => Files.writeString(schemaFile(dir), s.json))
+    val carried: Seq[String => Path] = Seq(schemaFile _, identityFile _) ++
+      (if (linked) Seq(specsFile _, renamesFile _) else Nil)
     carried.foreach { f =>
       if (Files.exists(f(from)) && !Files.exists(f(dir))) Files.copy(f(from), f(dir))
     }
@@ -4031,7 +3999,7 @@ object SnapshotStore {
       stagedHook: String => Unit = _ => ())(
       matchedRows: DataFrame => DataFrame)(
       transform: DataFrame => (DataFrame, DataFrame)): Snapshot = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
     val parts = partitionCols(root)
     require(parts.nonEmpty || evolvedScoped,
       s"transactPartialWithChanges requires a partitioned table ($root)")
@@ -4064,7 +4032,7 @@ object SnapshotStore {
       // multi-source plans, which a DV base's anti-join is); callers'
       // matchedRows are row-preserving filters/semi-joins, so the lineage
       // columns flow through them untouched
-      val baseL = readDirLineage(spark, base.dataDir)
+      val baseL = readDir(spark, base.dataDir, lineage = true)
       val baseDf = baseL.drop(DvFileCol, DvPosCol)
       val matched = matchedRows(baseL)
       val touchedVals = matched.select(parts.map(col): _*).distinct()
@@ -4089,9 +4057,7 @@ object SnapshotStore {
         val j = rel.lastIndexOf('/')
         if (j < 0) None else Some(rel.substring(0, j))
       }.toSet
-      val touchedDirs = touchedDirsEnc.map { enc =>
-        Paths.get(java.net.URI.create("file:///" + enc)).toString.stripPrefix("/")
-      }
+      val touchedDirs = touchedDirsEnc.map(decodeRel)
       val (dir, freshFiles) = writeStaged(root, Some(out), parts,
         constraints = constraints)
       // link every untouched partition's files into the new version
@@ -4110,22 +4076,13 @@ object SnapshotStore {
       // instead of dying on the first write
       carryManifestLinked(spark, base.dataDir, dir, freshFiles,
         dropDirs = touchedDirsEnc)
-      if (hasDv(base.dataDir)) {
-        // deletion-vector carry-forward: linked files keep their deleted
-        // positions. Entries pointing into REWRITTEN partitions reference
-        // files absent from this version (harmless — the read anti-join
-        // matches nothing) but would accumulate forever, so prune by
-        // touched dir. The prune can only KEEP a superset: an escaping
-        // surprise fails the isin match and keeps the row, never drops a
-        // live one.
-        import org.apache.spark.sql.functions.regexp_replace
-        val dv = spark.read.parquet(dvDir(base.dataDir).toString)
-        val kept = dv.filter(!regexp_replace(col("file"), "/[^/]+$", "")
-          .isin(touchedDirsEnc.toSeq: _*))
-        if (!kept.isEmpty)
-          kept.coalesce(1).write.mode("overwrite")
-            .parquet(dvDir(dir).toString)
-      }
+      // deletion-vector carry-forward: linked files keep their deleted
+      // positions; entries pointing into REWRITTEN partitions prune by
+      // touched dir. The prune can only KEEP a superset: an escaping
+      // surprise fails the isin match and keeps the row, never drops a
+      // live one.
+      carryDv(spark, base.dataDir, dir, regexp_replace(col("file"), "/[^/]+$", "")
+        .isin(touchedDirsEnc.toSeq: _*))
       writeChanges(root, dir, changes)
       Staged(dir)
       }
@@ -4138,11 +4095,12 @@ object SnapshotStore {
     * O(touched), never O(table). Each era knows its own layout from the
     * specs sidecar, so the statement:
     *
-    *   - scans every era (one lineage-bearing scan per spec, unioned —
-    *     the [[readDirEvolved]] shape plus `_metadata` file lineage),
+    *   - scans every era (the lineage-bearing [[readDir]]: one scan per
+    *     spec, unioned, plus `_metadata` file lineage),
     *   - collects the matched rows' FILES (bounded: one row per touched
-    *     file), reads exactly those files back per era (planning-time
-    *     pruned — the scan lists only touched paths),
+    *     file), reads exactly those files back per era (the same
+    *     [[readDir]] narrowed to `files`: planning-time pruned — the scan
+    *     lists only touched paths),
     *   - rewrites their rows under the CURRENT spec's subtree (touched
     *     data migrates forward, shrinking the eventual OPTIMIZE),
     *   - hard-links every other data file in place, each under its own
@@ -4168,72 +4126,24 @@ object SnapshotStore {
       matchedRows: DataFrame => DataFrame,
       transform: DataFrame => (DataFrame, DataFrame),
       stagedHook: String => Unit): String = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr}
-    val specs = readSpecs(base.dataDir)
+    import org.apache.spark.sql.functions.col
     val schema = readSchema(spark, base)
-    val renames = readRenames(base.dataDir)
-    val ext = renameExtSchema(schema, renames)
-    val uuid = Paths.get(base.dataDir).getFileName.toString
-    def eraBase(sub: String): String =
-      if (sub == ".") base.dataDir else s"${base.dataDir}/$sub"
-    val dv = if (hasDv(base.dataDir))
-      Some(spark.read.parquet(dvDir(base.dataDir).toString)) else None
-    def dropDeleted(df: DataFrame): DataFrame = dv match {
-      case None => df
-      case Some(d) => df.join(broadcast(d),
-        df(DvFileCol) === d("file") && df(DvPosCol) === d("pos"), "left_anti")
-    }
-    // one lineage-bearing scan per era: the top level never descends into
-    // `_spec` subtrees (underscore prefix), each later era scans with
-    // basePath at its subtree so ITS partition columns materialize; the
-    // rename coalesce projects files' physical names onto logical ones
-    val eraScans = specs.flatMap { case (sub, _) =>
-      val p = eraBase(sub)
-      if (sub != "." && !Files.isDirectory(Paths.get(p))) None
-      else Some(spark.read.schema(ext).option("basePath", p).parquet(p)
-        .withColumn(DvFileCol,
-          expr(s"substring_index(_metadata.file_path, '$uuid/', -1)"))
-        .withColumn(DvPosCol, col("_metadata.row_index")))
-    }
-    val baseL = dropDeleted(
-      DirRead(eraScans.reduce(_.unionByName(_)), schema, renames)
-        .project(extraCols = Seq(DvFileCol, DvPosCol))
-        .select((schema.fieldNames.toIndexedSeq ++
-          Seq(DvFileCol, DvPosCol)).map(col): _*))
-    val matched = matchedRows(baseL)
+    val matched = matchedRows(readDir(spark, base.dataDir, lineage = true))
     // bounded collect: one row per TOUCHED FILE (never per data row) —
     // in the URI-encoded relative form `_metadata.file_path` carries,
     // decoded to on-disk names for the link exclusion
     val touchedEnc = matched.select(col(DvFileCol)).distinct()
       .collect().map(_.getString(0)).toSet
-    def decode(enc: String): String =
-      Paths.get(java.net.URI.create("file:///" + enc)).toString.stripPrefix("/")
-    val touchedDisk = touchedEnc.map(decode)
-    val eraOf: String => String = enc =>
-      specs.map(_._1).filter(s => s != "." && enc.startsWith(s + "/"))
-        .lastOption.getOrElse(".")
-    // the rewrite scan lists EXACTLY the touched files, per era (partition
-    // values still materialize from each era's own dirs via basePath);
-    // DV-deleted rows in those files anti-join away — a rewrite that
-    // copied them would resurrect them (the new files carry no DV entries)
-    val eraReads = touchedEnc.groupBy(eraOf).toSeq.map { case (sub, encs) =>
-      spark.read.schema(ext).option("basePath", eraBase(sub))
-        .parquet(encs.toSeq.sorted.map(e => s"${base.dataDir}/${decode(e)}"): _*)
-        .withColumn(DvFileCol,
-          expr(s"substring_index(_metadata.file_path, '$uuid/', -1)"))
-        .withColumn(DvPosCol, col("_metadata.row_index"))
-    }
-    val rowsTouched =
-      if (eraReads.isEmpty) spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      else dropDeleted(
-        DirRead(eraReads.reduce(_.unionByName(_)), schema, renames)
-          .project(extraCols = Seq(DvFileCol, DvPosCol)))
-        .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    val touchedDisk = touchedEnc.map(decodeRel)
+    // the rewrite scan lists EXACTLY the touched files, per era; its
+    // anti-join drops DV-deleted rows in them — a rewrite that copied them
+    // would resurrect them (the new files carry no DV entries)
+    val rowsTouched = readDir(spark, base.dataDir, lineage = true,
+      files = Some(touchedEnc)).drop(DvFileCol, DvPosCol)
     val (out, changes) = transform(rowsTouched)
     // rewritten rows stage under the CURRENT spec — touched data migrates
     // forward (the same direction the eventual OPTIMIZE takes the rest)
-    val (curSub, curCols) = specs.last
+    val (curSub, curCols) = readSpecs(base.dataDir).last
     val (dir, _) = writeStaged(root, Some(out), curCols, curSub,
       constraints = constraints)
     // hard-link every data file OUTSIDE the touched set, in place — each
@@ -4246,15 +4156,8 @@ object SnapshotStore {
     // logical names and read fine either way (coalesce legs null-fill)
     carryTableState(base.dataDir, dir, Some(schema))
     // deletion-vector carry: linked (untouched) files keep their deleted
-    // positions; entries for REWRITTEN files drop — their live rows just
-    // migrated to fresh files, so a kept entry would dangle (harmless at
-    // read, but accumulating forever)
-    dv.foreach { d =>
-      val kept = d.filter(!col("file").isin(touchedEnc.toSeq: _*))
-      if (!kept.isEmpty)
-        kept.coalesce(1).write.mode("overwrite")
-          .parquet(dvDir(dir).toString)
-    }
+    // positions; entries for REWRITTEN files drop
+    carryDv(spark, base.dataDir, dir, col("file").isin(touchedEnc.toSeq: _*))
     // no manifest carry: spanning snapshots hold none (alterPartitionSpec
     // drops it); the migrating OPTIMIZE rebuilds stats
     writeChanges(root, dir, changes)
@@ -4274,10 +4177,12 @@ object SnapshotStore {
     *   - writes `_dv/` = base's deletion vector ∪ the matched rows'
     *     `(file, pos)` positions — one tiny row per invalidated position.
     *
-    * Readers apply `_dv` as a broadcast anti-join ([[readDirLineage]]), so
-    * read overhead is a hash probe per row against deletes-since-last-
-    * OPTIMIZE (OPTIMIZE and every full-rewrite transaction materialize the
-    * vector away — the Delta compaction contract).
+    * Plain reads apply `_dv` as the [[GraftDvFilter]] predicate above the
+    * scan, and DML lineage reads as a broadcast anti-join on `(file, pos)`
+    * ([[readDir]]), so read overhead is a lookup per row against
+    * deletes-since-last-OPTIMIZE (OPTIMIZE and every full-rewrite
+    * transaction materialize the vector away — the Delta compaction
+    * contract).
     *
     * `matched` selects the rows the statement invalidates — it must be
     * row-preserving (filter/semi-join) over its input, which carries the
@@ -4293,15 +4198,12 @@ object SnapshotStore {
       replace: DataFrame => (DataFrame, DataFrame)): Snapshot = {
     import org.apache.spark.sql.functions.col
     commitLoop(root, maxAttempts, txn.toSeq) { base =>
-      val evolved = isEvolved(base.dataDir)
       // a spanning snapshot reads per era (the shared `_dv` applies to
       // every branch — DV keys are snapshot-dir-relative, unique across
       // eras); replacement rows land under the CURRENT spec's subtree so
       // the MoR commit migrates touched data the same direction the
       // eventual OPTIMIZE takes the rest
-      val m = matched(
-        if (evolved) readDirLineageEvolved(spark, base.dataDir)
-        else readDirLineage(spark, base.dataDir))
+      val m = matched(readDir(spark, base.dataDir, lineage = true))
       require(m.columns.contains(DvFileCol) && m.columns.contains(DvPosCol),
         "transactMoR: matched() must preserve the lineage columns " +
           s"($DvFileCol, $DvPosCol) — use filters/semi-joins, not projections")
@@ -4322,18 +4224,12 @@ object SnapshotStore {
       carryTableState(base.dataDir, dir, Some(readSchema(spark, base)))
       val newDv = m.select(col(DvFileCol).cast("string").as("file"),
         col(DvPosCol).cast("long").as("pos"))
-      val allDv =
-        if (hasDv(base.dataDir))
-          spark.read.parquet(dvDir(base.dataDir).toString).unionByName(newDv)
-        else newDv
-      // one tiny file: the vector is bounded by deletes since last
-      // OPTIMIZE, not by table size. A no-match statement on a vector-less
-      // base writes NO sidecar — an empty _dv would flip every later read
-      // onto the filter path (hasDv rides the hard links forever) for a
-      // vector that filters nothing.
-      if (hasDv(base.dataDir) || !newDv.isEmpty)
-        allDv.coalesce(1).write.mode("overwrite")
-          .parquet(dvDir(dir).toString)
+      // a no-match statement on a vector-less base writes NO sidecar — an
+      // empty _dv would flip every later read onto the filter path (hasDv
+      // rides the hard links forever) for a vector that filters nothing
+      if (hasDv(base.dataDir))
+        writeDv(dvFrame(spark, base.dataDir).unionByName(newDv), dir)
+      else if (!newDv.isEmpty) writeDv(newDv, dir)
       writeChanges(root, dir, changes)
       Staged(dir)
     }

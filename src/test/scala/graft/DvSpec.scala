@@ -13,9 +13,9 @@ import graft.sources.{GraftCatalog, SnapshotStore}
   * `_dv/` positional sidecar plus appended post-images and NEVER rewrite a
   * data file — the Delta-DV / Iceberg-positional-delete shape that keeps a
   * scattered point-delete O(matched rows), not O(touched files), at 100 TB.
-  * The read side (Scala API and catalog SQL alike) applies the vector as a
-  * broadcast anti-join; OPTIMIZE and full-rewrite commits materialize it
-  * away.
+  * The read side (Scala API and catalog SQL alike) filters the vector out
+  * with the GraftDvFilter predicate (DML lineage reads anti-join it);
+  * OPTIMIZE and full-rewrite commits materialize it away.
   */
 class DvSpec extends SparkSpec {
   import spark.implicits._
