@@ -11,7 +11,7 @@ import java.nio.file.{Files, Path, Paths}
   * clears whatever the final repetition left.
   */
 object GateTmp {
-  private val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_gates")
+  private[graft] val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_gates")
   private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Fresh (emptied) deterministic directory for `name`. */

@@ -884,8 +884,8 @@ object MatView {
     * only the buckets containing touched keys and hard-links the rest, so
     * write cost is O(min(touched keys, buckets)/buckets · view), not
     * O(view) — the partition-scoped copy-on-write granularity (q93 /
-    * ProbeCow) applied to view maintenance. The column is layout state;
-    * consumers project it away.
+    * the `cow` layer probe) applied to view maintenance. The column is
+    * layout state; consumers project it away.
     */
   val BucketCol = "mv_bucket"
   val DefaultBuckets = 64

@@ -2415,7 +2415,7 @@ object SnapshotStore {
     val dir = s"${at(root, version).dataDir}/_changes"
     val base =
       if (Files.exists(Paths.get(dir))) {
-        val raw = spark.read.parquet(dir)
+        val raw = spark.read.parquet(sidecarPaths(spark, Seq(dir)): _*)
         // a hard-linked all-inserts frame (see linkInsertChanges) stores
         // no _change_type — the convention means every row is an insert
         if (raw.columns.exists(_.equalsIgnoreCase(ChangeTypeCol))) raw
@@ -2431,8 +2431,9 @@ object SnapshotStore {
     * over every version's `_changes/` dir — plan size stays O(1) in the
     * version count (a per-version union would build a 10⁴-node plan on a
     * long-lived table and hurt the driver long before any data moves).
-    * `_commit_version` is recovered from each file's snapshot-dir UUID via
-    * a broadcast lookup (one tiny row per version).
+    * Spark's file listing is per feed file, not per version (see
+    * [[sidecarPaths]]). `_commit_version` is recovered from each file's
+    * snapshot-dir UUID via a broadcast lookup (one tiny row per version).
     */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
@@ -2449,7 +2450,7 @@ object SnapshotStore {
       val lookup = withFeed.map { case (v, s) =>
         (Paths.get(s.dataDir).getFileName.toString, v) }
         .toDF("__dir", CommitVersionCol)
-      val paths = withFeed.map { case (_, s) => s"${s.dataDir}/_changes" }
+      val paths = sidecarPaths(spark, withFeed.map { case (_, s) => s"${s.dataDir}/_changes" })
       val schema = readSchema(spark, at(root, toVersion))
       val log = feedRenames(root).filter(_._1 <= toVersion)
       // ONE multi-path scan under an EXPLICIT requested schema (not
@@ -2836,7 +2837,7 @@ object SnapshotStore {
     import org.apache.spark.sql.functions.{col, concat, expr, input_file_name, lit, regexp_replace}
     val oldManifest = Paths.get(baseDir, "_manifest")
     if (!Files.isDirectory(oldManifest)) return
-    val old = spark.read.parquet(oldManifest.toString)
+    val old = spark.read.parquet(sidecarPaths(spark, Seq(oldManifest.toString)): _*)
     val statsCols = old.columns.toSeq.collect {
       case c if c.startsWith("min_") => c.stripPrefix("min_") }
     val bloomCols = old.columns.toSeq.collect {
@@ -2866,7 +2867,7 @@ object SnapshotStore {
   }
 
   def manifest(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.read.parquet(s"${snap.dataDir}/_manifest")
+    spark.read.parquet(sidecarPaths(spark, Seq(s"${snap.dataDir}/_manifest")): _*)
 
   /** File-skipping read: keep the files whose manifest row satisfies
     * `mayMatch` (a predicate over `min_*` / `max_*` — e.g.
@@ -3256,7 +3257,28 @@ object SnapshotStore {
     * deleted position.
     */
   private def dvFrame(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dvDir(dir).toString)
+    spark.read.parquet(sidecarPaths(spark, Seq(dvDir(dir).toString)): _*)
+
+  /** What to read sidecar dirs `dirs` (`_dv`, `_changes`, `_manifest`, all
+    * flat parquet) by: their files, since Spark's hidden-path filter flags
+    * an underscore-named root and logs "All paths were ignored" although it
+    * reads the files. Spark checks and lists each file root as it would a
+    * dir root, so a many-file read pays per file: a `changes` feed over
+    * 1000 four-file versions builds in 1.4–1.7× the time of its 1000 dir
+    * roots on a 4-core box (a `*.parquet` glob per dir costs the same).
+    * The dirs stay the roots only where the files alone would cross the
+    * parallel-listing threshold and the dirs would not: listing that many
+    * roots costs Spark a job.
+    */
+  private def sidecarPaths(spark: SparkSession, dirs: Seq[String]): Seq[String] = {
+    val files = dirs.flatMap { d =>
+      val s = Files.list(Paths.get(d))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.sorted
+      finally s.close()
+    }
+    val limit = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+    if (files.isEmpty || (files.size > limit && dirs.size <= limit)) dirs else files
+  }
 
   /** Write deletion vector `dv` as staged dir `dir`'s sidecar — one tiny
     * file: the vector is bounded by deletes since the last OPTIMIZE, not by

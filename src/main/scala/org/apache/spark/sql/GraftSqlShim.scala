@@ -56,4 +56,11 @@ object GraftSqlShim {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Blocks until the listener bus has delivered every queued event, so a
+    * listener's totals cover every job that already ran. The bus is
+    * private to Spark's own packages.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -114,4 +114,46 @@ class ReadShapeSpec extends SparkSpec {
         p }.isEmpty, s"partitionBy ${parts.mkString(",")}:\n$plan")
     }
   }
+
+  test("sidecar reads (deletion vector, change feed, manifest) log no path warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    import graft.sources.SqlDml
+    val dv = tmpRoot()
+    SnapshotStore.init(spark, dv, rows(0L until 12L))
+    SnapshotStore.setDmlMode(dv, SnapshotStore.MergeOnRead)
+    SqlDml.execute(spark, "DELETE FROM t WHERE id IN (1, 7)", Map("t" -> dv))
+    val feed = tmpRoot()
+    SnapshotStore.init(spark, feed, rows(0L until 12L), cdcKeys = Seq("id"))
+    SqlDml.execute(spark, "UPDATE t SET v = 0 WHERE id = 3", Map("t" -> feed))
+    val head = SnapshotStore.latest(feed)
+    val stats = tmpRoot()
+    SnapshotStore.init(spark, stats, rows(0L until 12L), statsCols = Seq("id"))
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("sidecar-capture", null, null, true,
+      Property.EMPTY_ARRAY) {
+      // DataSource flags an underscore-named root; FileStreamSink warns
+      // on a single read path it cannot stat
+      override def append(e: LogEvent): Unit =
+        if (Seq("DataSource", "FileStreamSink").exists(e.getLoggerName.endsWith))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    capture.start()
+    root.addAppender(capture)
+    try {
+      assert(SnapshotStore.read(spark, dv).select("id").as[Long].collect().sorted.toSeq ==
+        (0L until 12L).filterNot(Set(1L, 7L)))
+      assert(SnapshotStore.changesAt(spark, feed, head.version).count() == 2)
+      assert(SnapshotStore.changes(spark, feed, 0, head.version).count() == 14)
+      assert(SnapshotStore.manifest(spark, SnapshotStore.latest(stats)).count() > 0)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warned.isEmpty, warned.asScala.mkString("\n"))
+  }
 }

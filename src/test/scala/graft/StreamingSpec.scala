@@ -673,7 +673,9 @@ class StreamingSpec extends SparkSpec {
     // stub of the remote /update-salary service (Server/main.go:301):
     // returns the FIXTURES A.4 stand-in so the result is exactly q23's.
     // `mode` picks how it answers; `exchanges` counts requests per client
-    // port, i.e. per connection
+    // port, i.e. per connection. A port is forgotten when the stub closes
+    // its connection: the server closing first leaves the client port free
+    // of TIME_WAIT, so the kernel may hand it to a fresh connection
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     @volatile var mode = "length"
     val exchanges = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
@@ -689,9 +691,11 @@ class StreamingSpec extends SparkSpec {
         mode match {
           // a connection closed while idle: the client's next request on
           // it finds it closed before any byte of a response
-          case "idle-close" if nth > 1 => x.close()
+          case "idle-close" if nth > 1 =>
+            exchanges.remove(x.getRemoteAddress.getPort); x.close()
           case "chunked" => x.sendResponseHeaders(200, 0); x.getResponseBody.write(b)
           case "close" =>
+            exchanges.remove(x.getRemoteAddress.getPort)
             x.getResponseHeaders.set("Connection", "close")
             x.sendResponseHeaders(200, b.length); x.getResponseBody.write(b)
           case "500" =>
@@ -734,6 +738,7 @@ class StreamingSpec extends SparkSpec {
       // connection can meet is a close before its reply, and "idle-close"
       // does that to each connection's second request
       for (m <- Seq("chunked", "close", "idle-close")) {
+        exchanges.clear()
         mode = m
         assert(viaHttp.collect().sortBy(_.u_id).toSeq == pure, s"stub mode $m")
       }
