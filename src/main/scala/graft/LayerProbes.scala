@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.{LongType, Metadata, MetadataBuilder,
   StructField, StructType}
 import graft.sources.{CopyInto, GraftCatalog, MatView, MvRewrite,
   SnapshotStore, SqlDml}
+import graft.streaming.SnapshotMergeSink
 
 /** Per-layer scale probes: one table of probes, each timing the phases of
   * one engine layer (commit plane, maintenance, planning, read, gate) at 1×
@@ -250,12 +251,21 @@ object LayerProbes {
   val probes: Seq[Probe] = Seq(
     // Copy-on-write UPDATE touching one of 24 partitions: pinned to that
     // partition's rewrite plus O(#files) links; the all-partition UPDATE is
-    // the O(table) contrast.
+    // the O(table) contrast. The streaming upsert sink's 1000-row keyed
+    // micro-batches (one inside one partition, one spread over all 24)
+    // take the full rewrite: the sink's cost beside the partial route's.
     Probe("commit", "cow", 1000000, (spark, n) => {
-      val root = table(spark, s"probe_cow_$n", rows(spark, 0, n, "id * 3 AS v",
-        "CAST(id % 24 AS STRING) AS part"), partitionBy = Seq("part"))
+      def parted(from: Long, to: Long, v: String): DataFrame =
+        rows(spark, from, to, v, "CAST(id % 24 AS STRING) AS part")
+      val root = table(spark, s"probe_cow_$n", parted(0, n, "id * 3 AS v"),
+        partitionBy = Seq("part"))
+      def upsert(batchId: Long, batch: DataFrame): () => Any = () =>
+        SnapshotMergeSink.upsertBatch(root, "id", "probe-cow")(batch, batchId)
       Seq("one-partition" -> dml(spark, root, "UPDATE t SET v = v + 1 WHERE part = '7'"),
-        "all-partitions" -> dml(spark, root, "UPDATE t SET v = v + 1 WHERE id >= 0"))
+        "all-partitions" -> dml(spark, root, "UPDATE t SET v = v + 1 WHERE id >= 0"),
+        "upsert-one-partition" -> upsert(0,
+          parted(0, 24000, "id * 3 + 2 AS v").where("part = '7'")),
+        "upsert-all-partitions" -> upsert(1, parted(0, 1000, "id * 3 + 3 AS v")))
     }),
     // A scattered DELETE (one row per thousand) under both DML modes:
     // copy-on-write rewrites every partition holding a match (3 of the 24,

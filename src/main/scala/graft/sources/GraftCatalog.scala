@@ -1897,13 +1897,9 @@ private[sources] class GraftTable(spark: SparkSession, tableName: String,
   override def truncateTable(): Boolean = {
     require(!pinned, s"cannot truncate $tableName pinned at version " +
       s"${snap.version} (time travel is read-only)")
-    if (SnapshotStore.cdcKeys(root).nonEmpty)
-      SnapshotStore.transactWithChanges(spark, root) { base =>
-        import org.apache.spark.sql.functions.lit
-        (base.limit(0),
-          base.withColumn(SnapshotStore.ChangeTypeCol, lit("delete")))
-      }
-    else SnapshotStore.transact(spark, root)(base => base.limit(0))
+    SnapshotStore.rewriteRows(spark, root)(None)(base => (base.limit(0),
+      Some(base.withColumn(SnapshotStore.ChangeTypeCol,
+        org.apache.spark.sql.functions.lit("delete")))))
     true
   }
 

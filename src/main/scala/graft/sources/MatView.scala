@@ -725,7 +725,7 @@ object MatView {
             Seq(qMerge(col("m.val_qsk"), col("d.dqsk")).as("val_qsk"))
           else Nil)
         val merged = withDerived(
-          mv.alias("m").join(broadcast(algebraic.alias("d")), joinCond, "full_outer")
+          mv.alias("m").join(algebraic.alias("d"), joinCond, "full_outer")
             .select(mergedCols: _*)
             .filter(col("n_rows") > 0), aggs)
         if (!anyRecompute) merged
@@ -1164,7 +1164,6 @@ object MatView {
         if (sameName) l.join(r, lKeys, jt)
         else l.join(r,
           pairs.map { case (lk, rk) => l(lk) === r(rk) }.reduce(_ && _), jt)
-      val feedKeys = SnapshotStore.cdcKeys(mvRoot)
       val ct = SnapshotStore.ChangeTypeCol
       // the transform closes over snapshots pinned ABOVE — verify the pins
       // still hold on every commit attempt (see refreshJoin scaladoc)
@@ -1206,13 +1205,10 @@ object MatView {
           // recomputed rows arrive (insert) — the Iceberg CDC
           // delete+insert form, algebraically exact for any downstream
           // delta consumer (an untouched-in-value key's pair cancels)
-          val changes =
-            if (feedKeys.isEmpty)
-              out.limit(0).withColumn(ct, lit("insert"))
-            else memberView(rowsTouched, anti = false)
-              .withColumn(ct, lit("delete"))
-              .unionByName(recomputed.select(cols: _*)
-                .withColumn(ct, lit("insert")))
+          val changes = memberView(rowsTouched, anti = false)
+            .withColumn(ct, lit("delete"))
+            .unionByName(recomputed.select(cols: _*)
+              .withColumn(ct, lit("insert")))
           (out, changes)
         }
       }

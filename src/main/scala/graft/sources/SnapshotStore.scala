@@ -79,12 +79,13 @@ object SnapshotStore {
   final class ConstraintViolationException(msg: String) extends RuntimeException(msg)
 
   /** A concurrent commit flipped the table's partition-layout state
-    * (spec evolved, or a migration healed it) between an append's routing
-    * decision and its staging attempt — the caller re-routes onto the
-    * path matching the NEW state. Checked per optimistic attempt, so the
-    * window the routing decision alone would leave is closed.
+    * (spec evolved, or a migration healed it) between a write router's
+    * decision ([[routeWrite]], [[rewriteRows]]) and its staging attempt —
+    * the router re-routes onto the path matching the NEW state
+    * ([[rerouted]]). Checked per optimistic attempt, so the window the
+    * routing decision alone would leave is closed.
     */
-  private[sources] final class LayoutChangedException(msg: String)
+  private final class LayoutChangedException(msg: String)
     extends IllegalStateException(msg)
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
@@ -132,7 +133,7 @@ object SnapshotStore {
   private[graft] def isEvolved(dir: String): Boolean = Files.exists(specsFile(dir))
 
   /** True when the table's HEAD snapshot spans partition specs — the
-    * routing probe DML callers use to pick the per-era scoped
+    * probe [[rewriteRows]] routes on to pick the per-era scoped
     * copy-on-write path ([[transactPartialWithChanges]] with
     * `evolvedScoped`).
     */
@@ -2252,10 +2253,9 @@ object SnapshotStore {
     *     ([[appendLinked]]);
     *   - a dynamic partition overwrite (`partitionOverwriteMode=dynamic`
     *     on a partitioned table, the standard Spark contract) replaces
-    *     ONLY the partitions present in the incoming data — literally
-    *     "rewrite touched partitions, hard-link the others", the
-    *     copy-on-write staging of partial DML. It has no cross-layout
-    *     meaning, so it refuses while a spec evolution is pending;
+    *     ONLY the partitions present in the incoming data
+    *     ([[overwritePartitions]]). It has no cross-layout meaning, so it
+    *     refuses while a spec evolution is pending;
     *   - any other overwrite rewrites the table in the current spec,
     *     which also HEALS a spanning table back to single-spec.
     * A partition-scoped attempt that finds the layout changed under it
@@ -2265,49 +2265,41 @@ object SnapshotStore {
       overwrite: Boolean, maxAttempts: Int, txn: Option[Txn],
       extraTxns: Seq[Txn], pinCheck: () => Boolean, onReplay: () => Unit,
       stagedHook: String => Unit = _ => ())(
-      rows: DataFrame => DataFrame): Snapshot = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    def route(): Snapshot = {
-      val dynamic = overwrite &&
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-          .equalsIgnoreCase("dynamic")
-      require(!dynamic || !isEvolved(latest(root).dataDir),
-        s"dynamic partition overwrite on $root while a partition-spec " +
-          "evolution is pending; OPTIMIZE (full rewrite) to migrate first")
-      val parts = partitionCols(root)
-      if (!overwrite)
-        appendLinked(spark, root, maxAttempts, txn.toSeq ++ extraTxns,
-          pinCheck, onReplay, stagedHook)(rows)
-      else if (dynamic && parts.nonEmpty)
-        transactPartialWithChanges(spark, root, maxAttempts, txn = txn,
-            extraTxns = extraTxns, pinCheck = pinCheck, onReplay = onReplay,
-            stagedHook = stagedHook) { base =>
-          val newVals = rows(base).select(parts.map(col): _*).distinct()
-          val keys = cdcKeys(root)
-          if (keys.nonEmpty) {
-            // table-wide key uniqueness: an overwritten partition must not
-            // introduce a key living in a KEPT partition
-            val kept = base.join(broadcast(newVals), parts, "left_anti")
-            val clash = rows(base).join(kept, keys, "left_semi").limit(1)
-            require(clash.isEmpty,
-              s"dynamic overwrite of $root carries key(s) " +
-                s"(${keys.mkString(", ")}) already live in a kept partition")
-          }
-          base.join(broadcast(newVals), parts, "left_semi")
-        } { old =>
-          val a = rows(old)
-          val keys = cdcKeys(root)
-          (a, if (keys.isEmpty) a.limit(0).withColumn(ChangeTypeCol, lit("insert"))
-            else diffChanges(old, a, keys))
-        }
-      else
-        transactImpl(spark, root, maxAttempts, Nil, txn, Nil,
-          stagedHook = stagedHook, extraTxns = extraTxns, pinCheck = pinCheck,
-          onReplay = onReplay)(base => (rows(base), None))
-    }
+      rows: DataFrame => DataFrame): Snapshot = rerouted {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val dynamic = overwrite &&
+      spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        .equalsIgnoreCase("dynamic")
+    require(!dynamic || !isEvolved(latest(root).dataDir),
+      s"dynamic partition overwrite on $root while a partition-spec " +
+        "evolution is pending; OPTIMIZE (full rewrite) to migrate first")
+    val parts = partitionCols(root)
+    if (!overwrite)
+      appendLinked(spark, root, maxAttempts, txn.toSeq ++ extraTxns,
+        pinCheck, onReplay, stagedHook)(rows)
+    else if (dynamic && parts.nonEmpty)
+      overwritePartitions(spark, root, maxAttempts, txn, extraTxns, pinCheck,
+          onReplay, stagedHook)({ base =>
+        val newVals = broadcast(rows(base).select(parts.map(col): _*).distinct())
+        (base.join(newVals, parts, "left_semi"), base.join(newVals, parts, "left_anti"))
+      })(rows)
+    else
+      transactImpl(spark, root, maxAttempts, Nil, txn, Nil,
+        stagedHook = stagedHook, extraTxns = extraTxns, pinCheck = pinCheck,
+        onReplay = onReplay)(base => (rows(base), None))
+  }
+
+  /** Run `route` again while a partition-scoped attempt finds the layout
+    * changed under it ([[LayoutChangedException]]) — e.g. a migrating
+    * OPTIMIZE heals a spanning table to an UNPARTITIONED single-spec layout
+    * mid-statement, leaving the partial route no granularity to scope by.
+    * `route` reads the layout itself, so each retry routes against the
+    * CURRENT state; the race never surfaces as "re-run the statement".
+    */
+  private def rerouted(route: => Snapshot): Snapshot = {
     var reroutes = 0
     while (true) {
-      try return route()
+      try return route
       catch {
         case e: LayoutChangedException =>
           reroutes += 1
@@ -2315,6 +2307,40 @@ object SnapshotStore {
       }
     }
     sys.error("unreachable")
+  }
+
+  /** Partition overwrite — the copy-on-write staging of partial DML with
+    * a replacement instead of a transform: `replaced` splits the base into
+    * (the rows of the partitions being overwritten, every other row), the
+    * first set is replaced by `rows` and every other partition hard-links.
+    * Shared by static `INSERT OVERWRITE … PARTITION (…)` and the dynamic
+    * overwrite of [[routeWrite]]. On a CDC table the new rows must not carry
+    * a key live in a KEPT partition (table-wide key uniqueness: its feed
+    * would emit 'insert' for a live key — replica poison), and the change
+    * set is the keyed diff of the replaced partitions against the new rows.
+    */
+  private[graft] def overwritePartitions(spark: SparkSession, root: String,
+      maxAttempts: Int = 10, txn: Option[Txn] = None, extraTxns: Seq[Txn] = Nil,
+      pinCheck: () => Boolean = () => true, onReplay: () => Unit = () => (),
+      stagedHook: String => Unit = _ => ())(
+      replaced: DataFrame => (DataFrame, DataFrame))(
+      rows: DataFrame => DataFrame): Snapshot = {
+    val keys = cdcKeys(root)
+    transactPartialWithChanges(spark, root, maxAttempts, txn,
+        extraTxns = extraTxns, pinCheck = pinCheck, onReplay = onReplay,
+        stagedHook = stagedHook)({ base =>
+      val (touched, kept) = replaced(base)
+      if (keys.nonEmpty) {
+        val clash = rows(base).join(kept, keys, "left_semi").limit(1)
+        require(clash.isEmpty,
+          s"partition overwrite of $root carries key(s) " +
+            s"(${keys.mkString(", ")}) already live in a kept partition")
+      }
+      touched
+    })(orRows { old =>
+      val a = rows(old)
+      (a, Option.when(keys.nonEmpty)(diffChanges(old, a, keys)))
+    })
   }
 
   /** O(batch) append: the new version's dir hard-links every base data
@@ -2415,7 +2441,7 @@ object SnapshotStore {
     val dir = s"${at(root, version).dataDir}/_changes"
     val base =
       if (Files.exists(Paths.get(dir))) {
-        val raw = spark.read.parquet(sidecarPaths(spark, Seq(dir)): _*)
+        val raw = spark.read.parquet(hiddenDirPaths(spark, Seq(dir)): _*)
         // a hard-linked all-inserts frame (see linkInsertChanges) stores
         // no _change_type — the convention means every row is an insert
         if (raw.columns.exists(_.equalsIgnoreCase(ChangeTypeCol))) raw
@@ -2432,7 +2458,7 @@ object SnapshotStore {
     * version count (a per-version union would build a 10⁴-node plan on a
     * long-lived table and hurt the driver long before any data moves).
     * Spark's file listing is per feed file, not per version (see
-    * [[sidecarPaths]]). `_commit_version` is recovered from each file's
+    * [[hiddenDirPaths]]). `_commit_version` is recovered from each file's
     * snapshot-dir UUID via a broadcast lookup (one tiny row per version).
     */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
@@ -2450,7 +2476,7 @@ object SnapshotStore {
       val lookup = withFeed.map { case (v, s) =>
         (Paths.get(s.dataDir).getFileName.toString, v) }
         .toDF("__dir", CommitVersionCol)
-      val paths = sidecarPaths(spark, withFeed.map { case (_, s) => s"${s.dataDir}/_changes" })
+      val paths = hiddenDirPaths(spark, withFeed.map { case (_, s) => s"${s.dataDir}/_changes" })
       val schema = readSchema(spark, at(root, toVersion))
       val log = feedRenames(root).filter(_._1 <= toVersion)
       // ONE multi-path scan under an EXPLICIT requested schema (not
@@ -2837,7 +2863,7 @@ object SnapshotStore {
     import org.apache.spark.sql.functions.{col, concat, expr, input_file_name, lit, regexp_replace}
     val oldManifest = Paths.get(baseDir, "_manifest")
     if (!Files.isDirectory(oldManifest)) return
-    val old = spark.read.parquet(sidecarPaths(spark, Seq(oldManifest.toString)): _*)
+    val old = spark.read.parquet(hiddenDirPaths(spark, Seq(oldManifest.toString)): _*)
     val statsCols = old.columns.toSeq.collect {
       case c if c.startsWith("min_") => c.stripPrefix("min_") }
     val bloomCols = old.columns.toSeq.collect {
@@ -2867,7 +2893,7 @@ object SnapshotStore {
   }
 
   def manifest(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.read.parquet(sidecarPaths(spark, Seq(s"${snap.dataDir}/_manifest")): _*)
+    spark.read.parquet(hiddenDirPaths(spark, Seq(s"${snap.dataDir}/_manifest")): _*)
 
   /** File-skipping read: keep the files whose manifest row satisfies
     * `mayMatch` (a predicate over `min_*` / `max_*` — e.g.
@@ -2965,7 +2991,8 @@ object SnapshotStore {
       files match {
         case None if sub == "." => Some(reader.parquet(dir))
         case None if !Files.isDirectory(Paths.get(at)) => None // nothing appended yet
-        case None => Some(reader.option("basePath", at).parquet(at))
+        case None => Some(reader.option("basePath", at)
+          .parquet(hiddenDirPaths(spark, Seq(at)): _*))
         case Some(fs) =>
           val share = fs.filter(eraOf(_) == sub).toSeq.sorted
           if (share.isEmpty) None
@@ -3257,23 +3284,29 @@ object SnapshotStore {
     * deleted position.
     */
   private def dvFrame(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(sidecarPaths(spark, Seq(dvDir(dir).toString)): _*)
+    spark.read.parquet(hiddenDirPaths(spark, Seq(dvDir(dir).toString)): _*)
 
-  /** What to read sidecar dirs `dirs` (`_dv`, `_changes`, `_manifest`, all
-    * flat parquet) by: their files, since Spark's hidden-path filter flags
-    * an underscore-named root and logs "All paths were ignored" although it
-    * reads the files. Spark checks and lists each file root as it would a
-    * dir root, so a many-file read pays per file: a `changes` feed over
-    * 1000 four-file versions builds in 1.4–1.7× the time of its 1000 dir
-    * roots on a 4-core box (a `*.parquet` glob per dir costs the same).
-    * The dirs stay the roots only where the files alone would cross the
+  /** What to read underscore-named dirs `dirs` by — the sidecars (`_dv`,
+    * `_changes`, `_manifest`, all flat parquet) and a later spec era's
+    * `_spec<i>` root (`col=value` dirs, or the files of an unpartitioned
+    * era; read with `basePath` = the era root): their visible top-level
+    * entries, since Spark's hidden-path filter flags an underscore-named
+    * root and logs "All paths were ignored" although it reads the files.
+    * Spark checks and lists each entry root as it would a dir root, so a
+    * many-file read pays per file: a `changes` feed over 1000 four-file
+    * versions builds in 1.4–1.7× the time of its 1000 dir roots on a
+    * 4-core box (a `*.parquet` glob per dir costs the same). The dirs stay
+    * the roots only where the entries alone would cross the
     * parallel-listing threshold and the dirs would not: listing that many
     * roots costs Spark a job.
     */
-  private def sidecarPaths(spark: SparkSession, dirs: Seq[String]): Seq[String] = {
+  private def hiddenDirPaths(spark: SparkSession, dirs: Seq[String]): Seq[String] = {
     val files = dirs.flatMap { d =>
       val s = Files.list(Paths.get(d))
-      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.sorted
+      try s.iterator().asScala.filterNot { p =>
+        val n = p.getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }.map(_.toString).toList.sorted
       finally s.close()
     }
     val limit = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
@@ -3973,21 +4006,84 @@ object SnapshotStore {
       bloomCols, bloomExpectedItems, stagedHook, extraTxns, pinCheck,
       onReplay)(df => (transform(df), None))
 
-  /** [[transact]] variant whose transform ALSO supplies the commit's change
-    * rows (data columns + [[ChangeTypeCol]]) — the statement-integrated CDC
-    * path: an operation that already knows each row's fate (SqlDml's
-    * UPDATE/DELETE scan, MERGE's full-outer join) emits its change set
-    * directly instead of paying the generic post-hoc diff, which shuffles
-    * BOTH full snapshots on the key. The supplied frame must be
-    * semantically identical to `diffChanges(base, out)` — CdcSpec pins
-    * that equivalence property for every SqlDml statement shape.
+  /** The row-level write router behind UPDATE, DELETE, MERGE, TRUNCATE
+    * and the streaming upsert/apply sinks. `matched`, when given, selects
+    * the rows the write touches (a row-preserving filter or semi-join over
+    * its input); `build` maps the rows to rewrite to (their replacement,
+    * the commit's change rows when the caller can name them). The route
+    * depends only on the table and the call:
+    *   1. `matched` given, merge-on-read table → deletion vectors
+    *      ([[transactMoR]]): `build` sees the matched rows;
+    *   2. `matched` given, partitioned or spec-spanning table → partial
+    *      copy-on-write ([[transactPartialWithChanges]], per era on a
+    *      spanning table): `build` sees the touched partitions or files;
+    *   3. otherwise → the full rewrite ([[transactImpl]]): `build` sees the
+    *      whole snapshot.
+    * `matched = None` (a statement that may change any row: MERGE with a
+    * NOT MATCHED BY SOURCE arm, TRUNCATE) always takes the full rewrite.
+    * So must a write to a CDC table whose `build` names no change rows (a
+    * CDC replica's apply, [[upsertRows]]): the full rewrite's generic keyed
+    * diff of the staged read-back supplies them, while a scoped route
+    * refuses the missing frame ([[orRows]]). Change rows are never
+    * evaluated on a table without a feed. A layout change mid-statement
+    * re-routes ([[rerouted]]).
     */
-  def transactWithChanges(spark: SparkSession, root: String, maxAttempts: Int = 10,
-      statsCols: Seq[String] = Nil, txn: Option[Txn] = None,
-      constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil)(
-      transform: DataFrame => (DataFrame, DataFrame)): Snapshot =
-    transactImpl(spark, root, maxAttempts, statsCols, txn, constraints)(
-      df => { val (out, ch) = transform(df); (out, Some(ch)) })
+  private[graft] def rewriteRows(spark: SparkSession, root: String,
+      maxAttempts: Int = 10, txn: Option[Txn] = None)(
+      matched: Option[DataFrame => DataFrame])(
+      build: DataFrame => (DataFrame, Option[DataFrame])): Snapshot = rerouted {
+    matched match {
+      case Some(m) if dmlMode(root) == MergeOnRead =>
+        transactMoR(spark, root, maxAttempts, txn)(m)(orRows(build))
+      case Some(m) if partitionCols(root).nonEmpty || spansSpecs(root) =>
+        transactPartialWithChanges(spark, root, maxAttempts, txn,
+          evolvedScoped = true)(m)(orRows(build))
+      case _ => transactImpl(spark, root, maxAttempts, Nil, txn, Nil)(build)
+    }
+  }
+
+  /** A keyed upsert through the [[rewriteRows]] routes, behind the
+    * streaming upsert and CDC-apply sinks: every row whose `keyCol` value
+    * `keys` carries is replaced by `rows` (the new rows, aligned to the
+    * columns of the frame they are given); `changes`, when given, names
+    * the change rows against any frame holding every row the keys touch.
+    * The key match is handed over only on a merge-on-read table, and there
+    * only with `changes` or without a feed (a CDC table's generic diff
+    * needs the full rewrite). A copy-on-write upsert takes the full
+    * rewrite on any layout: a micro-batch's keys scatter over the
+    * partitions, and there the partial route's touched-partition and
+    * touched-file scans and its shuffle by partition cost more than the
+    * partitions it leaves alone (`LayerProbes cow`: a 1000-key batch over
+    * all 24 partitions of 10M rows takes 11 jobs and 5.0–5.3 s partial
+    * against 5 jobs and 3.2–3.6 s full, 4-core box). On merge-on-read
+    * every matched row is deleted, so the replacement is `rows` alone: the
+    * anti-join the full rewrite keeps neighbors with would be empty there,
+    * but Spark cannot see that and would run its stages on every action
+    * over the replacement.
+    */
+  private[graft] def upsertRows(spark: SparkSession, root: String,
+      txn: Option[Txn], keyCol: String, keys: DataFrame)(
+      rows: DataFrame => DataFrame)(
+      changes: Option[DataFrame => DataFrame]): Snapshot = {
+    import org.apache.spark.sql.functions.broadcast
+    val touched = keys.select(keyCol).distinct()
+    if (dmlMode(root) == MergeOnRead && (changes.nonEmpty || cdcKeys(root).isEmpty))
+      rewriteRows(spark, root, txn = txn)(Some(
+        base => base.join(broadcast(touched), Seq(keyCol), "left_semi")))(
+        m => (rows(m), changes.map(_(m))))
+    else rewriteRows(spark, root, txn = txn)(None)(
+      base => (base.join(touched, Seq(keyCol), "left_anti")
+        .unionByName(rows(base)), changes.map(_(base))))
+  }
+
+  /** `build` in the `(rows, change rows)` shape of the scoped stagings. An
+    * absent change frame stands in as the rows themselves: it is never
+    * read on a table without a feed, and [[writeChanges]] refuses it (no
+    * [[ChangeTypeCol]]) on one.
+    */
+  private def orRows(build: DataFrame => (DataFrame, Option[DataFrame])):
+      DataFrame => (DataFrame, DataFrame) =
+    df => { val (out, ch) = build(df); (out, ch.getOrElse(out)) }
 
   /** COPY-ON-WRITE transaction over a PARTITIONED table — the DML staging
     * that survives 100 TB. A statement that edits rows in k of n
@@ -4011,7 +4107,7 @@ object SnapshotStore {
     * validated by the commit that wrote them or by ADD CONSTRAINT's
     * existing-row scan — the Delta rule). `transform` must return the
     * table's full schema; change rows (CDC tables) come from the
-    * statement's own plan, as in [[transactWithChanges]].
+    * statement's own plan, as on every route of [[rewriteRows]].
     */
   def transactPartialWithChanges(spark: SparkSession, root: String,
       maxAttempts: Int = 10, txn: Option[Txn] = None,
@@ -4026,10 +4122,9 @@ object SnapshotStore {
     require(parts.nonEmpty || evolvedScoped,
       s"transactPartialWithChanges requires a partitioned table ($root)")
     // NO entry-time layout require: the per-attempt check below throws
-    // LayoutChangedException, which append()'s router absorbs by
-    // re-routing while DML callers surface it loudly — an entry require
-    // would turn the route-then-evolve race into a user-facing abort on
-    // the one path built to absorb it
+    // LayoutChangedException, which the routers absorb by re-routing
+    // ([[rerouted]]) — an entry require would turn the route-then-evolve
+    // race into a user-facing abort on the one path built to absorb it
     commitLoop(root, maxAttempts, txn.toSeq ++ extraTxns, pinCheck,
         onReplay) { base =>
       if (isEvolved(base.dataDir)) {
@@ -4257,8 +4352,8 @@ object SnapshotStore {
     }
   }
 
-  /** The full-rewrite transaction behind [[transact]] and
-    * [[transactWithChanges]]: the transform's output is staged as the
+  /** The full-rewrite transaction behind [[transact]] and the full route
+    * of [[rewriteRows]]: the transform's output is staged as the
     * whole new snapshot in the current spec (healing any spec span and
     * rename mapping), with no cluster columns — OPTIMIZE hands it frames
     * already range- or z-order-shaped. EVERY staged version pins its

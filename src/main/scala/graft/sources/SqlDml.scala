@@ -78,29 +78,6 @@ object SqlDml {
     SnapshotStore.readSchema(spark, SnapshotStore.latest(root)).fields
       .find(_.metadata.contains("identity.start")).map(_.name)
 
-  /** Re-evaluate a statement's staging ROUTE when a concurrent layout
-    * transition invalidated the one already chosen — e.g. a migrating
-    * OPTIMIZE heals a spec-spanning table to an UNPARTITIONED single-spec
-    * layout mid-statement, so the partial (partition-scoped) route it
-    * picked has no granularity left to scope by. The same absorption
-    * `append()`'s router performs: the race re-routes instead of
-    * surfacing to the USER as a "re-run the statement" error. The route
-    * conditions (dmlMode / partitionCols / spansSpecs) are re-read inside
-    * `f`, so each retry routes against the CURRENT layout.
-    */
-  private def reroute[T](f: => T): T = {
-    var attempts = 0
-    while (true) {
-      try return f
-      catch {
-        case e: SnapshotStore.LayoutChangedException =>
-          attempts += 1
-          if (attempts > 3) throw e // a flapping layout is not a race
-      }
-    }
-    sys.error("unreachable")
-  }
-
   def executePlan(spark: SparkSession, parsed: LogicalPlan,
       tables: Map[String, String] = Map.empty,
       maxAttempts: Int = 10, checkCardinality: Boolean = true): SnapshotStore.Snapshot = {
@@ -111,7 +88,7 @@ object SqlDml {
         val cdcKeys = SnapshotStore.cdcKeys(root)
         val cond = u.condition.map(e => expr(e.sql)).getOrElse(lit(true))
         val assigns = assignmentMap(u.assignments)
-        def build(base: DataFrame): (DataFrame, DataFrame) = {
+        def build(base: DataFrame): (DataFrame, Option[DataFrame]) = {
           val t = base.alias(alias)
           val cols = base.columns.toIndexedSeq
           locally { // a name miss must refuse, not silently no-op
@@ -148,55 +125,31 @@ object SqlDml {
           val changes = t.filter(coalesce(cond, lit(false)) && valueChanged)
             .select(explode(evs).as("c"))
             .select((cols :+ SnapshotStore.ChangeTypeCol).map(f => col(s"c.$f").as(f)): _*)
-          (out, changes)
+          (out, Some(changes))
         }
-        // merge-on-read table: deletion-vector the matched rows, append
-        // their post-images — zero data files rewritten. build() over the
-        // matched subset produces exactly the replacement rows (cond is
-        // true on every row) and the same change set as copy-on-write.
-        reroute {
-        if (SnapshotStore.dmlMode(root) == SnapshotStore.MergeOnRead)
-          SnapshotStore.transactMoR(spark, root, maxAttempts)(
-            base => base.alias(alias).filter(coalesce(cond, lit(false))))(build)
-        // partitioned or spec-spanning table: copy-on-write — rewrite only
-        // the partitions (or, across a pending spec evolution, the files)
-        // holding matched rows, hard-link the rest (build() is closed over
-        // the touched subset: unmatched neighbors pass through unchanged)
-        else if (SnapshotStore.partitionCols(root).nonEmpty ||
-            SnapshotStore.spansSpecs(root))
-          SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true)(
-            base => base.alias(alias).filter(coalesce(cond, lit(false))))(build)
-        else transactBoth(spark, root, maxAttempts, build)
-        }
+        // build() is closed over whatever subset the route hands it: on
+        // the matched rows (merge-on-read) it yields exactly their
+        // post-images, on touched partitions the unmatched neighbors pass
+        // through unchanged
+        SnapshotStore.rewriteRows(spark, root, maxAttempts)(Some(
+          base => base.alias(alias).filter(coalesce(cond, lit(false)))))(build)
 
       case del: DeleteFromTable =>
         val (name, alias) = relationOf(del.table)
         val root = rootOf(tables, name)
         val cond = expr(del.condition.sql)
-        def build(base: DataFrame): (DataFrame, DataFrame) = {
+        val matched = coalesce(cond, lit(false))
+        def build(base: DataFrame): (DataFrame, Option[DataFrame]) = {
           val t = base.alias(alias)
-          // NULL predicate keeps the row: only TRUE deletes
-          val out = t.filter(!coalesce(cond, lit(false)))
-          val changes = t.filter(coalesce(cond, lit(false)))
-            .withColumn(SnapshotStore.ChangeTypeCol, lit("delete"))
-          (out, changes)
+          // NULL predicate keeps the row: only TRUE deletes. Over the
+          // matched rows (merge-on-read) the kept filter contradicts the
+          // match and plans as an empty relation: nothing is appended and
+          // no job runs to find that out
+          (t.filter(!matched), Some(t.filter(matched)
+            .withColumn(SnapshotStore.ChangeTypeCol, lit("delete"))))
         }
-        // merge-on-read: the matched rows become deletion-vector entries;
-        // nothing is appended and no data file is rewritten
-        reroute {
-        if (SnapshotStore.dmlMode(root) == SnapshotStore.MergeOnRead)
-          SnapshotStore.transactMoR(spark, root, maxAttempts)(
-            base => base.alias(alias).filter(coalesce(cond, lit(false))))(
-            matched => (matched.limit(0), matched
-              .withColumn(SnapshotStore.ChangeTypeCol, lit("delete"))))
-        else if (SnapshotStore.partitionCols(root).nonEmpty ||
-            SnapshotStore.spansSpecs(root))
-          SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true)(
-            base => base.alias(alias).filter(coalesce(cond, lit(false))))(build)
-        else transactBoth(spark, root, maxAttempts, build)
-        }
+        SnapshotStore.rewriteRows(spark, root, maxAttempts)(Some(
+          base => base.alias(alias).filter(matched)))(build)
 
       case m: MergeIntoTable =>
         val (tName, tAlias) = relationOf(m.targetTable)
@@ -227,13 +180,6 @@ object SqlDml {
               added.foldLeft(s)((acc, f) =>
                 acc.add(f.name, f.dataType, nullable = true)))
         }
-        // merge-on-read target + no NOT MATCHED BY SOURCE arm: the
-        // join-matched target rows become deletion-vector entries and
-        // mergeFrames over that subset yields exactly the replacement
-        // rows (updated/kept matched rows + inserts) — zero data files
-        // rewritten, the DV twin of the partial copy-on-write argument
-        // below. A NOT MATCHED BY SOURCE arm can modify ANY target row,
-        // so it falls through to the full rewrite.
         identityColOf(spark, root).foreach { ic =>
           require(m.notMatchedActions.isEmpty,
             s"MERGE with a NOT MATCHED (insert) arm is unsupported on " +
@@ -274,33 +220,17 @@ object SqlDml {
                 "derivation in the arm; a NULL pad fails the consistency CHECK)")
           }
         }
-        reroute {
-        if (SnapshotStore.dmlMode(root) == SnapshotStore.MergeOnRead &&
-            m.notMatchedBySourceActions.isEmpty)
-          SnapshotStore.transactMoR(spark, root, maxAttempts)(
+        // the join-matched target rows scope the write: a source row's
+        // match, if any, is by definition among them, so mergeFrames over
+        // the matched rows (or their partitions) ≡ the full merge
+        // restricted to them plus the inserts. A NOT MATCHED BY SOURCE arm
+        // can modify ANY target row, so it names no matched set.
+        SnapshotStore.rewriteRows(spark, root, maxAttempts)(
+          Option.when(m.notMatchedBySourceActions.isEmpty)(
             base => base.alias(tAlias).join(source.alias(sAlias),
-              expr(m.mergeCondition.sql), "left_semi"))(
-            matchedBase => mergeFrames(matchedBase, tAlias, source, sAlias, m,
-              checkCardinality, SnapshotStore.cdcKeys(root)))
-        // partitioned target + no NOT MATCHED BY SOURCE arm (which could
-        // modify ANY target row): copy-on-write — only partitions holding
-        // join-matched target rows rewrite. A source row's match, if any,
-        // is by definition in a touched partition, so mergeFrames over the
-        // touched subset ≡ the full merge restricted to those partitions
-        // plus the inserts (whose new files dir-merge with linked dirs).
-        else if ((SnapshotStore.partitionCols(root).nonEmpty ||
-              SnapshotStore.spansSpecs(root)) &&
-            m.notMatchedBySourceActions.isEmpty)
-          SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts,
-            evolvedScoped = true)(
-            base => base.alias(tAlias).join(source.alias(sAlias),
-              expr(m.mergeCondition.sql), "left_semi"))(
-            base => mergeFrames(base, tAlias, source, sAlias, m,
-              checkCardinality, SnapshotStore.cdcKeys(root)))
-        else transactBoth(spark, root, maxAttempts,
-          base => mergeFrames(base, tAlias, source, sAlias, m, checkCardinality,
-            SnapshotStore.cdcKeys(root)))
-        }
+              expr(m.mergeCondition.sql), "left_semi")))(
+          base => mergeFrames(base, tAlias, source, sAlias, m,
+            checkCardinality, SnapshotStore.cdcKeys(root)))
 
       case ins: InsertIntoStatement =>
         val (name, _) = relationOf(ins.table)
@@ -351,29 +281,9 @@ object SqlDml {
             col(k) <=> lit(v).cast(schema(
               schema.fieldNames.find(_.equalsIgnoreCase(k)).get).dataType)
           }.reduce(_ && _)
-          val keys = SnapshotStore.cdcKeys(root)
-          SnapshotStore.transactPartialWithChanges(spark, root, maxAttempts)(
-            base => {
-              if (keys.nonEmpty) {
-                // key uniqueness is table-wide: a partition overwrite must
-                // not introduce a key that lives in ANOTHER partition (its
-                // feed would emit 'insert' for a live key — replica poison)
-                val clash = newRows
-                  .join(base.filter(!coalesce(partPred, lit(false))),
-                    keys, "left_semi").limit(1)
-                require(clash.isEmpty,
-                  s"INSERT OVERWRITE PARTITION $spec carries key(s) " +
-                    s"(${keys.mkString(", ")}) already live outside the " +
-                    "partition")
-              }
-              base.filter(partPred)
-            })(old => {
-            val changes =
-              if (keys.isEmpty) old.limit(0)
-                .withColumn(SnapshotStore.ChangeTypeCol, lit("insert"))
-              else SnapshotStore.diffChanges(old, newRows, keys)
-            (newRows, changes)
-          })
+          SnapshotStore.overwritePartitions(spark, root, maxAttempts)(base =>
+            (base.filter(partPred), base.filter(!coalesce(partPred, lit(false)))))(
+            _ => newRows)
         } else {
           // name resolution happens here; alignment/casts/CDC guards live in
           // SnapshotStore.append (shared with the catalog's V1 write fallback)
@@ -425,17 +335,6 @@ object SqlDml {
     }
   }
 
-  /** Route through [[SnapshotStore.transactWithChanges]] when the table has
-    * a change feed; plain [[SnapshotStore.transact]] (no change plan built
-    * or executed) otherwise.
-    */
-  private def transactBoth(spark: SparkSession, root: String, maxAttempts: Int,
-      build: DataFrame => (DataFrame, DataFrame)): SnapshotStore.Snapshot =
-    if (SnapshotStore.cdcKeys(root).nonEmpty)
-      SnapshotStore.transactWithChanges(spark, root, maxAttempts)(build)
-    else
-      SnapshotStore.transact(spark, root, maxAttempts)(base => build(base)._1)
-
   /** The single-join MERGE plan, returning (result, change rows). The
     * change frame derives from the SAME full-outer join via the action
     * resolution that already knows each row's fate — updates emit pre+post
@@ -447,7 +346,7 @@ object SqlDml {
     */
   private def mergeFrames(base: DataFrame, tAlias: String, sourceDf: DataFrame,
       sAlias: String, m: MergeIntoTable, checkCardinality: Boolean,
-      cdcKeys: Seq[String] = Nil): (DataFrame, DataFrame) = {
+      cdcKeys: Seq[String] = Nil): (DataFrame, Option[DataFrame]) = {
     val fields: Seq[StructField] = base.schema.fields.toIndexedSeq
     // every explicit assignment/insert target must BE a target column — a
     // name miss would otherwise be silently dropped by the per-field
@@ -554,7 +453,7 @@ object SqlDml {
       .filter(col(s"c.${SnapshotStore.ChangeTypeCol}") =!= "unchanged")
       .select((fields.map(_.name) :+ SnapshotStore.ChangeTypeCol)
         .map(f => col(s"c.$f").as(f)): _*)
-    (out, changes)
+    (out, Some(changes))
   }
 
   /** (table name, alias) of a DML relation: unwraps `t AS a`. The name

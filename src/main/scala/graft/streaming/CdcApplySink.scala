@@ -66,23 +66,11 @@ object CdcApplySink {
               (if (latest.columns.exists(_.equalsIgnoreCase(c))) col(c)
                else lit(null).cast(base.schema(c).dataType)).as(c)
             }: _*)
-        // merge-on-read replica (non-CDC — a replica that itself feeds a
-        // change log keeps the copy-on-write path, whose generic diff
-        // emits its change set): touched keys become deletion-vector
-        // entries, winners append — per-batch write cost O(batch), never
-        // O(replica)
-        if (SnapshotStore.dmlMode(root) == SnapshotStore.MergeOnRead &&
-            SnapshotStore.cdcKeys(root).isEmpty)
-          SnapshotStore.transactMoR(spark, root, txn = txn)(
-            base => base.join(broadcast(latest.select(col(keyCol)).distinct()),
-              Seq(keyCol), "left_semi")) { matched =>
-            val w = winnersAligned(matched)
-            (w, w.limit(0).withColumn(tc, lit("insert")))
-          }
-        else SnapshotStore.transact(spark, root, txn = txn) { base =>
-          base.join(latest.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-            .unionByName(winnersAligned(base))
-        }
+        // every touched key's row leaves, the non-delete winners arrive.
+        // The apply names no change rows: a replica that itself feeds a
+        // change log takes the full rewrite, whose generic diff emits them
+        SnapshotStore.upsertRows(spark, root, txn, keyCol, latest)(
+          winnersAligned)(None)
       } finally latest.unpersist()
     }
   }

@@ -39,14 +39,11 @@ object SnapshotMergeSink {
       val rows = batch.persist() // transform reruns on commit conflict
       try {
         val txn = Some(SnapshotStore.Txn(appId, batchId))
-        def out(base: DataFrame): DataFrame =
-          base.join(rows.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-            .unionByName(rows.select(base.columns.toIndexedSeq.map(col): _*))
         /** The batch⋈base change set (statement-integrated CDC); correct
           * for any `base` that contains AT LEAST every base row whose key
-          * the batch touches — the full snapshot (copy-on-write) and the
-          * key-matched subset (merge-on-read) alike, since unmatched batch
-          * keys surface as inserts through the left join either way.
+          * the batch touches — the full snapshot, the touched partitions
+          * and the key-matched subset alike, since unmatched batch keys
+          * surface as inserts through the left join either way.
           */
         def changesFor(base: DataFrame): DataFrame = {
           val cols = base.columns.toIndexedSeq
@@ -69,26 +66,9 @@ object SnapshotMergeSink {
             .select((cols :+ SnapshotStore.ChangeTypeCol)
               .map(f => col(s"c.$f").as(f)): _*)
         }
-        // merge-on-read table: the matched base rows become deletion-vector
-        // entries and the batch appends as fresh files — per-commit WRITE
-        // cost O(batch), never O(table). Copy-on-write's full rewrite
-        // remains the path that bounds read amplification on small tables.
-        if (SnapshotStore.dmlMode(root) == SnapshotStore.MergeOnRead)
-          SnapshotStore.transactMoR(batch.sparkSession, root, txn = txn)(
-            base => base.join(broadcast(rows.select(keyCol).distinct()),
-              Seq(keyCol), "left_semi")) { matched =>
-            val aligned = rows.select(matched.columns.toIndexedSeq.map(col): _*)
-            val ch =
-              if (SnapshotStore.cdcKeys(root).isEmpty)
-                aligned.limit(0).withColumn(SnapshotStore.ChangeTypeCol,
-                  lit("insert"))
-              else changesFor(matched)
-            (aligned, ch)
-          }
-        else if (SnapshotStore.cdcKeys(root).isEmpty)
-          SnapshotStore.transact(batch.sparkSession, root, txn = txn)(out)
-        else SnapshotStore.transactWithChanges(batch.sparkSession, root,
-          txn = txn)(base => (out(base), changesFor(base)))
+        SnapshotStore.upsertRows(batch.sparkSession, root, txn, keyCol, rows)(
+          base => rows.select(base.columns.toIndexedSeq.map(col): _*))(
+          Some(changesFor))
       } finally rows.unpersist()
     }
   }

@@ -316,7 +316,8 @@ class DvSpec extends SparkSpec {
     assert(ch2 == Set((3L, 30L, "update_preimage"), (3L, 99L, "update_postimage")))
 
     // the generic keyed diff of committed states agrees with the
-    // statement-integrated feed (the transactWithChanges contract)
+    // statement-integrated feed (the contract on change rows a caller of
+    // SnapshotStore.rewriteRows supplies)
     val diff = SnapshotStore.diffChanges(
       SnapshotStore.read(spark, SnapshotStore.at(root, 1)),
       SnapshotStore.read(spark, SnapshotStore.at(root, 2)), Seq("id"))

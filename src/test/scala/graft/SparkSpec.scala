@@ -11,6 +11,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
   override def afterAll(): Unit = () // session shared across suites
+
+  /** The messages loggers whose names end in one of `loggers` log while
+    * `body` runs.
+    */
+  def logged(loggers: String*)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("spec-log-capture", null, null, true,
+      Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (loggers.exists(e.getLoggerName.endsWith))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    capture.start()
+    root.addAppender(capture)
+    try body
+    finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
 }
 
 object SparkSpec {
