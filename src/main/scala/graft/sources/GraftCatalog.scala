@@ -369,7 +369,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // identity transforms partition by the named column; days/months/
     // years/hours/bucket desugar to a GENERATED partition column (the
     // Delta generated-partition idiom — computed on write, CHECK-guarded)
-    // recorded in a transform-spec sidecar so reads DERIVE partition
+    // recorded in the config record so reads DERIVE partition
     // filters from predicates on the SOURCE column (hidden partitioning)
     val (identT, derivedT) = partitions.toSeq.partition(t =>
       t.name == "identity" && t.references.length == 1)
@@ -465,15 +465,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         storedSchema),
       cdcKeys = keys, partitionBy = partCols)
-    Option(properties.get(GraftCatalog.DmlModeProp))
-      .foreach(SnapshotStore.setDmlMode(root, _))
-    // opaque user properties set at CREATE persist exactly as ALTER SET
+    // one config edit: the DML mode, the transform specs, and the opaque
+    // user properties set at CREATE, which persist exactly as ALTER SET
     // TBLPROPERTIES does (the Delta/Iceberg contract — a prop set at
     // CREATE must not vanish from properties()); engine keys routed to
-    // their own config above, Spark's reserved/internal keys stay out
-    GraftCatalog.userPropertiesOf(properties).foreach { case (k, v) =>
-      SnapshotStore.setTableProperty(root, k, v)
-    }
+    // their own config, Spark's reserved/internal keys stay out
+    SnapshotStore.editConfig(root)(c => c.copy(
+      dmlMode = Option(properties.get(GraftCatalog.DmlModeProp))
+        .getOrElse(c.dmlMode),
+      transforms = specs,
+      properties = c.properties ++ GraftCatalog.userPropertiesOf(properties)))
     // the consistency contract: every commit (including DML that never
     // goes near this catalog) must leave the stored value equal to the
     // expression — CHECK constraints run on all commit paths, so an
@@ -484,7 +485,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       SnapshotStore.addTableConstraint(spark, root,
         s"__gen_${f.name}", s"${f.name} <=> ($g)")
     }
-    SnapshotStore.writeTransformSpecs(root, specs)
     loadTable(ident)
   }
 
@@ -522,7 +522,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "be unset")
       // everything else is an OPAQUE user property (comments, owners,
       // tooling tags — the Delta/Iceberg contract): stored in the
-      // `_table_properties.tsv` sidecar, served back by properties()
+      // table's config record, served back by properties()
       case set: TableChange.SetProperty =>
         SnapshotStore.setTableProperty(root, set.property, set.value)
       case rm: TableChange.RemoveProperty =>
@@ -561,7 +561,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // __gen_/__notnull_ removal, SET NOT NULL's add) happen inside the
     // evolve closure BEFORE the commit; if the ALTER ultimately aborts
     // (a later change in the batch refuses, or the commit race is lost
-    // for good), restore the sidecar so a refusal leaves the table
+    // for good), restore them so a refusal leaves the table
     // untouched. The restore is scoped to exactly the names this ALTER's
     // cascades can touch — a wholesale byte restore would discard a
     // concurrent session's ADD/DROP CONSTRAINT landing mid-ALTER
@@ -709,7 +709,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           if (!up.nullable()) {
             // idempotent under alterSchema's commit-race retries (the
             // evolve closure re-runs): drop-then-add; a failed ALTER
-            // restores the saved sidecar below either way
+            // restores the saved constraints below either way
             SnapshotStore.dropTableConstraint(root, s"__notnull_${n.toLowerCase}")
             SnapshotStore.addTableConstraint(spark, root,
               s"__notnull_${n.toLowerCase}", s"$n IS NOT NULL")
@@ -885,7 +885,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `ALTER NAMESPACE ns SET/UNSET PROPERTIES` — the same opaque-property
-    * sidecar tables use, stored in the namespace directory and served
+    * record tables use, stored in the namespace directory and served
     * back through [[loadNamespaceMetadata]] (`DESCRIBE NAMESPACE
     * EXTENDED`).
     */
@@ -1063,10 +1063,10 @@ object GraftCatalog {
     * `REPLACE PARTITION FIELD days(ts) WITH hours(ts)` shape on the
     * engine's generated-column mechanism): ensure the transform's derived
     * GENERATED column exists on `root` — adding it as one metadata-only
-    * ALTER plus the transform-spec sidecar entry and a NULL-tolerant
-    * `__gen_` CHECK when it doesn't (pre-evolution rows never stored it;
-    * they read NULL until the migrating OPTIMIZE backfills the
-    * derivation) — and return the derived column name for the
+    * ALTER plus the config record's transform-spec entry and a
+    * NULL-tolerant `__gen_` CHECK when it doesn't (pre-evolution rows
+    * never stored it; they read NULL until the migrating OPTIMIZE
+    * backfills the derivation) — and return the derived column name for the
     * [[SnapshotStore.alterPartitionSpec]] era commit. Re-activating a
     * transform the table already carries (its pcol exists with the SAME
     * generation SQL) is a no-op here; a name collision with a different
@@ -1135,9 +1135,9 @@ object GraftCatalog {
         SnapshotStore.addTableConstraint(spark, root, s"__gen_${sp.pcol}",
           s"${sp.pcol} IS NULL OR (${sp.pcol} <=> ($sql))")
     }
-    val specs = SnapshotStore.transformSpecs(root)
-    if (!specs.exists(_.pcol.equalsIgnoreCase(sp.pcol)))
-      SnapshotStore.writeTransformSpecs(root, specs :+ sp)
+    SnapshotStore.editConfig(root)(c =>
+      if (c.transforms.exists(_.pcol.equalsIgnoreCase(sp.pcol))) c
+      else c.copy(transforms = c.transforms :+ sp))
     sp.pcol
   }
 
@@ -1965,7 +1965,7 @@ private[sources] class GraftTable(spark: SparkSession, tableName: String,
           : org.apache.spark.sql.connector.catalog.constraints.Constraint
       }.toArray
 
-  // the transform-spec sidecar is immutable after CREATE — read once per
+  // the transform specs change only by DDL — read once per
   // loaded table, not per planned scan
   private lazy val tableTransformSpecs: Seq[SnapshotStore.TransformSpec] =
     SnapshotStore.transformSpecs(root)

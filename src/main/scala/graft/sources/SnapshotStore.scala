@@ -91,9 +91,111 @@ object SnapshotStore {
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
   private def commitFile(root: String, v: Long): Path =
     commitsDir(root).resolve(f"$v%020d.commit")
-  private def cdcConfigFile(root: String): Path = Paths.get(root, "_cdc")
-  private def constraintsFile(root: String): Path = Paths.get(root, "_constraints")
-  private def partitionsFile(root: String): Path = Paths.get(root, "_partitions")
+
+  // ---- the table-config record ---------------------------------------------
+  // What a table declares outside its versioned snapshots lives in ONE
+  // root file, `_table.tsv`: one line per entry, `kind TAB fields`. Every
+  // change goes through [[editConfig]], which publishes a whole new file
+  // (temp + ATOMIC_MOVE) under [[withRootLock]]: a reader sees the old
+  // record or the new one, never a torn one, and two editors never lose
+  // each other's update. The record is not versioned with the commits;
+  // RESTORE, clones and branch publishes carry their fields explicitly
+  // after their CAS win. Namespace dirs keep their properties in the same
+  // record.
+
+  /** A table's root-level configuration: the change-feed keys (empty = no
+    * feed, see [[init]]), the current WRITE partition spec, the DML mode,
+    * the CHECK constraints (name → predicate SQL, in add order), the
+    * partition transform specs, the opaque user properties, and the
+    * append-only feed rename log `(version, old, new)` ([[feedRenames]]).
+    */
+  private[sources] final case class TableConfig(
+      cdcKeys: Seq[String] = Nil,
+      partitionCols: Seq[String] = Nil,
+      dmlMode: String = CopyOnWrite,
+      constraints: Seq[(String, String)] = Nil,
+      transforms: Seq[TransformSpec] = Nil,
+      properties: Map[String, String] = Map.empty,
+      renames: Seq[(Long, String, String)] = Nil)
+
+  private def configFile(root: String): Path = Paths.get(root, "_table.tsv")
+
+  private def readConfig(root: String): TableConfig = {
+    val f = configFile(root)
+    if (!Files.exists(f)) return TableConfig()
+    Files.readString(f).linesIterator.filter(_.nonEmpty)
+      .foldLeft(TableConfig()) { (c, l) =>
+        val Array(kind, rest) = l.split("\t", 2)
+        def fields(n: Int): Array[String] = rest.split("\t", n)
+        kind match {
+          case "cdc" => c.copy(cdcKeys = c.cdcKeys :+ rest)
+          case "partition" => c.copy(partitionCols = c.partitionCols :+ rest)
+          case "dml" => c.copy(dmlMode = rest)
+          case "constraint" =>
+            val Array(n, sql) = fields(2)
+            c.copy(constraints = c.constraints :+ (n -> sql))
+          case "transform" =>
+            val Array(pcol, k, src, arg, tz) = fields(5)
+            c.copy(transforms =
+              c.transforms :+ TransformSpec(pcol, k, src, arg.toInt, tz))
+          case "property" =>
+            val Array(k, v) = fields(2)
+            c.copy(properties = c.properties + (k -> v))
+          case "rename" =>
+            val Array(v, o, n) = fields(3)
+            c.copy(renames = c.renames :+ ((v.toLong, o, n)))
+          case other =>
+            throw new IllegalStateException(s"unknown entry '$other' in $f")
+        }
+      }
+  }
+
+  private def renderConfig(c: TableConfig): String = (
+    c.cdcKeys.map(k => s"cdc\t$k") ++
+      c.partitionCols.map(p => s"partition\t$p") ++
+      Seq(s"dml\t${c.dmlMode}") ++
+      c.constraints.map { case (n, sql) => s"constraint\t$n\t$sql" } ++
+      c.transforms.map(s =>
+        s"transform\t${s.pcol}\t${s.kind}\t${s.src}\t${s.arg}\t${s.tz}") ++
+      c.properties.toSeq.sortBy(_._1).map { case (k, v) => s"property\t$k\t$v" } ++
+      c.renames.map { case (v, o, n) => s"rename\t$v\t$o\t$n" }
+  ).mkString("", "\n", "\n")
+
+  /** Test seam: fires inside [[editConfig]] after it reads the record and
+    * before it moves the new one into place (TableConfigSpec drives
+    * deterministic interleaves through it).
+    */
+  private[graft] var configTestHook: () => Unit = () => ()
+
+  /** The one writer of the record: read it, apply `f`, check the result,
+    * publish it by temp file + ATOMIC_MOVE, all under [[withRootLock]].
+    * Returns the record `f` was applied to. `f` runs under the lock, so it
+    * must not run a Spark job; a throw from `f` or the check aborts the
+    * edit with nothing published.
+    */
+  private[sources] def editConfig(root: String)(
+      f: TableConfig => TableConfig): TableConfig =
+    withRootLock(root) {
+      val cur = readConfig(root)
+      val next = f(cur)
+      require(next.dmlMode == CopyOnWrite || next.dmlMode == MergeOnRead,
+        s"unknown DML mode '${next.dmlMode}' (use $CopyOnWrite or $MergeOnRead)")
+      next.properties.foreach { case (k, v) =>
+        require(!s"$k$v".exists(ch => ch == '\t' || ch == '\n'),
+          s"table property keys/values must not contain tabs or newlines ($k)")
+      }
+      configTestHook()
+      if (next != cur) {
+        val tmp = Files.createTempFile(Paths.get(root), ".table", ".tmp")
+        try {
+          Files.writeString(tmp, renderConfig(next))
+          Files.move(tmp, configFile(root),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
+      }
+      cur
+    }
 
   /** The table's hive-style partition columns (empty = unpartitioned).
     * Set at [[init]]; every staged snapshot lays its files out as
@@ -103,11 +205,7 @@ object SnapshotStore {
     * 100 TB (a day-partitioned event table answers a one-day query by
     * listing one directory).
     */
-  def partitionCols(root: String): Seq[String] = {
-    val f = partitionsFile(root)
-    if (Files.exists(f)) Files.readString(f).trim.split(",").toSeq.filter(_.nonEmpty)
-    else Nil
-  }
+  def partitionCols(root: String): Seq[String] = readConfig(root).partitionCols
 
   // ---- partition-spec evolution (the Iceberg contract) ---------------------
   //
@@ -249,9 +347,7 @@ object SnapshotStore {
       // sidecar, so a crash here costs nothing but a stale partitionCols()
       // listing (healed by the next alter/clone)
       Staged(dir, onWin = _ =>
-        if (newCols.nonEmpty)
-          Files.writeString(partitionsFile(root), newCols.mkString(","))
-        else Files.deleteIfExists(partitionsFile(root)))
+        editConfig(root)(_.copy(partitionCols = newCols)))
     }
 
   /** Table-level CHECK constraints (name → boolean predicate SQL), the
@@ -261,89 +357,60 @@ object SnapshotStore {
     * snapshots always satisfy their invariants. NULL predicates pass
     * (SQL CHECK semantics: only FALSE violates).
     */
-  def tableConstraints(root: String): Seq[(String, String)] = {
-    val f = constraintsFile(root)
-    if (!Files.exists(f)) Nil
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { l =>
-      val Array(n, sql) = l.split("\t", 2)
-      (n, sql)
-    }.toSeq
-  }
+  def tableConstraints(root: String): Seq[(String, String)] =
+    readConfig(root).constraints
 
   /** Add a named CHECK constraint. EXISTING rows are validated first (one
     * short-circuiting scan) — a constraint the current snapshot violates
-    * refuses, exactly as Delta's ALTER TABLE ADD CONSTRAINT does.
+    * refuses, exactly as Delta's ALTER TABLE ADD CONSTRAINT does. The scan
+    * runs before the edit takes the lock; the edit re-checks the name.
     */
   def addTableConstraint(spark: SparkSession, root: String, name: String,
       predicateSql: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(!name.contains("\t") && !predicateSql.contains("\n"),
       "constraint name/SQL must be single-line")
-    val existing = tableConstraints(root)
-    require(!existing.exists(_._1 == name), s"constraint '$name' already exists")
+    def absent(c: Seq[(String, String)]): Unit =
+      require(!c.exists(_._1 == name), s"constraint '$name' already exists")
+    absent(tableConstraints(root))
     val bad = read(spark, root)
       .filter(not(coalesce(expr(predicateSql), lit(true)))).limit(1)
     require(bad.isEmpty,
       s"cannot add constraint '$name': existing rows violate ($predicateSql)")
-    Files.writeString(constraintsFile(root),
-      (existing :+ (name, predicateSql)).map { case (n, s) => s"$n\t$s" }
-        .mkString("", "\n", "\n"))
+    editConfig(root) { c =>
+      absent(c.constraints)
+      c.copy(constraints = c.constraints :+ (name -> predicateSql))
+    }
   }
 
-  /** Raw constraints-sidecar snapshot/restore — for callers whose schema
-    * change CASCADES constraint edits (DROP COLUMN, SET NOT NULL) and
-    * must leave the table untouched when the schema commit itself aborts.
+  /** The constraints as they stand — for callers whose schema change
+    * CASCADES constraint edits (DROP COLUMN, SET NOT NULL) and must leave
+    * the table untouched when the schema commit itself aborts
+    * ([[restoreConstraintsNamed]]).
     */
-  private[graft] def snapshotConstraints(root: String): Option[String] = {
-    val f = constraintsFile(root)
-    if (Files.exists(f)) Some(Files.readString(f)) else None
-  }
-
-  private[graft] def restoreConstraints(root: String,
-      saved: Option[String]): Unit = saved match {
-    case Some(s) => Files.writeString(constraintsFile(root), s); ()
-    case None => Files.deleteIfExists(constraintsFile(root)); ()
-  }
+  private[graft] def snapshotConstraints(root: String): Seq[(String, String)] =
+    tableConstraints(root)
 
   /** Restore ONLY the `names`-matched constraints to their `saved` state,
-    * leaving every other entry of the CURRENT sidecar intact — the
-    * wholesale byte restore above would silently discard a concurrent
-    * session's ADD/DROP CONSTRAINT landing between the snapshot and a
-    * failed ALTER's restore (a lost update that quietly drops an enforced
-    * constraint). Names match case-insensitively (engine constraint names
-    * derive from column names, which the catalog matches that way).
+    * leaving every other entry of the CURRENT record intact — a wholesale
+    * restore would silently discard a concurrent session's ADD/DROP
+    * CONSTRAINT landing between the snapshot and a failed ALTER's restore
+    * (a lost update that quietly drops an enforced constraint). Names
+    * match case-insensitively (engine constraint names derive from column
+    * names, which the catalog matches that way).
     */
   private[graft] def restoreConstraintsNamed(root: String,
-      saved: Option[String], names: Set[String]): Unit = {
-    if (names.isEmpty) return
+      saved: Seq[(String, String)], names: Set[String]): Unit = {
     val lower = names.map(_.toLowerCase)
-    def touched(n: String): Boolean = lower(n.toLowerCase)
-    val savedTouched = saved.toSeq.flatMap(_.linesIterator)
-      .filter(_.nonEmpty).map { l =>
-        val Array(n, sql) = l.split("\t", 2); (n, sql)
-      }.filter(e => touched(e._1))
-    val restored = tableConstraints(root).filterNot(e => touched(e._1)) ++
-      savedTouched
-    if (restored.isEmpty) { Files.deleteIfExists(constraintsFile(root)); () }
-    else {
-      Files.writeString(constraintsFile(root),
-        restored.map { case (n, s) => s"$n\t$s" }.mkString("", "\n", "\n"))
-      ()
-    }
+    def touched(e: (String, String)): Boolean = lower(e._1.toLowerCase)
+    if (names.nonEmpty) editConfig(root)(c => c.copy(constraints =
+      c.constraints.filterNot(touched) ++ saved.filter(touched)))
   }
 
   /** Drop a named CHECK constraint; returns whether it existed. */
-  def dropTableConstraint(root: String, name: String): Boolean = {
-    val existing = tableConstraints(root)
-    val kept = existing.filterNot(_._1 == name)
-    if (kept.length == existing.length) false
-    else {
-      if (kept.isEmpty) Files.deleteIfExists(constraintsFile(root))
-      else Files.writeString(constraintsFile(root),
-        kept.map { case (n, s) => s"$n\t$s" }.mkString("", "\n", "\n"))
-      true
-    }
-  }
+  def dropTableConstraint(root: String, name: String): Boolean =
+    editConfig(root)(c => c.copy(constraints =
+      c.constraints.filterNot(_._1 == name))).constraints.exists(_._1 == name)
 
   /** Create the table: version 0 pins the initial snapshot.
     * `statsCols` opts the snapshot into a per-file min/max manifest
@@ -383,13 +450,11 @@ object SnapshotStore {
     }
     if (!tryCommit(root, expectedCurrent = -1L, dir))
       throw new CommitConflictException(s"table at $root already initialized")
-    // the _cdc marker lands only AFTER the v0 commit is won: an init that
-    // loses the race must not leave the marker behind on a table someone
-    // else created without CDC (it would flip cdcKeys on and every later
+    // the CDC keys land only AFTER the v0 commit is won: an init that
+    // loses the race must not leave them behind on a table someone else
+    // created without CDC (it would flip cdcKeys on and every later
     // transact would emit _changes over a feed with no v0)
-    if (cdcKeys.nonEmpty) Files.writeString(cdcConfigFile(root), cdcKeys.mkString(","))
-    if (partitionBy.nonEmpty)
-      Files.writeString(partitionsFile(root), partitionBy.mkString(","))
+    editConfig(root)(_.copy(cdcKeys = cdcKeys, partitionCols = partitionBy))
     Snapshot(0L, dir)
   }
 
@@ -398,37 +463,26 @@ object SnapshotStore {
   val CommitVersionCol = "_commit_version"
 
   /** The CDC key columns this table was initialized with (empty = no feed). */
-  def cdcKeys(root: String): Seq[String] = {
-    val f = cdcConfigFile(root)
-    if (Files.exists(f)) Files.readString(f).trim.split(",").toSeq.filter(_.nonEmpty)
-    else Nil
-  }
+  def cdcKeys(root: String): Seq[String] = readConfig(root).cdcKeys
 
   val CopyOnWrite = "copy-on-write"
   val MergeOnRead = "merge-on-read"
-  private def dmlModeFile(root: String): Path = Paths.get(root, "_dmlmode")
 
   /** The table's DML strategy: [[CopyOnWrite]] (default — UPDATE/DELETE
     * rewrite the files/partitions they touch) or [[MergeOnRead]]
     * (UPDATE/DELETE commit a deletion-vector sidecar + appended rows and
     * never rewrite a data file — see [[transactMoR]]).
     */
-  def dmlMode(root: String): String = {
-    val f = dmlModeFile(root)
-    if (Files.exists(f)) Files.readString(f).trim else CopyOnWrite
-  }
+  def dmlMode(root: String): String = readConfig(root).dmlMode
 
-  def setDmlMode(root: String, mode: String): Unit = {
-    require(mode == CopyOnWrite || mode == MergeOnRead,
-      s"unknown DML mode '$mode' (use $CopyOnWrite or $MergeOnRead)")
-    Files.writeString(dmlModeFile(root), mode)
-  }
+  def setDmlMode(root: String, mode: String): Unit =
+    editConfig(root)(_.copy(dmlMode = mode))
 
   // ---- partition transform specs ---------------------------------------------
   // `PARTITIONED BY (days(ts) / months / years / hours / bucket(n, c))`
   // desugars to a GENERATED partition column (the Delta
   // generated-partition idiom: computed on write, CHECK-guarded, hive
-  // layout). This sidecar records (pcol, kind, src, arg) so the read
+  // layout). The config record keeps (pcol, kind, src, arg) so the read
   // side can DERIVE partition filters from predicates on the SOURCE
   // column — the hidden-partitioning payoff: `WHERE ts >= X` prunes
   // `ts_day=` directories without the user ever naming the derived
@@ -445,78 +499,27 @@ object SnapshotStore {
   final case class TransformSpec(pcol: String, kind: String, src: String,
       arg: Int, tz: String = "UTC")
 
-  private def transformSpecsFile(root: String): Path =
-    Paths.get(root, "_transform_specs.tsv")
-
-  def transformSpecs(root: String): Seq[TransformSpec] = {
-    val f = transformSpecsFile(root)
-    if (!Files.exists(f)) Nil
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { l =>
-      val p = l.split("\t", 5)
-      TransformSpec(p(0), p(1), p(2), p(3).toInt,
-        if (p.length > 4) p(4) else "UTC")
-    }.toSeq
-  }
-
-  def writeTransformSpecs(root: String, specs: Seq[TransformSpec]): Unit =
-    if (specs.nonEmpty)
-      Files.writeString(transformSpecsFile(root),
-        specs.map(s => s"${s.pcol}\t${s.kind}\t${s.src}\t${s.arg}\t${s.tz}")
-          .mkString("", "\n", "\n"))
+  def transformSpecs(root: String): Seq[TransformSpec] =
+    readConfig(root).transforms
 
   // ---- user table properties -------------------------------------------------
   // Free-form `SET/UNSET TBLPROPERTIES` key-values (comments, owners,
   // tooling tags — the Delta/Iceberg opaque-property contract), stored in
-  // a `_table_properties.tsv` sidecar at root. Engine-interpreted keys
-  // (`dml.mode`, `cdc.keys`) never land here: the catalog routes them to
-  // their own config (or refuses) before this store is consulted.
+  // the config record. Engine-interpreted keys (`dml.mode`, `cdc.keys`)
+  // never land here: the catalog routes them to their own config (or
+  // refuses) before this store is consulted.
 
-  private def tablePropsFile(root: String): Path =
-    Paths.get(root, "_table_properties.tsv")
+  def tableProperties(root: String): Map[String, String] =
+    readConfig(root).properties
 
-  def tableProperties(root: String): Map[String, String] = {
-    val f = tablePropsFile(root)
-    if (!Files.exists(f)) Map.empty
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { l =>
-      val p = l.split("\t", 2); p(0) -> (if (p.length > 1) p(1) else "")
-    }.toMap
-  }
-
-  def setTableProperty(root: String, key: String, value: String): Unit = {
-    require(!key.contains('\t') && !key.contains('\n') &&
-      !value.contains('\t') && !value.contains('\n'),
-      s"table property keys/values must not contain tabs or newlines ($key)")
-    writeTableProperties(root, tableProperties(root) + (key -> value))
-  }
+  def setTableProperty(root: String, key: String, value: String): Unit =
+    editConfig(root)(c => c.copy(properties = c.properties + (key -> value)))
 
   /** Returns whether the key existed (UNSET is idempotent either way). */
-  def removeTableProperty(root: String, key: String): Boolean = {
-    val cur = tableProperties(root)
-    val existed = cur.contains(key)
-    if (existed) writeTableProperties(root, cur - key)
-    existed
-  }
+  def removeTableProperty(root: String, key: String): Boolean =
+    editConfig(root)(c => c.copy(properties = c.properties - key))
+      .properties.contains(key)
 
-  private def writeTableProperties(root: String,
-      props: Map[String, String]): Unit = {
-    val f = tablePropsFile(root)
-    if (props.isEmpty) Files.deleteIfExists(f)
-    else Files.writeString(f,
-      props.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }
-        .mkString("", "\n", "\n"))
-    ()
-  }
-
-  /** Newest committed snapshot. Readers go through this and only ever see
-    * fully-committed, immutable data dirs.
-    */
-  /** Commit file layout: line 1 = data dir; lines 2..n (optional) =
-    * "appId<TAB>txnVersion" writer stamps for idempotence — one line per
-    * app, the Delta multi-`txn`-action shape. Most commits carry zero or
-    * one; a refresh that consumes SEVERAL upstream feeds (the join MV)
-    * records every source's high-water mark atomically in its one commit,
-    * so a crash can never leave the marks disagreeing.
-    */
   /** Materialize a directory listing and CLOSE the underlying stream —
     * Files.list holds an open directory fd until closed, and a long
     * streaming MERGE workload calls these helpers once per micro-batch,
@@ -533,6 +536,13 @@ object SnapshotStore {
     try s.iterator().asScala.toSeq.reverse finally s.close()
   }
 
+  /** Commit file layout: line 1 = data dir; lines 2..n (optional) =
+    * "appId<TAB>txnVersion" writer stamps for idempotence — one line per
+    * app, the Delta multi-`txn`-action shape. Most commits carry zero or
+    * one; a refresh that consumes SEVERAL upstream feeds (the join MV)
+    * records every source's high-water mark atomically in its one commit,
+    * so a crash can never leave the marks disagreeing.
+    */
   private def parseCommit(f: Path): (String, Seq[Txn]) = {
     val lines = Files.readString(f).trim.linesIterator.toSeq
     val txns = lines.drop(1).map { l =>
@@ -611,6 +621,9 @@ object SnapshotStore {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
+  /** Newest committed snapshot. Readers go through this and only ever see
+    * fully-committed, immutable data dirs.
+    */
   def latest(root: String): Snapshot = {
     readHeadHint(root)
       .filter(h => Files.exists(commitFile(root, h))) match {
@@ -875,14 +888,17 @@ object SnapshotStore {
     Paths.get(root).toAbsolutePath.normalize.toString, _ => new Object)
 
   /** The monitor PLUS a cross-process guard: an OS-level exclusive
-    * advisory lock on `_commits/.ckpt.lock`, held for the duration of
-    * `body`. The in-JVM monitor alone cannot serialize a fold in THIS
-    * process against an expire's fold-then-delete in ANOTHER (two
-    * maintenance jobs on one warehouse is a normal deployment); the
-    * optimistic re-validation narrows that window but a fold that passed
-    * validation can still be overtaken before its atomic move lands. The
+    * advisory lock on `_commits/.ckpt.lock` (on `.ckpt.lock` in the dir
+    * itself for a namespace dir, which must never grow a `_commits/`: that
+    * is what makes a dir a table), held for the duration of `body`. The
+    * in-JVM monitor alone cannot serialize a fold in THIS process against
+    * an expire's fold-then-delete in ANOTHER (two maintenance jobs on one
+    * warehouse is a normal deployment); the optimistic re-validation
+    * narrows that window but a fold that passed validation can still be
+    * overtaken before its atomic move lands. The
     * file lock closes it: both writers of the checkpoint (fold and
-    * expire) hold the same OS lock across their read-modify-move.
+    * expire) hold the same OS lock across their read-modify-move, and so
+    * does [[editConfig]] across the config record's.
     * Reentrant per thread (expire's pre-delete fold runs under the lock
     * it already holds); `java.nio` FileLocks are not, so depth-track.
     */
@@ -896,9 +912,10 @@ object SnapshotStore {
         depths(key) += 1
         try body finally { depths(key) -= 1; () }
       } else {
-        Files.createDirectories(commitsDir(root))
+        val lockDir = if (Files.isDirectory(commitsDir(root))) commitsDir(root)
+          else Paths.get(root)
         val ch = java.nio.channels.FileChannel.open(
-          commitsDir(root).resolve(".ckpt.lock"),
+          lockDir.resolve(".ckpt.lock"),
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.WRITE)
         try {
@@ -1025,7 +1042,8 @@ object SnapshotStore {
     * renames compose; a later full-rewrite commit heals the mapping.
     * On CDC tables the feed survives a rename: each version's change
     * frame carries the names current at ITS commit, [[changes]] resolves
-    * old frames through the chain, and a renamed CDC KEY remaps `_cdc`.
+    * old frames through the chain, and a renamed CDC KEY remaps the
+    * record's CDC keys.
     * Refused when it could silently corrupt:
     *   - partition columns (directory names ARE the physical layout),
     *   - columns referenced by CHECK constraints or generated/default
@@ -1124,25 +1142,18 @@ object SnapshotStore {
       carryTableState(base.dataDir, dir, Some(next))
       writeRenames(dir, ren) // the evolved mapping replaces the carried one
       writeChanges(root, dir, noChanges(spark, next))
-      Staged(dir, onWin = v => if (renames.nonEmpty) {
-        // the append-only FEED rename log ([[feedRenames]]): unlike the
-        // per-snapshot `_renames.tsv`, this survives healing rewrites —
-        // old change frames keep their written names forever
-        val lines = renames.map { case (nw, old) =>
-          s"$v\t$old\t$nw" }.mkString("", "\n", "\n")
-        Files.writeString(feedRenamesFile(root), lines,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-        // a renamed CDC KEY column remaps the root-level _cdc config —
-        // written after the CAS win, like partitionsFile in
-        // alterPartitionSpec (the narrow crash window costs a failed
-        // diff on the NEXT transact, never a wrong feed)
-        val keys = cdcKeys(root)
-        val mapped = keys.map(k =>
-          renames.find(_._2.equalsIgnoreCase(k)).map(_._1).getOrElse(k))
-        if (mapped != keys)
-          Files.writeString(cdcConfigFile(root), mapped.mkString(","))
-      })
+      // the append-only FEED rename log ([[feedRenames]]): unlike the
+      // per-snapshot `_renames.tsv`, this survives healing rewrites — old
+      // change frames keep their written names forever. A renamed CDC KEY
+      // column remaps the record's keys in the same edit — after the CAS
+      // win, like the partition spec in alterPartitionSpec (the narrow
+      // crash window costs a failed diff on the NEXT transact, never a
+      // wrong feed)
+      Staged(dir, onWin = v => if (renames.nonEmpty) editConfig(root)(c =>
+        c.copy(
+          renames = c.renames ++ renames.map { case (nw, old) => (v, old, nw) },
+          cdcKeys = c.cdcKeys.map(k =>
+            renames.find(_._2.equalsIgnoreCase(k)).map(_._1).getOrElse(k)))))
     }
   }
 
@@ -1166,8 +1177,8 @@ object SnapshotStore {
     // CDC tables are FINE to rename on: each version's change frame is
     // written under the names current at ITS commit, and [[changes]]
     // resolves old frames' physical names through the same chain reads
-    // use — the feed never forks. Renamed CDC KEY columns remap the _cdc
-    // config after the commit wins (see alterSchema). Spanning tables are
+    // use — the feed never forks. Renamed CDC KEY columns remap the CDC
+    // keys after the commit wins (see alterSchema). Spanning tables are
     // fine too: the per-era reads apply the same coalesce projection, and
     // the spec-column guard below keeps every era's layout columns named.
     val parts = allLayoutCols(root)
@@ -1418,11 +1429,8 @@ object SnapshotStore {
              else lit(null).cast(restored.schema(c).dataType)).as(c)): _*)
           diffChanges(headAligned, restored, cdcKeys(root))
         })
-        Staged(dir, onWin = _ => effectiveSpec.foreach { cols =>
-          if (cols.nonEmpty)
-            Files.writeString(partitionsFile(root), cols.mkString(","))
-          else Files.deleteIfExists(partitionsFile(root))
-        })
+        Staged(dir, onWin = _ => effectiveSpec.foreach(cols =>
+          editConfig(root)(_.copy(partitionCols = cols))))
       }
     }
   }
@@ -1459,13 +1467,11 @@ object SnapshotStore {
         .write.mode("overwrite").parquet(s"$dir/_changes")
     if (!tryCommit(dstRoot, expectedCurrent = -1L, dir))
       throw new CommitConflictException(s"clone target $dstRoot already initialized")
-    // config markers land only after the v0 commit is won (same race rule
-    // as init)
-    if (keys.nonEmpty) Files.writeString(cdcConfigFile(dstRoot), keys.mkString(","))
-    if (Files.exists(constraintsFile(srcRoot)))
-      Files.copy(constraintsFile(srcRoot), constraintsFile(dstRoot))
-    if (Files.exists(partitionsFile(srcRoot)))
-      Files.copy(partitionsFile(srcRoot), partitionsFile(dstRoot))
+    // config lands only after the v0 commit is won (same race rule as
+    // init); the clone carries keys, constraints and the partition spec
+    val cfg = readConfig(srcRoot)
+    editConfig(dstRoot)(_.copy(cdcKeys = keys, constraints = cfg.constraints,
+      partitionCols = cfg.partitionCols))
     Snapshot(0L, dir)
   }
 
@@ -1521,9 +1527,9 @@ object SnapshotStore {
   }
 
   /** Squash-publish branch `name`'s head onto `root` as one commit.
-    * Layout/config changes staged on the branch (partition marker)
-    * follow the publish, like RESTORE. The branch itself is left in
-    * place for [[dropBranch]] — publishing twice is refused by the
+    * Layout/config changes staged on the branch (partition spec, CHECK
+    * constraints) follow the publish, like RESTORE. The branch itself is
+    * left in place for [[dropBranch]] — publishing twice is refused by the
     * staleness/overlap checks (the publish itself advanced the source
     * and touched the branch's own keys).
     *
@@ -1610,59 +1616,24 @@ object SnapshotStore {
     if (!tryCommit(root, cur.version, dir))
       throw new CommitConflictException(
         s"$root advanced while publishing branch '$name'; re-fork")
-    // config markers staged on the branch follow the publish — written
-    // after the CAS win (the restore/alterPartitionSpec crash-window rule)
-    val bp = partitionsFile(br)
-    if (Files.exists(bp))
-      Files.copy(bp, partitionsFile(root),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else Files.deleteIfExists(partitionsFile(root))
-    // CHECK constraints added/dropped on the branch are part of the
-    // audited state — they publish with it
-    val bc = constraintsFile(br)
-    if (Files.exists(bc))
-      Files.copy(bc, constraintsFile(root),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else Files.deleteIfExists(constraintsFile(root))
-    // branch-staged RENAME COLUMNs re-version into the SOURCE's feed log
-    // at the publish commit: pre-publish frames of the source then resolve
-    // through the chain (guarded `cv < publishVersion`) instead of
-    // null-filling, and the _cdc config follows a renamed key
-    if (brLog.nonEmpty) {
-      val lines = brLog.map { case (_, old, nw) =>
-        s"${cur.version + 1}\t$old\t$nw" }.mkString("", "\n", "\n")
-      Files.writeString(feedRenamesFile(root), lines,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      if (keys.nonEmpty && keys != cdcKeys(root))
-        Files.writeString(cdcConfigFile(root), keys.mkString(","))
-    }
+    // config staged on the branch follows the publish — written after the
+    // CAS win (the restore/alterPartitionSpec crash-window rule): the
+    // partition spec, and the CHECK constraints added/dropped on the
+    // branch (part of the audited state). Branch-staged RENAME COLUMNs
+    // re-version into the SOURCE's feed log at the publish commit:
+    // pre-publish frames of the source then resolve through the chain
+    // (guarded `cv < publishVersion`) instead of null-filling, and the CDC
+    // keys follow a renamed key
+    val brCfg = readConfig(br)
+    editConfig(root)(c => c.copy(
+      partitionCols = brCfg.partitionCols,
+      constraints = brCfg.constraints,
+      renames = c.renames ++
+        brLog.map { case (_, old, nw) => (cur.version + 1, old, nw) },
+      cdcKeys = if (brLog.nonEmpty && keys.nonEmpty) keys else c.cdcKeys))
     Snapshot(cur.version + 1, dir)
   }
 
-  /** FAST-FORWARD / REBASE publish (the Iceberg cherry-pick answer to
-    * "WAP collides with live ingest"): the source advanced past the fork
-    * base, so the plain squash would overwrite interim commits. When it
-    * can be done SOUNDLY, replay the branch's squash diff (vs its fork
-    * base) onto the CURRENT head as one keyed merge:
-    *
-    *   - the table must have a change feed: the interim commits' touched
-    *     keys are provable from their change frames, nothing else;
-    *   - the interim key set and the branch diff's key set must be
-    *     DISJOINT — every row the audit saw is then still exactly what
-    *     the source holds, so the replayed statement is the audited one;
-    *   - neither side may have changed schema / layout / constraints /
-    *     renames mid-flight (a pure keyed replay has no sound answer for
-    *     those — re-fork).
-    *
-    * Anything else refuses with the re-fork message. Cost is O(diff)
-    * under the table's own DML granularity: touched partitions rewrite,
-    * untouched ones hard-link (the transactPartial machinery), so a long
-    * audit next to continuous COPY INTO publishes without re-staging.
-    * A writer landing between the disjointness proof and the commit fails
-    * the version pin → StaleStampException → [[publishBranch]] re-derives
-    * the proof.
-    */
   /** Is the branch's schema delta vs its fork base the ADDITIVE subset a
     * rebase can replay — every base column still present (case-insensitive)
     * at the same or a widened type, every new column nullable, recursing
@@ -1744,6 +1715,29 @@ object SnapshotStore {
       }
     })
 
+  /** FAST-FORWARD / REBASE publish (the Iceberg cherry-pick answer to
+    * "WAP collides with live ingest"): the source advanced past the fork
+    * base, so the plain squash would overwrite interim commits. When it
+    * can be done SOUNDLY, replay the branch's squash diff (vs its fork
+    * base) onto the CURRENT head as one keyed merge:
+    *
+    *   - the table must have a change feed: the interim commits' touched
+    *     keys are provable from their change frames, nothing else;
+    *   - the interim key set and the branch diff's key set must be
+    *     DISJOINT — every row the audit saw is then still exactly what
+    *     the source holds, so the replayed statement is the audited one;
+    *   - neither side may have changed schema / layout / constraints /
+    *     renames mid-flight (a pure keyed replay has no sound answer for
+    *     those — re-fork).
+    *
+    * Anything else refuses with the re-fork message. Cost is O(diff)
+    * under the table's own DML granularity: touched partitions rewrite,
+    * untouched ones hard-link (the transactPartial machinery), so a long
+    * audit next to continuous COPY INTO publishes without re-staging.
+    * A writer landing between the disjointness proof and the commit fails
+    * the version pin → StaleStampException → [[publishBranch]] re-derives
+    * the proof.
+    */
   private def rebasePublish(spark: SparkSession, root: String, name: String,
       br: String, baseV: Long, head: Snapshot, cur: Snapshot,
       baseSchemaOverride: Option[org.apache.spark.sql.types.StructType] = None): Snapshot = {
@@ -1789,11 +1783,10 @@ object SnapshotStore {
     }
     val headSchema = readSchema(spark, head)
     val curSchema = readSchema(spark, cur)
-    def fileStr(p: Path): String =
-      if (Files.exists(p)) Files.readString(p) else ""
-    if (fileStr(partitionsFile(br)) != fileStr(partitionsFile(root)))
+    val (brCfg, rootCfg) = (readConfig(br), readConfig(root))
+    if (brCfg.partitionCols != rootCfg.partitionCols)
       refuse("the partition layout diverged")
-    if (fileStr(constraintsFile(br)) != fileStr(constraintsFile(root)))
+    if (brCfg.constraints != rootCfg.constraints)
       refuse("the CHECK constraints diverged")
     // the key-only disjointness proof — shared by the schema-evolution
     // path (which must prove BEFORE committing the branch's ALTER onto
@@ -2031,15 +2024,6 @@ object SnapshotStore {
     try check() catch { case e: Throwable => onViolation(); throw e }
   }
 
-  /** Append (or whole-table replace, `overwrite`) through the commit
-    * protocol — the INSERT INTO path shared by SqlDml and the catalog's V1
-    * write fallback. Columns are aligned BY NAME against the live table
-    * schema and cast; missing nullable columns null-fill (the MERGE INSERT
-    * arm convention). On CDC tables an append enforces key freshness (one
-    * left-semi probe against the base — an `insert` change for a live key
-    * corrupts downstream apply) and emits the appended rows as its change
-    * set; an overwrite falls back to the generic keyed diff.
-    */
   // ---- identity columns (GENERATED … AS IDENTITY) ----------------------
 
   private def identityFile(dir: String): Path = Paths.get(dir, "_identity.json")
@@ -2198,7 +2182,16 @@ object SnapshotStore {
         .cast(f.dataType)))
   }
 
-  /** @param onReplay invoked (instead of staging) when the stamp guard
+  /** Append (or whole-table replace, `overwrite`) through the commit
+    * protocol — the INSERT INTO path shared by SqlDml and the catalog's V1
+    * write fallback. Columns are aligned BY NAME against the live table
+    * schema and cast; missing nullable columns null-fill (the MERGE INSERT
+    * arm convention). On CDC tables an append enforces key freshness (one
+    * left-semi probe against the base — an `insert` change for a live key
+    * corrupts downstream apply) and emits the appended rows as its change
+    * set; an overwrite falls back to the generic keyed diff.
+    *
+    * @param onReplay invoked (instead of staging) when the stamp guard
     *   proves EVERY asserted stamp already covered — the commit was a
     *   replayed batch and this call wrote nothing. Callers that report
     *   per-invocation effects (COPY INTO's files_loaded) need the signal;
@@ -2621,25 +2614,16 @@ object SnapshotStore {
   }
 
   // ---- FEED rename log ------------------------------------------------------
-  // `_column_renames.tsv` at root: one `version TAB old TAB new` line per
-  // RENAME COLUMN commit, append-only, NEVER healed — the change feed's
-  // name history. Data reads resolve renames from each snapshot's
-  // `_renames.tsv` sidecar (dropped when a full rewrite re-stages files
-  // under logical names); change FRAMES are immutable history, so their
-  // resolution must survive that heal.
-
-  private def feedRenamesFile(root: String): Path =
-    Paths.get(root, "_column_renames.tsv")
+  // The config record's `rename TAB version TAB old TAB new` entries, one
+  // per renamed column of a RENAME COLUMN commit, append-only, NEVER
+  // healed — the change feed's name history. Data reads resolve renames
+  // from each snapshot's `_renames.tsv` sidecar (dropped when a full
+  // rewrite re-stages files under logical names); change FRAMES are
+  // immutable history, so their resolution must survive that heal.
 
   /** The rename log, oldest first: (version, oldName, newName). */
-  private[graft] def feedRenames(root: String): Seq[(Long, String, String)] = {
-    val f = feedRenamesFile(root)
-    if (!Files.exists(f)) Nil
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { l =>
-      val p = l.split("\t", 3)
-      (p(0).toLong, p(1), p(2))
-    }.toSeq.sortBy(_._1)
-  }
+  private[graft] def feedRenames(root: String): Seq[(Long, String, String)] =
+    readConfig(root).renames.sortBy(_._1)
 
   /** Walk `name`'s chain BACKWARD through the log: the (oldName,
     * renamedAtVersion) legs, newest first — a frame committed before

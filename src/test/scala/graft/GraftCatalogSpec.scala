@@ -700,6 +700,14 @@ class GraftCatalogSpec extends SparkSpec {
     assert(meta.get("tier").contains("gold"))
     spark.sql("ALTER NAMESPACE graft.nsp UNSET PROPERTIES ('tier')")
     assert(!meta.contains("tier") && meta.get("team").contains("data-eng"))
+    // the property edits lock the namespace dir without turning it into a
+    // table: it still lists as a namespace and never as a table
+    val namespaces = spark.sql("SHOW NAMESPACES IN graft").collect()
+      .map(_.getString(0)).toSet
+    assert(namespaces("nsp"), namespaces.toString)
+    val tables = spark.sql("SHOW TABLES IN graft").collect()
+      .map(_.getString(1)).toSet
+    assert(!tables("nsp"), tables.toString)
     // DESCRIBE NAMESPACE EXTENDED surfaces them through SQL
     val desc = spark.sql("DESCRIBE NAMESPACE EXTENDED graft.nsp")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
