@@ -811,7 +811,7 @@ object Temporal {
     // Q90 [extension: schema evolution DDL] `ALTER TABLE ADD COLUMN` and
     // `RENAME COLUMN` as METADATA-ONLY commits: SnapshotStore.alterSchema
     // hard-links the base snapshot's parquet files into the new version's
-    // dir and pins the evolved schema in `_schema.json` — zero data
+    // dir and pins the evolved schema in its snapshot record — zero data
     // rewrite (at 100 TB a column change that rewrites the table is a
     // non-starter; on an object store the link is a manifest
     // re-reference). Old rows null-fill at read via standard parquet
@@ -1257,9 +1257,9 @@ object Temporal {
     // 100 TB (a day-partitioned event table answers a one-day query by
     // listing one directory). The gate require()s the physical claims:
     // planned files for one segment live under exactly that partition dir
-    // and number strictly fewer than the full scan's. The pinned
-    // `_schema.json` keeps partition values on their committed types (a
-    // BIGINT partition must not come back as an inferred INT), and DML
+    // and number strictly fewer than the full scan's. The schema pinned in
+    // the snapshot record keeps partition values on their committed types
+    // (a BIGINT partition must not come back as an inferred INT), and DML
     // rewrites preserve the layout because staging is partition-aware.
     "q93_partitioned" -> QueryDef(
       build = (s, d) => {

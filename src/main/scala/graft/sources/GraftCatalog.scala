@@ -37,7 +37,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     which would corrupt snapshot immutability)
   *   - `CREATE TABLE / CTAS / DROP / ALTER TABLE ADD|DROP COLUMN`
   *     (ALTER is metadata-only: [[SnapshotStore.alterSchema]] commits a
-  *     hard-link version with a pinned `_schema.json` — zero data rewrite)
+  *     hard-link version whose snapshot record pins the new schema — zero
+  *     data rewrite)
   *
   * Scan path: `loadTable` pins a SNAPSHOT (analysis-time version
   * resolution, so one query sees one consistent version even under
@@ -333,7 +334,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * TABLE; its DEFAULT bridge to the StructType form drops the identity
     * spec on the floor, so convert the columns ourselves — identity
     * (start/step/allowExplicitInsert) and DEFAULT both land as field
-    * metadata, the same encoding ALTER writes and `_schema.json` pins.
+    * metadata, the same encoding ALTER writes and the snapshot record pins.
     */
   override def createTable(ident: Identifier,
       columns: Array[org.apache.spark.sql.connector.catalog.Column],
@@ -605,7 +606,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           // ADD COLUMN … DEFAULT v: standard-SQL backfill WITHOUT a
           // rewrite — the default rides as the field's CURRENT_DEFAULT /
           // EXISTS_DEFAULT metadata (Spark's own column-default contract),
-          // pinned in _schema.json. Files written BEFORE the column
+          // pinned in the snapshot record. Files written BEFORE the column
           // existed lack it physically, and the reader fills the
           // EXISTS_DEFAULT at scan time — so at 100 TB the "backfill" is
           // one metadata commit, never a table rewrite; rows written
@@ -1559,7 +1560,7 @@ object GraftCatalog {
 
   /** `CALL graft.system.clone('ns.src', 'ns.dst')` — shallow-clone the
     * source's current snapshot into a NEW independent table (hard-linked
-    * v0, constraints + CDC keys carried). See [[SnapshotStore.shallowClone]].
+    * v0, config record carried). See [[SnapshotStore.shallowClone]].
     */
   private[sources] val CloneProc: GraftCatalog => UnboundProcedure = cat =>
     new Proc("clone",
@@ -1970,22 +1971,25 @@ private[sources] class GraftTable(spark: SparkSession, tableName: String,
   private lazy val tableTransformSpecs: Seq[SnapshotStore.TransformSpec] =
     SnapshotStore.transformSpecs(root)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // parquet footers answer aggregates only for a plain snapshot: they
+    // count deletion-vector-deleted rows, and the top-level files alone
+    // miss the rows under a spec-spanning snapshot's `_spec<i>/` eras
+    val footerAggregates = !hasDeletionVector && !hasEvolvedSpecs
     if (Files.isDirectory(Paths.get(snap.dataDir, "_manifest")) ||
-        SnapshotStore.hasDv(snap.dataDir) ||
-        SnapshotStore.isEvolved(snap.dataDir) ||
-        tableTransformSpecs.nonEmpty)
+        !footerAggregates || tableTransformSpecs.nonEmpty)
       // stats-maintained snapshot (manifest file skipping at planning
-      // time) — or a deletion-vector-bearing one, whose builder must
-      // refuse footer-based aggregate pushdown (deleted rows would count)
-      // — or a transform-partitioned one, whose builder derives partition
-      // filters from source-column predicates (hidden partitioning)
+      // time) — or one whose builder must refuse footer-based aggregate
+      // pushdown — or a transform-partitioned one, whose builder derives
+      // partition filters from source-column predicates (hidden
+      // partitioning)
       new org.apache.spark.sql.GraftPrunedScanBuilder(
         spark, tableName, snap.dataDir, tableSchema, options,
-        tableTransformSpecs)
+        footerAggregates, tableTransformSpecs)
     else ParquetTable(tableName, spark, options, Seq(snap.dataDir),
       Some(tableSchema), classOf[ParquetFileFormat])
       .newScanBuilder(options)
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!pinned,

@@ -120,46 +120,50 @@ object SnapshotStore {
 
   private def configFile(root: String): Path = Paths.get(root, "_table.tsv")
 
+  /** The line codec of both records (this one and the snapshot record,
+    * [[readState]]): the non-empty lines of `f` folded from `empty`, each
+    * handed to `entry` as its kind and its TAB-split fields. An entry kind
+    * `entry` does not know is refused.
+    */
+  private def readEntries[R](f: Path, empty: R)(
+      entry: PartialFunction[(R, String, Array[String]), R]): R =
+    Files.readString(f).linesIterator.filter(_.nonEmpty).foldLeft(empty) { (r, l) =>
+      val Array(kind, rest) = l.split("\t", 2)
+      entry.applyOrElse((r, kind, rest.split("\t", -1)), (_: (R, String, Array[String])) =>
+        throw new IllegalStateException(s"unknown entry '$kind' in $f"))
+    }
+
+  /** One `kind TAB fields` line per entry, the inverse of [[readEntries]]. */
+  private def renderEntries(entries: Seq[Seq[Any]]): String =
+    entries.map(_.mkString("\t")).mkString("", "\n", "\n")
+
   private def readConfig(root: String): TableConfig = {
     val f = configFile(root)
     if (!Files.exists(f)) return TableConfig()
-    Files.readString(f).linesIterator.filter(_.nonEmpty)
-      .foldLeft(TableConfig()) { (c, l) =>
-        val Array(kind, rest) = l.split("\t", 2)
-        def fields(n: Int): Array[String] = rest.split("\t", n)
-        kind match {
-          case "cdc" => c.copy(cdcKeys = c.cdcKeys :+ rest)
-          case "partition" => c.copy(partitionCols = c.partitionCols :+ rest)
-          case "dml" => c.copy(dmlMode = rest)
-          case "constraint" =>
-            val Array(n, sql) = fields(2)
-            c.copy(constraints = c.constraints :+ (n -> sql))
-          case "transform" =>
-            val Array(pcol, k, src, arg, tz) = fields(5)
-            c.copy(transforms =
-              c.transforms :+ TransformSpec(pcol, k, src, arg.toInt, tz))
-          case "property" =>
-            val Array(k, v) = fields(2)
-            c.copy(properties = c.properties + (k -> v))
-          case "rename" =>
-            val Array(v, o, n) = fields(3)
-            c.copy(renames = c.renames :+ ((v.toLong, o, n)))
-          case other =>
-            throw new IllegalStateException(s"unknown entry '$other' in $f")
-        }
-      }
+    readEntries(f, TableConfig()) {
+      case (c, "cdc", Array(k)) => c.copy(cdcKeys = c.cdcKeys :+ k)
+      case (c, "partition", Array(p)) => c.copy(partitionCols = c.partitionCols :+ p)
+      case (c, "dml", Array(m)) => c.copy(dmlMode = m)
+      case (c, "constraint", Array(n, sql @ _*)) =>
+        c.copy(constraints = c.constraints :+ (n -> sql.mkString("\t")))
+      case (c, "transform", Array(pcol, k, src, arg, tz)) =>
+        c.copy(transforms =
+          c.transforms :+ TransformSpec(pcol, k, src, arg.toInt, tz))
+      case (c, "property", Array(k, v)) =>
+        c.copy(properties = c.properties + (k -> v))
+      case (c, "rename", Array(v, o, n)) =>
+        c.copy(renames = c.renames :+ ((v.toLong, o, n)))
+    }
   }
 
-  private def renderConfig(c: TableConfig): String = (
-    c.cdcKeys.map(k => s"cdc\t$k") ++
-      c.partitionCols.map(p => s"partition\t$p") ++
-      Seq(s"dml\t${c.dmlMode}") ++
-      c.constraints.map { case (n, sql) => s"constraint\t$n\t$sql" } ++
-      c.transforms.map(s =>
-        s"transform\t${s.pcol}\t${s.kind}\t${s.src}\t${s.arg}\t${s.tz}") ++
-      c.properties.toSeq.sortBy(_._1).map { case (k, v) => s"property\t$k\t$v" } ++
-      c.renames.map { case (v, o, n) => s"rename\t$v\t$o\t$n" }
-  ).mkString("", "\n", "\n")
+  private def renderConfig(c: TableConfig): String = renderEntries(
+    c.cdcKeys.map(k => Seq("cdc", k)) ++
+      c.partitionCols.map(p => Seq("partition", p)) ++
+      Seq(Seq("dml", c.dmlMode)) ++
+      c.constraints.map { case (n, sql) => Seq("constraint", n, sql) } ++
+      c.transforms.map(s => Seq("transform", s.pcol, s.kind, s.src, s.arg, s.tz)) ++
+      c.properties.toSeq.sortBy(_._1).map { case (k, v) => Seq("property", k, v) } ++
+      c.renames.map { case (v, o, n) => Seq("rename", v, o, n) })
 
   /** Test seam: fires inside [[editConfig]] after it reads the record and
     * before it moves the new one into place (TableConfigSpec drives
@@ -197,6 +201,67 @@ object SnapshotStore {
       cur
     }
 
+  // ---- the snapshot record -------------------------------------------------
+  // What it takes to read one snapshot dir lives in the dir itself, in ONE
+  // file, `_snapshot.tsv`, in the config record's `kind TAB fields` lines:
+  // the pinned schema, the identity high-water mark, the partition-spec
+  // eras and the RENAME COLUMN chains. It is versioned with the data: every
+  // commit has its own immutable dir, so RESTORE, clones and time travel
+  // see each version's own record. Every staged dir gets its record from
+  // [[writeState]] (via [[carryTableState]], or [[init]] for v0) before
+  // anything reads the dir or CASes it; a committed dir is never written
+  // again, so the record needs no lock. A dir without one predates the
+  // record and is refused.
+
+  /** A snapshot dir's record: its schema (pinned by every version, so
+    * field metadata and partition-column types never come from footer
+    * inference), the next unallocated identity value ([[identityNext]]),
+    * the partition-spec eras it spans ([[readSpecs]]) and its rename
+    * chains ([[readRenames]]).
+    */
+  private final case class SnapshotState(
+      schema: org.apache.spark.sql.types.StructType,
+      identityNext: Option[Long] = None,
+      specs: Seq[(String, Seq[String])] = Nil,
+      renames: Map[String, Seq[String]] = Map.empty)
+
+  private def stateFile(dir: String): Path = Paths.get(dir, "_snapshot.tsv")
+
+  /** Snapshot dir `dir`'s record; refuses a dir that has none (written by
+    * a build that kept the record in separate files, whose spec eras and
+    * rename chains this build cannot see).
+    */
+  private def readState(dir: String): SnapshotState = {
+    val f = stateFile(dir)
+    val empty = SnapshotState(new org.apache.spark.sql.types.StructType())
+    try readEntries(f, empty) {
+      case (s, "schema", Array(json)) => s.copy(schema =
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      case (s, "identity", Array(n)) => s.copy(identityNext = Some(n.toLong))
+      case (s, "spec", Array(sub, cols)) =>
+        s.copy(specs = s.specs :+ (sub -> cols.split(",").toSeq.filter(_.nonEmpty)))
+      case (s, "rename", Array(logical, olds @ _*)) =>
+        s.copy(renames = s.renames + (logical.toLowerCase -> olds))
+    } catch {
+      case _: java.nio.file.NoSuchFileException =>
+        throw new IllegalStateException(
+          if (!Files.isDirectory(Paths.get(dir))) s"snapshot dir $dir does not exist"
+          else s"snapshot dir $dir has no record (${f.getFileName}): it was " +
+            "written by an older build, which kept its schema, spec eras and " +
+            "rename chains in separate files; reading it here could lose " +
+            "rows or null columns")
+    }
+  }
+
+  /** The one writer of a staged dir's record. */
+  private def writeState(dir: String, s: SnapshotState): Unit =
+    Files.writeString(stateFile(dir), renderEntries(
+      Seq(Seq("schema", s.schema.json)) ++
+        s.identityNext.map(n => Seq("identity", n)) ++
+        s.specs.map { case (sub, cols) => Seq("spec", sub, cols.mkString(",")) } ++
+        s.renames.toSeq.sortBy(_._1).map { case (k, olds) => "rename" +: k +: olds }))
+
   /** The table's hive-style partition columns (empty = unpartitioned).
     * Set at [[init]]; every staged snapshot lays its files out as
     * `col=value/` dirs, so reads prune whole directories on partition
@@ -211,8 +276,8 @@ object SnapshotStore {
   //
   // `ALTER ... SET PARTITION SPEC` must not rewrite 100 TB of history:
   // committed files KEEP their layout; only data written after the change
-  // uses the new one. A snapshot that spans specs records them in a
-  // `_specs.tsv` sidecar — one line per spec, `subdir TAB cols,csv` —
+  // uses the new one. A snapshot that spans specs records them as `spec`
+  // entries of its record — one per spec, `subdir TAB cols,csv` —
   // where subdir "." is the dir's top level (the original layout) and
   // each later spec lives under `_spec<i>/` (underscore-prefixed, so
   // Spark's own listing of the top level never descends into it). Reads
@@ -220,15 +285,13 @@ object SnapshotStore {
   // prune directories in new-spec subtrees and fall back to row-group
   // stats on old files — exactly Iceberg's split planning. Any full
   // rewrite (OPTIMIZE, INSERT OVERWRITE, full-COW DML) stages entirely in
-  // the CURRENT spec and drops the sidecar: migration is one compaction,
+  // the CURRENT spec and drops the eras: migration is one compaction,
   // and the table heals back to single-spec. Partition-SCOPED operations
   // (partial DML/compaction, MoR) refuse on a spanning table — their
   // "touched partitions" contract has no meaning across two layouts.
 
-  private def specsFile(dir: String): Path = Paths.get(dir, "_specs.tsv")
-
   /** True when snapshot dir `dir` spans more than one partition spec. */
-  private[graft] def isEvolved(dir: String): Boolean = Files.exists(specsFile(dir))
+  private[graft] def isEvolved(dir: String): Boolean = readSpecs(dir).nonEmpty
 
   /** True when the table's HEAD snapshot spans partition specs — the
     * probe [[rewriteRows]] routes on to pick the per-era scoped
@@ -241,25 +304,13 @@ object SnapshotStore {
   /** The specs a snapshot dir spans, oldest first: (subdir, cols).
     * Empty when the dir predates any evolution (single implicit spec).
     */
-  private[graft] def readSpecs(dir: String): Seq[(String, Seq[String])] = {
-    val f = specsFile(dir)
-    if (!Files.exists(f)) Nil
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { l =>
-      val parts = l.split("\t", 2)
-      (parts(0), if (parts.length < 2) Nil
-        else parts(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    }.toSeq
-  }
-
-  private def writeSpecs(dir: String, specs: Seq[(String, Seq[String])]): Unit =
-    Files.writeString(specsFile(dir),
-      specs.map { case (sub, cols) => s"$sub\t${cols.mkString(",")}" }
-        .mkString("\n"))
+  private[graft] def readSpecs(dir: String): Seq[(String, Seq[String])] =
+    readState(dir).specs
 
   /** The hive partition columns a single-spec snapshot dir PHYSICALLY
     * lays out, read from its deepest `col=value` dir chain — the
     * version-pinned truth for `$specs` on snapshots that predate (or
-    * healed away) any `_specs.tsv`. Empty = flat files.
+    * healed away) any spec eras. Empty = flat files.
     */
   private[graft] def layoutCols(dir: String): Seq[String] = {
     def descend(p: Path, acc: Seq[String]): Seq[String] = {
@@ -298,7 +349,7 @@ object SnapshotStore {
       !segs.exists(_.startsWith("_"))
 
   /** Change the table's partition spec WITHOUT rewriting data — a
-    * metadata-only commit (hard-linked files + the specs sidecar), the
+    * metadata-only commit (hard-linked files + the new spec era), the
     * Iceberg partition-evolution shape. New appends land under the new
     * spec; history keeps its layout; reads span both; OPTIMIZE migrates.
     * A `_dv` deletion-vector sidecar rides the evolve untouched: its
@@ -335,8 +386,7 @@ object SnapshotStore {
       val specs = current :+ (s"_spec${current.size}", newCols)
       val dir = freshDir(root)
       linkParquetTree(base.dataDir, dir)
-      carryTableState(base.dataDir, dir, Some(schema))
-      writeSpecs(dir, specs)
+      carryTableState(base.dataDir, dir, edit = _.copy(specs = specs))
       // the stats manifest is deliberately NOT carried: a manifest is a
       // COMPLETE file list (absent file = pruned away), and files appended
       // under later specs would be absent — skipping resumes when the
@@ -438,8 +488,9 @@ object SnapshotStore {
     // partitioning, and an unclustered partitionBy write of the table's
     // BIGGEST write (the initial load) would fan tasks × dirs sliver files
     val dir = writeStaged(root, Some(df), partitionBy)._1
-    // v0 pins its schema like every later version (see [[transactImpl]])
-    Files.writeString(schemaFile(dir), df.schema.json)
+    // v0's record pins its schema; every later version carries its base's
+    // record ([[carryTableState]])
+    writeState(dir, SnapshotState(df.schema))
     if (statsCols.nonEmpty) writeManifest(spark, dir, statsCols)
     if (cdcKeys.nonEmpty && !linkInsertChanges(Paths.get(dir))) {
       // partitioned layout (or zero staged files): the linked-frame
@@ -993,29 +1044,19 @@ object SnapshotStore {
         "transform(txn_stamps, s -> named_struct('app_id', s._1, 'version', s._2))"))
   }
 
-  /** The snapshot's schema: the pinned `_schema.json` when the version was
-    * created by a metadata-only ALTER ([[alterSchema]]), inferred from the
-    * parquet footers otherwise.
+  /** The snapshot's schema, as its record pins it: every version pins
+    * one (v0 at [[init]], each later version through [[carryTableState]];
+    * [[alterSchema]] pins the evolved one), so it is never inferred from
+    * parquet footers.
     */
   def readSchema(spark: SparkSession, snap: Snapshot):
       org.apache.spark.sql.types.StructType =
-    pinnedSchema(snap.dataDir).getOrElse(spark.read.parquet(snap.dataDir).schema)
-
-  private def schemaFile(dir: String): Path = Paths.get(dir, "_schema.json")
-
-  /** Snapshot dir `dir`'s pinned schema; None on a dir that pins none. */
-  private def pinnedSchema(dir: String):
-      Option[org.apache.spark.sql.types.StructType] = {
-    val f = schemaFile(dir)
-    if (!Files.exists(f)) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+    readState(snap.dataDir).schema
 
   def read(spark: SparkSession, snap: Snapshot): DataFrame =
-    // pinned schema when present: evolved columns null-fill in the
-    // vectorized reader (ALTER), partition values keep their committed
-    // types and positions (partitioned layouts) — see readDir
+    // the pinned schema: evolved columns null-fill in the vectorized
+    // reader (ALTER), partition values keep their committed types and
+    // positions (partitioned layouts) — see readDir
     readDir(spark, snap.dataDir)
 
   def read(spark: SparkSession, root: String): DataFrame =
@@ -1026,7 +1067,7 @@ object SnapshotStore {
     * parquet file of the base snapshot (zero data movement — at 100 TB a
     * column add that rewrites the table is a non-starter; on an object
     * store the same commit just re-references the files in a manifest) and
-    * pins the evolved schema in `_schema.json`, which [[read]] honors.
+    * pins the evolved schema in its record, which [[read]] honors.
     * Added columns must be nullable (existing rows null-fill at read).
     * Runs under the same optimistic CAS as any transaction. The new
     * version carries no `_manifest` (stats columns may have changed); on a
@@ -1035,8 +1076,8 @@ object SnapshotStore {
     *
     * `renames` (`newName -> oldName`, applied AFTER `evolve`) is the
     * `ALTER TABLE RENAME COLUMN` path: the field keeps its type and
-    * metadata under the new name, files are hard-linked untouched, and a
-    * `_renames.tsv` name-mapping sidecar makes every read resolve the old
+    * metadata under the new name, files are hard-linked untouched, and the
+    * record's rename chains ([[readRenames]]) make every read resolve the old
     * physical name into the new logical one (the Iceberg field-id /
     * Delta column-mapping trick, by name chain instead of id). Chained
     * renames compose; a later full-rewrite commit heals the mapping.
@@ -1104,7 +1145,7 @@ object SnapshotStore {
       // rename) is never reusable — not for ADD, not as a rename target:
       // pre-rename change FRAMES carry it physically forever (the feed log
       // is append-only and a healing OPTIMIZE only drops the per-snapshot
-      // sidecar, never the frames), so a reused name would serve the OLD
+      // rename chains, never the frames), so a reused name would serve the OLD
       // column's frame values through changes()'s unguarded head leg and
       // feedNameAt would forward-walk the new column into the rename
       // target. The per-snapshot chain guard above cannot see this after a
@@ -1139,11 +1180,11 @@ object SnapshotStore {
           s"${lostSpec.mkString(", ")} of $root (directory layout)")
       val dir = freshDir(root)
       linkParquetTree(base.dataDir, dir)
-      carryTableState(base.dataDir, dir, Some(next))
-      writeRenames(dir, ren) // the evolved mapping replaces the carried one
+      // the evolved mapping replaces the carried one
+      carryTableState(base.dataDir, dir, Some(next), edit = _.copy(renames = ren))
       writeChanges(root, dir, noChanges(spark, next))
       // the append-only FEED rename log ([[feedRenames]]): unlike the
-      // per-snapshot `_renames.tsv`, this survives healing rewrites — old
+      // per-snapshot rename chains, this survives healing rewrites — old
       // change frames keep their written names forever. A renamed CDC KEY
       // column remaps the record's keys in the same edit — after the CAS
       // win, like the partition spec in alterPartitionSpec (the narrow
@@ -1359,7 +1400,7 @@ object SnapshotStore {
     * `RESTORE TABLE … TO VERSION AS OF` semantics). METADATA-ONLY: the
     * target version's parquet files are hard-linked into the new version's
     * dir (on an object store this is a manifest re-reference), and its
-    * pinned `_schema.json` travels with them, so a restore across an ALTER
+    * snapshot record travels with them, so a restore across an ALTER
     * boundary rolls the schema back too. Zero data rewrite regardless of
     * table size — the property that makes "undo the bad batch" an O(files)
     * operation at 100 TB.
@@ -1390,8 +1431,8 @@ object SnapshotStore {
             _.write.format("noop").mode("overwrite").save())
         val dir = freshDir(root)
         linkParquetTree(target.dataDir, dir)
-        // the pinned schema, the partition spec, the rename mapping and the
-        // identity high-water mark all travel WITH the snapshot: restoring
+        // the snapshot record — pinned schema, spec eras, rename chains and
+        // identity high-water mark — travels WITH the snapshot: restoring
         // to a pre-evolution version must also restore the write-side spec
         // (or the next append would lay out rows by a spec the restored
         // snapshot never had), and the identity mark rolls back with the
@@ -1401,12 +1442,12 @@ object SnapshotStore {
         val effectiveSpec = readSpecs(target.dataDir) match {
           case s if s.nonEmpty => Some(s.last._2)
           case _ =>
-            // sidecar-less target WITH files: its PHYSICAL layout is the
-            // truth — the current head's sidecar is NOT (after
-            // evolve→heal→re-evolve, the head sidecar's first spec is the
+            // era-less target WITH files: its PHYSICAL layout is the
+            // truth — the current head's eras are NOT (after
+            // evolve→heal→re-evolve, the head's first era is the
             // HEAL-time layout, which the target may predate). An EMPTY
-            // target has no physical truth; the best record is the head
-            // sidecar's ORIGINAL spec (exact for a plain pending
+            // target has no physical truth; the best record is the head's
+            // ORIGINAL spec (exact for a plain pending
             // evolution; after a heal the original is unrecorded and the
             // declared spec stands)
             if (hasDataFiles(target.dataDir)) {
@@ -1440,8 +1481,10 @@ object SnapshotStore {
     * (Delta `CREATE TABLE … SHALLOW CLONE src`). Writes to either table
     * after the clone never touch the other (each commit stages a fresh
     * dir; the shared inodes are immutable), and table-level config travels:
-    * CHECK constraints are copied, and on CDC sources the clone keeps the
-    * keys with the cloned rows as its v0 `insert` feed (a replica built
+    * the whole config record except the feed rename log (keyed by the
+    * source's versions) is copied, so DML mode, constraints, transform
+    * specs and properties hold on the clone, and on CDC sources the clone
+    * keeps the keys with the cloned rows as its v0 `insert` feed (a replica built
     * from the clone's feed starts from the cloned state). The dominant use
     * is zero-cost dev/test forks of production tables.
     */
@@ -1455,11 +1498,11 @@ object SnapshotStore {
     Files.createDirectories(commitsDir(dstRoot))
     val dir = freshDir(dstRoot)
     linkParquetTree(src.dataDir, dir)
-    // schema, spec history and renames travel; the clone continues identity
-    // numbering
+    // the snapshot record travels: schema, spec eras and rename chains, and
+    // the clone continues identity numbering
     carryTableState(src.dataDir, dir)
-    val keys = cdcKeys(srcRoot)
-    if (keys.nonEmpty && !linkInsertChanges(Paths.get(dir)))
+    val cfg = readConfig(srcRoot)
+    if (cfg.cdcKeys.nonEmpty && !linkInsertChanges(Paths.get(dir)))
       // non-flat clone (partition/spec subtrees, a _dv sidecar whose
       // deleted positions must not enter the feed, renamed physical
       // names): materialize the resolved read the legacy way
@@ -1468,10 +1511,8 @@ object SnapshotStore {
     if (!tryCommit(dstRoot, expectedCurrent = -1L, dir))
       throw new CommitConflictException(s"clone target $dstRoot already initialized")
     // config lands only after the v0 commit is won (same race rule as
-    // init); the clone carries keys, constraints and the partition spec
-    val cfg = readConfig(srcRoot)
-    editConfig(dstRoot)(_.copy(cdcKeys = keys, constraints = cfg.constraints,
-      partitionCols = cfg.partitionCols))
+    // init); the feed rename log stays behind: its versions are the source's
+    editConfig(dstRoot)(_ => cfg.copy(renames = Nil))
     Snapshot(0L, dir)
   }
 
@@ -2026,21 +2067,16 @@ object SnapshotStore {
 
   // ---- identity columns (GENERATED … AS IDENTITY) ----------------------
 
-  private def identityFile(dir: String): Path = Paths.get(dir, "_identity.json")
-
-  /** The next unallocated identity value: the `_identity.json` sidecar of
-    * the current snapshot's dir, `start` if none was ever written. The
-    * sidecar is SNAPSHOT STATE — it rides commits like `_schema.json`
-    * (carried forward by [[carryTableState]] through DML/OPTIMIZE,
-    * linked by RESTORE/CLONE), so the high-water mark is versioned with
-    * the data and protected by the same commit CAS: a writer that read a
-    * stale mark loses the CAS and reassigns on rebase.
+  /** The next unallocated identity value: the `identity` entry of the
+    * current snapshot's record, `start` if none was ever written. The mark
+    * is SNAPSHOT STATE — it rides commits with the pinned schema (carried
+    * forward by [[carryTableState]] through DML/OPTIMIZE, RESTORE and
+    * CLONE), so the high-water mark is versioned with the data and
+    * protected by the same commit CAS: a writer that read a stale mark
+    * loses the CAS and reassigns on rebase.
     */
-  def identityNext(root: String, start: Long): Long = {
-    val f = identityFile(latest(root).dataDir)
-    if (Files.exists(f)) Files.readString(f).replaceAll("[^0-9-]", "").toLong
-    else start
-  }
+  def identityNext(root: String, start: Long): Long =
+    readState(latest(root).dataDir).identityNext.getOrElse(start)
 
   /** Append with distributed identity assignment — the engine path behind
     * `GENERATED ALWAYS/BY DEFAULT AS IDENTITY (START WITH s STEP k)`.
@@ -2058,7 +2094,7 @@ object SnapshotStore {
     * non-NULL values loudly. The cache pins the partition layout across
     * the count and assignment jobs (a recomputation could repartition a
     * nondeterministic source). The new high-water mark lands in the
-    * staged dir via the transaction hook, so a lost commit race discards
+    * staged dir's record via the transaction hook, so a lost commit race discards
     * it and the rebase reassigns against the winner's mark — ids are
     * unique under concurrency by the same CAS that orders the commits.
     */
@@ -2075,8 +2111,9 @@ object SnapshotStore {
     var newNext = 0L
     val cached = scala.collection.mutable.ListBuffer[DataFrame]()
     try {
+      // the staged dir already holds its carried record
       val hook: String => Unit = dir =>
-        Files.writeString(identityFile(dir), s"""{"next":$newNext}""")
+        writeState(dir, readState(dir).copy(identityNext = Some(newNext)))
       def assignInto(base: DataFrame): DataFrame = {
         val idType = base.schema(base.schema.fieldIndex(idCol)).dataType
         val withCol =
@@ -2135,7 +2172,7 @@ object SnapshotStore {
           columnFor(f, have(f.name.toLowerCase)).cast(f.dataType).as(f.name)
         } match { case cols => assigned.select(cols: _*) }
       }
-      // assignment is layout-agnostic; the high-water sidecar rides the
+      // assignment is layout-agnostic; the high-water mark rides the
       // staged hook on every route
       routeWrite(spark, root, overwrite, maxAttempts, txn, extraTxns,
         pinCheck, onReplay, hook)(assignInto)
@@ -2370,8 +2407,8 @@ object SnapshotStore {
       val (sub, parts) = currentLayout(root, base)
       val (dir, files) = writeStaged(root, Some(rows), parts, sub)
       linkParquetTree(base.dataDir, dir)
+      carryTableState(base.dataDir, dir)
       stagedHook(dir) // e.g. the identity high-water mark
-      carryTableState(base.dataDir, dir, Some(readSchema(spark, base)))
       // file-skipping stays live across appends: manifest rows for the
       // linked files carry over, the new batch's files get their own —
       // O(batch), like the staging itself
@@ -2549,7 +2586,7 @@ object SnapshotStore {
         .drop("__dir")
       // RENAME COLUMN resolution: a frame from before a rename carries
       // the THEN-current name — an immutable historical fact the data
-      // files' `_renames.tsv` sidecar cannot serve (a healing full
+      // files' per-snapshot rename chains cannot serve (a healing full
       // rewrite drops it while old frames persist), so the durable
       // root-level rename LOG drives the feed instead. Each head field
       // resolves as a version-GUARDED coalesce down its chain:
@@ -2617,7 +2654,7 @@ object SnapshotStore {
   // The config record's `rename TAB version TAB old TAB new` entries, one
   // per renamed column of a RENAME COLUMN commit, append-only, NEVER
   // healed — the change feed's name history. Data reads resolve renames
-  // from each snapshot's `_renames.tsv` sidecar (dropped when a full
+  // from each snapshot record's rename chains (dropped when a full
   // rewrite re-stages files under logical names); change FRAMES are
   // immutable history, so their resolution must survive that heal.
 
@@ -2959,14 +2996,9 @@ object SnapshotStore {
   private def readDir(spark: SparkSession, dir: String, lineage: Boolean = false,
       files: Option[Set[String]] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, expr}
-    val specs = readSpecs(dir)
-    val pinned = pinnedSchema(dir)
-    require(pinned.isDefined || specs.isEmpty,
-      s"evolved snapshot dir $dir lacks _schema.json")
-    val renames = if (pinned.isEmpty) Map.empty[String, Seq[String]] else readRenames(dir)
+    val SnapshotState(schema, _, specs, renames) = readState(dir)
     // a fresh reader per era: DataFrameReader options accumulate
-    def reader = pinned.fold(spark.read)(s =>
-      spark.read.schema(renameExtSchema(s, renames)))
+    def reader = spark.read.schema(renameExtSchema(schema, renames))
     val eras = if (specs.isEmpty) Seq(".") else specs.map(_._1)
     def eraOf(rel: String): String =
       eras.filter(s => s != "." && rel.startsWith(s + "/")).lastOption.getOrElse(".")
@@ -2986,7 +3018,6 @@ object SnapshotStore {
     }
     // a file list no era holds reads as the empty top-level scan
     val raw = if (eraScans.nonEmpty) eraScans else Seq(reader.parquet(dir).limit(0))
-    val schema = pinned.getOrElse(raw.head.schema)
     val extra = if (lineage) Seq(DvFileCol, DvPosCol) else Nil
     // lineage relativizes against the snapshot dir's unique uuid segment:
     // the recording side (transactMoR) and the anti-join below derive the
@@ -3202,27 +3233,13 @@ object SnapshotStore {
 
   /** `ALTER TABLE RENAME COLUMN` read mapping: logical (current) name →
     * the chain of PHYSICAL names files may still carry, newest first.
-    * Stored as `_renames.tsv` (one line: logical TAB old₁ TAB old₂ …) in
-    * every snapshot dir whose files predate a rename; a full-rewrite
-    * commit stages fresh files under the logical names and drops the
-    * sidecar — renames heal on the next rewrite. Keys are lowercase.
+    * Stored as `rename` entries of the snapshot record (logical TAB old₁
+    * TAB old₂ …) of every snapshot dir whose files predate a rename; a
+    * full-rewrite commit stages fresh files under the logical names and
+    * drops them — renames heal on the next rewrite. Keys are lowercase.
     */
-  private[graft] def readRenames(dir: String): Map[String, Seq[String]] = {
-    val f = renamesFile(dir)
-    if (!Files.exists(f)) Map.empty
-    else Files.readString(f).linesIterator.filter(_.nonEmpty).map { line =>
-      val parts = line.split("\t").toSeq
-      parts.head.toLowerCase -> parts.tail
-    }.toMap
-  }
-
-  private def writeRenames(dir: String, ren: Map[String, Seq[String]]): Unit =
-    if (ren.nonEmpty)
-      Files.writeString(renamesFile(dir),
-        ren.map { case (k, olds) => (k +: olds).mkString("\t") }.mkString("\n"))
-    else { Files.deleteIfExists(renamesFile(dir)); () }
-
-  private def renamesFile(dir: String): Path = Paths.get(dir, "_renames.tsv")
+  private[graft] def readRenames(dir: String): Map[String, Seq[String]] =
+    readState(dir).renames
 
   /** Physical data files of a snapshot dir with size and parquet-footer
     * row counts — the `$files` metadata-table backing. Driver-side walk +
@@ -3331,14 +3348,14 @@ object SnapshotStore {
     * legacy way) when the layout cannot be represented by flat links:
     * partition/spec subdirectories (the multi-path feed scan must never
     * mix partition-discovered and flat layouts), a `_dv` sidecar (linked
-    * rows would resurrect deleted positions into the feed), a renames
-    * sidecar (linked files carry retired physical names the DEST root's
-    * feed log may not know), or zero staged files (an empty inferred read
-    * would fail). At 100 TB this turns init/clone feed emission from a
-    * second copy of the table into O(files) metadata.
+    * rows would resurrect deleted positions into the feed), rename
+    * chains in the staged record (linked files carry retired physical
+    * names the DEST root's feed log may not know), or zero staged files
+    * (an empty inferred read would fail). At 100 TB this turns init/clone
+    * feed emission from a second copy of the table into O(files) metadata.
     */
   private def linkInsertChanges(stagedDir: Path): Boolean = {
-    if (Files.exists(stagedDir.resolve("_renames.tsv"))) return false
+    if (readRenames(stagedDir.toString).nonEmpty) return false
     val entries = {
       val s = Files.list(stagedDir)
       try s.iterator().asScala.toSeq finally s.close()
@@ -3511,25 +3528,24 @@ object SnapshotStore {
   private def currentLayout(root: String, base: Snapshot): (String, Seq[String]) =
     readSpecs(base.dataDir).lastOption.getOrElse((".", partitionCols(root)))
 
-  /** Carry the table state a staged dir inherits from snapshot dir `from`,
-    * each file only where the stager did not write its own: the pinned
-    * `_schema.json` (`schema`, when given, is pinned first), the identity
-    * high-water mark ([[identityNext]]) and — for dirs that hard-link
-    * `from`'s files (`linked`) — the specs sidecar and the rename mapping,
-    * which describe how to read those linked files. Without the carry, a
-    * DML/OPTIMIZE commit would silently reset identity allocation. Full
-    * rewrites pass `linked = false`: their files are born in the current
-    * spec under logical names, which heals both sidecars away.
+  /** Give staged dir `dir` its record: snapshot dir `from`'s record,
+    * edited. The pinned schema becomes `schema` when given, the identity
+    * high-water mark ([[identityNext]]) carries as is (without it a
+    * DML/OPTIMIZE commit would silently reset identity allocation), and
+    * the spec eras and rename chains — which describe how to read the
+    * files linked from `from` — carry only for dirs that link them
+    * (`linked`). Full rewrites pass `linked = false`: their files are born
+    * in the current spec under logical names, which heals both away.
+    * `edit` then applies the stager's own change (a new spec era, a new
+    * rename mapping).
     */
   private def carryTableState(from: String, dir: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
-      linked: Boolean = true): Unit = {
-    schema.foreach(s => Files.writeString(schemaFile(dir), s.json))
-    val carried: Seq[String => Path] = Seq(schemaFile _, identityFile _) ++
-      (if (linked) Seq(specsFile _, renamesFile _) else Nil)
-    carried.foreach { f =>
-      if (Files.exists(f(from)) && !Files.exists(f(dir))) Files.copy(f(from), f(dir))
-    }
+      linked: Boolean = true,
+      edit: SnapshotState => SnapshotState = s => s): Unit = {
+    val base = readState(from)
+    writeState(dir, edit(if (linked) base.copy(schema = schema.getOrElse(base.schema))
+      else SnapshotState(schema.getOrElse(base.schema), base.identityNext)))
   }
 
   /** Write the commit's change frame under the staged dir — CDC tables
@@ -3739,7 +3755,7 @@ object SnapshotStore {
       require(!Files.isDirectory(Paths.get(base.dataDir, "_dv")),
         s"optimizeSmallFiles on a deletion-vector snapshot ($root): footer " +
           "row counts overcount live rows — run a full OPTIMIZE (merges the DV)")
-      require(!Files.exists(renamesFile(base.dataDir)),
+      require(readRenames(base.dataDir).isEmpty,
         s"optimizeSmallFiles on a renamed-column table ($root): data files " +
           "carry pre-rename names — run a full OPTIMIZE first")
       val meta = dataFileMeta(base.dataDir)
@@ -3775,7 +3791,7 @@ object SnapshotStore {
         val smallRel = small.map(_._1).toSet
         linkParquetTree(base.dataDir, dir,
           keep = rel => !smallRel(rel.toString))
-        carryTableState(base.dataDir, dir, Some(schema))
+        carryTableState(base.dataDir, dir)
         // layout-only: byte-identical data, EMPTY change set (the q88
         // OPTIMIZE-silence contract)
         writeChanges(root, dir, noChanges(spark, schema))
@@ -4164,11 +4180,11 @@ object SnapshotStore {
       // link every untouched partition's files into the new version
       linkParquetTree(base.dataDir, dir, withDv = false,
         keep = rel => !touchedDirs(Option(rel.getParent).fold("")(_.toString)))
-      stagedHook(dir) // e.g. the identity high-water mark
       // names/types from the linked layout's read, metadata from the
       // base pin — the read-back strips it (see mergePinnedMetadata)
       carryTableState(base.dataDir, dir,
         Some(mergePinnedMetadata(spark, root, baseDf.schema)))
+      stagedHook(dir) // e.g. the identity high-water mark
       // file-skipping continuity on partitioned tables: untouched files'
       // manifest rows carry path-rewritten (their relative layout is
       // link-preserved), touched partitions' rows drop and their fresh
@@ -4194,7 +4210,7 @@ object SnapshotStore {
     * that SPANS partition specs (evolution pending migration) — the
     * Iceberg contract that DML before the migrating OPTIMIZE stays
     * O(touched), never O(table). Each era knows its own layout from the
-    * specs sidecar, so the statement:
+    * record's spec eras, so the statement:
     *
     *   - scans every era (the lineage-bearing [[readDir]]: one scan per
     *     spec, unioned, plus `_metadata` file lineage),
@@ -4213,7 +4229,7 @@ object SnapshotStore {
     * anti-joins out of both the match scan and the touched-file re-read —
     * a DV-deleted row can neither match nor resurrect into the rewrite —
     * and carries forward pruned to the UNTOUCHED files (rewritten files'
-    * live rows migrated; their DV entries would dangle). Rename sidecars
+    * live rows migrated; their DV entries would dangle). Rename chains
     * ride through: each era scans with the rename-extended schema and the
     * DirRead coalesce resolves physical names, touched rows REWRITE under
     * their logical names (healed), and the sidecar carries forward for
@@ -4228,7 +4244,6 @@ object SnapshotStore {
       transform: DataFrame => (DataFrame, DataFrame),
       stagedHook: String => Unit): String = {
     import org.apache.spark.sql.functions.col
-    val schema = readSchema(spark, base)
     val matched = matchedRows(readDir(spark, base.dataDir, lineage = true))
     // bounded collect: one row per TOUCHED FILE (never per data row) —
     // in the URI-encoded relative form `_metadata.file_path` carries,
@@ -4251,11 +4266,11 @@ object SnapshotStore {
     // keeps its own era's layout
     linkParquetTree(base.dataDir, dir, withDv = false,
       keep = rel => !touchedDisk(rel.toString))
-    stagedHook(dir) // e.g. the identity high-water mark
     // rename carry: the linked (untouched) files still hold physical
     // pre-rename names; the rewritten files were just staged under
     // logical names and read fine either way (coalesce legs null-fill)
-    carryTableState(base.dataDir, dir, Some(schema))
+    carryTableState(base.dataDir, dir)
+    stagedHook(dir) // e.g. the identity high-water mark
     // deletion-vector carry: linked (untouched) files keep their deleted
     // positions; entries for REWRITTEN files drop
     carryDv(spark, base.dataDir, dir, col("file").isin(touchedEnc.toSeq: _*))
@@ -4322,7 +4337,7 @@ object SnapshotStore {
       // pin the schema: the dir now mixes linked and fresh files, and on
       // partitioned layouts the committed column types/order must not be
       // re-inferred from directory names
-      carryTableState(base.dataDir, dir, Some(readSchema(spark, base)))
+      carryTableState(base.dataDir, dir)
       val newDv = m.select(col(DvFileCol).cast("string").as("file"),
         col(DvPosCol).cast("long").as("pos"))
       // a no-match statement on a vector-less base writes NO sidecar — an
@@ -4360,9 +4375,9 @@ object SnapshotStore {
       val (out, suppliedChanges) = transform(read(spark, base))
       val dir = writeStaged(root, Some(out), partitionCols(root),
         rebalance = false, constraints = constraints)._1
-      stagedHook(dir) // e.g. the identity high-water-mark for THIS attempt
       carryTableState(base.dataDir, dir,
         Some(mergePinnedMetadata(spark, root, out.schema)), linked = false)
+      stagedHook(dir) // e.g. the identity high-water-mark for THIS attempt
       if (statsCols.nonEmpty || bloomCols.nonEmpty)
         writeManifest(spark, dir, statsCols, bloomCols, bloomExpectedItems)
       // statement-integrated changes when supplied; otherwise the generic

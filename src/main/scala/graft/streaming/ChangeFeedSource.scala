@@ -86,8 +86,8 @@ class ChangeFeedSource extends StreamSourceProvider {
 object ChangeFeedSource {
   /** Feed schema = the table's data schema + the CDF metadata columns.
     * Goes through [[SnapshotStore.readSchema]] so an ALTER-evolved table
-    * (pinned `_schema.json`, files unchanged) serves its EVOLVED schema,
-    * not what the parquet footers alone would infer.
+    * (schema pinned in its snapshot record, files unchanged) serves its
+    * EVOLVED schema, not what the parquet footers alone would infer.
     */
   def schemaFor(sqlContext: SQLContext, root: String): StructType = {
     val data = SnapshotStore.readSchema(

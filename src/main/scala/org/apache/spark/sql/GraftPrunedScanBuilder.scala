@@ -35,6 +35,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class GraftPrunedScanBuilder(spark: SparkSession, tableName: String,
     dataDir: String, tableSchema: StructType, options: CaseInsensitiveStringMap,
+    footerAggregates: Boolean,
     transformSpecs: Seq[graft.sources.SnapshotStore.TransformSpec] = Nil)
     extends ScanBuilder with SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
@@ -81,16 +82,13 @@ class GraftPrunedScanBuilder(spark: SparkSession, tableName: String,
     delegate.pruneColumns(requiredSchema)
   }
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    // a deletion-vector-bearing snapshot must NOT answer aggregates from
-    // parquet footers (they count deleted rows), and DvReadRewrite needs
-    // the relation's RAW columns to substitute the filtered read — refuse
-    // the pushdown so COUNT/MIN/MAX compute above the corrected scan
-    if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(dataDir, "_dv"))) return false
-    // a spec-spanning snapshot: footers of the top-level files alone
-    // would answer for a table whose newer rows live under _spec<i>/
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dataDir, "_specs.tsv"))) return false
+    // `footerAggregates` is false for a deletion-vector-bearing snapshot
+    // (footers count deleted rows, and DvReadRewrite needs the relation's
+    // RAW columns to substitute the filtered read) and for a spec-spanning
+    // one (footers of the top-level files alone would answer for a table
+    // whose newer rows live under _spec<i>/): refusing the pushdown makes
+    // COUNT/MIN/MAX compute above the corrected scan
+    if (!footerAggregates) return false
     val ok = delegate.pushAggregation(aggregation)
     if (ok) savedAgg = Some(aggregation)
     ok

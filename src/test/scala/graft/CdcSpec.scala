@@ -470,7 +470,7 @@ class CdcSpec extends SparkSpec {
     SqlDml.execute(spark, "UPDATE t SET v = v + 1 WHERE id = 1", t) // frames carry 'v'
     SnapshotStore.alterSchema(spark, root, identity,
       renames = Map("w" -> "v")) // 'v' is now a RETIRED feed name
-    // a healing OPTIMIZE drops the per-snapshot _renames.tsv sidecar — the
+    // a healing OPTIMIZE drops the snapshot record's rename chains — the
     // per-snapshot chain guard goes blind, but historical change frames
     // still physically carry 'v'; only the append-only feed log remembers
     SnapshotStore.optimize(spark, root, targetRows = 1000000L)

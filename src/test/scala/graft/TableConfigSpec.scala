@@ -80,20 +80,22 @@ class TableConfigSpec extends SparkSpec {
     SnapshotStore.restore(spark, root, toVersion = beforeEvolve)
     assert(cfg(root) == renamed)
 
-    // a clone carries the keys, the constraints and the partition spec only
+    // a clone carries the whole record but the feed rename log, whose
+    // versions are the source's
     val clone = Files.createTempDirectory("graft_cfg_clone").toString
     SnapshotStore.shallowClone(spark, root, clone)
-    val carried = Cfg(Seq("pk"), Seq("ts_day"), SnapshotStore.CopyOnWrite,
-      renamed.checks, Nil, Map.empty, Nil)
+    val carried = renamed.copy(renames = Nil)
     assert(cfg(clone) == carried)
 
-    // a branch is a clone; its constraint edit publishes with its rows
+    // a branch is a clone (so its UPDATE runs merge-on-read); its
+    // constraint edit publishes with its rows
     SnapshotStore.createBranch(spark, root, "audit")
     val br = SnapshotStore.branchRoot(root, "audit")
     assert(cfg(br) == carried)
     SnapshotStore.addTableConstraint(spark, br, "small", "v < 1000")
     SqlDml.execute(spark, "UPDATE t SET v = 9, twice = 18 WHERE pk = 1",
       Map("t" -> br))
+    assert(SnapshotStore.hasDv(SnapshotStore.latest(br).dataDir))
     assert(cfg(br) == carried.copy(checks = carried.checks + "small"))
     SnapshotStore.publishBranch(spark, root, "audit")
     assert(cfg(root) == renamed.copy(checks = renamed.checks + "small"))
