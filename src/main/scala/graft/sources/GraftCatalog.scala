@@ -1577,7 +1577,7 @@ object GraftCatalog {
           if (dst.contains("/")) dst
           else (cat.warehousePath +: dst.split('.').toSeq).mkString("/")
         val snap = SnapshotStore.shallowClone(spark, srcRoot, dstRoot)
-        InternalRow(srcVersion, spark.read.parquet(snap.dataDir).count())
+        InternalRow(srcVersion, SnapshotStore.read(spark, snap).count())
       }
     }
 

@@ -1399,6 +1399,25 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception](spark.sql("CALL graft.system.clone('cs', 'cd')"))
   }
 
+  test("CALL clone counts the clone's live rows: deletion vectors and spec eras") {
+    wh
+    spark.sql("CREATE TABLE graft.cmor (id BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('dml.mode' = 'merge-on-read')")
+    spark.sql("INSERT INTO graft.cmor VALUES (1, 10), (2, 20), (3, 30)")
+    graft.sources.SqlDml.execute(spark, "DELETE FROM graft.cmor WHERE id = 2")
+    assert(SnapshotStore.hasDv(SnapshotStore.latest(s"$wh/cmor").dataDir))
+    val mor = spark.sql("CALL graft.system.clone('cmor', 'cmor2')").head()
+    assert(mor.getLong(1) == 2L, s"deleted row counted: $mor")
+
+    spark.sql("CREATE TABLE graft.cera (id BIGINT, k STRING)")
+    spark.sql("INSERT INTO graft.cera VALUES (1, 'a')")
+    spark.sql("CALL graft.system.set_partition_spec('cera', 'k')")
+    spark.sql("INSERT INTO graft.cera VALUES (2, 'b')")
+    val eras = spark.sql("CALL graft.system.clone('cera', 'cera2')").head()
+    assert(eras.getLong(1) == 2L, s"a spec era skipped: $eras")
+    assert(spark.sql("SELECT count(*) FROM graft.cera2").head().getLong(0) == 2L)
+  }
+
   test("ADD COLUMN DEFAULT backfills old rows at scan time, no rewrite") {
     wh
     spark.sql("CREATE TABLE graft.dft (id BIGINT, v BIGINT)")
