@@ -5,7 +5,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Optimistic-concurrency commit protocol over immutable parquet snapshots —
   * the missing WRITE-side arbitration for the warehouse surface (q23c
@@ -2707,24 +2707,24 @@ object SnapshotStore {
     */
   private[graft] def netChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val feed = changes(spark, root, fromVersion, toVersion)
     val cols = feed.columns.toIndexedSeq
       .filterNot(c => c == ChangeTypeCol || c == CommitVersionCol)
-    val nonKeys = cols.filterNot(keys.contains)
     val tc = col(ChangeTypeCol)
     // within one version a key carries at most an update's pre+post pair:
     // the preimage is that version's "before", the postimage its "after"
     val ord = when(tc.isin("update_preimage", "delete"), 0).otherwise(1)
     // first/last event per key via min_by/max_by over the (version, ord)
-    // struct — NOT two row_number windows: the window form cost one
-    // exchange + two full sorts + two sort-based max(struct) aggregates
-    // per call, where this is ONE hash aggregation with map-side partials
-    // (guide §2.3/§2.4). Equivalent because (version, ord) is unique per
-    // key — a version holds at most one event per key except an update's
-    // pre(0)/post(1) pair — so "row_number()==1" IS the min/max. The
-    // event-type guards ride inside the picked struct.
+    // struct — NOT two row_number windows, which cost two full sorts and
+    // two sort-based max(struct) aggregates per call. This is ONE
+    // aggregation: a map-side partial SortAggregate, ONE exchange on the
+    // key, then the final SortAggregate (min_by/max_by keep a struct
+    // buffer, which hash aggregation cannot hold). Equivalent because
+    // (version, ord) is unique per key — a version holds at most one event
+    // per key except an update's pre(0)/post(1) pair — so
+    // "row_number()==1" IS the min/max. The event-type guards ride inside
+    // the picked struct.
     val ordKey = struct(col(CommitVersionCol).as("v"), ord.as("o"))
     val rowStructT = struct((cols.map(col) :+ tc.as(ChangeTypeCol)): _*)
     val firstLast = feed
@@ -2736,65 +2736,69 @@ object SnapshotStore {
         .isin("delete", "update_preimage"), col("__f")).as("__b") :+
       when(col("__l").getField(ChangeTypeCol)
         .isin("insert", "update_postimage"), col("__l")).as("__a")): _*)
-    def img(s: String, kind: String) = struct(
-      cols.map(c => col(s).getField(c).as(c)) :+ lit(kind).as(ChangeTypeCol): _*)
-    val changed = nonKeys
-      .map(c => !(col("__b").getField(c) <=> col("__a").getField(c)))
-      .foldLeft(lit(false))(_ || _)
-    // unchanged round-trips emit a typed sentinel the filter drops — the
-    // diffChanges trick that keeps the array expression fully typed
-    val events =
-      when(col("__b").isNull && col("__a").isNotNull,
-        array(img("__a", "insert")))
-      .when(col("__b").isNotNull && col("__a").isNull,
-        array(img("__b", "delete")))
-      .when(col("__b").isNotNull && col("__a").isNotNull && changed,
-        array(img("__b", "update_preimage"), img("__a", "update_postimage")))
-      .otherwise(array(img("__a", "__skip")))
-    agg.select(explode(events).as("__e")).select(col("__e.*"))
-      .filter(col(ChangeTypeCol) =!= "__skip")
+    changeRows(agg, cols, keys)(col("__b").isNotNull, col("__b").getField,
+      col("__a").isNotNull, col("__a").getField)
   }
 
   /** The keyed snapshot diff behind the change feed: ONE null-safe
-    * full-outer join base⋈next on the CDC keys, then a single codegen'd
-    * pass classifying each key as insert / delete / update (pre+post
-    * images via explode) / unchanged (dropped). Emitted change rows carry
+    * full-outer join base⋈next on the CDC keys, classified by
+    * [[changeRows]] in the join's own stage. Emitted change rows carry
     * the full row payload, so downstream consumers never re-join the
     * snapshot.
     *
     * Scale: the join shuffles both snapshots on the key — the honest cost
-    * of CDC for an arbitrary whole-frame `transact` transform. At 100 TB
-    * the optimization path is emitting changes from inside the write plan
-    * itself (SqlDml's MERGE already materializes the same full-outer join;
-    * its nested-CASE action resolution knows each row's fate for free) —
-    * the feed's on-disk contract stays identical, only the producer
-    * changes.
+    * of CDC for an arbitrary whole-frame `transact` transform. The row-level
+    * writes (SQL UPDATE/MERGE, the streaming upsert) avoid it by handing
+    * their own plan's before/after pairs to [[changeRows]] — the feed's
+    * on-disk contract stays identical, only the producer changes.
     */
   private[graft] def diffChanges(base: DataFrame, next: DataFrame,
       keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     val cols = next.columns.toIndexedSeq
     require(keys.forall(cols.contains), s"CDC keys $keys not all in $cols")
-    val nonKeys = cols.filterNot(keys.contains)
     val b = base.select(cols.map(col): _*).withColumn("__b", lit(true)).alias("b")
     val n = next.select(cols.map(col): _*).withColumn("__n", lit(true)).alias("n")
     val j = b.join(n, keys.map(k => col(s"b.$k") <=> col(s"n.$k")).reduce(_ && _),
       "full_outer")
-    def image(side: String, kind: String) = struct(
-      cols.map(c => col(s"$side.$c").as(c)) :+ lit(kind).as(ChangeTypeCol): _*)
-    val valueChanged = nonKeys.map(c => !(col(s"b.$c") <=> col(s"n.$c")))
-      .foldLeft(lit(false))(_ || _)
-    // one typed array per key, exploded; unchanged keys emit a sentinel the
-    // filter drops immediately (keeps the array expression fully typed
-    // without a DDL-cast for the empty case) — all inside one codegen stage
-    val events = when(col("n.__n").isNull, array(image("b", "delete")))
-      .when(col("b.__b").isNull, array(image("n", "insert")))
-      .when(valueChanged,
-        array(image("b", "update_preimage"), image("n", "update_postimage")))
-      .otherwise(array(image("b", "unchanged")))
-    j.select(explode(events).as("c"))
-      .filter(col(s"c.$ChangeTypeCol") =!= "unchanged")
-      .select((cols :+ ChangeTypeCol).map(f => col(s"c.$f").as(f)): _*)
+    changeRows(j, cols, keys)(col("b.__b").isNotNull, c => col(s"b.$c"),
+      col("n.__n").isNotNull, c => col(s"n.$c"))
+  }
+
+  /** The change-feed event encoding, the one place it is decided. Each
+    * row of `pairs` holds one key's before-image (`before(c)` per column,
+    * present when `hasBefore`) and after-image (`after(c)`, present when
+    * `hasAfter`):
+    *   - a new key is an `insert`, a removed key a `delete`;
+    *   - a row whose CDC key columns moved is a `delete` + `insert` (the
+    *     keyed diff sees two keys; pre/post images would strand the old
+    *     key in every downstream replica);
+    *   - changed values are an `update_preimage` + `update_postimage` pair;
+    *   - an unchanged row emits nothing.
+    * Comparisons are null-safe. A column whose before and after are the
+    * same expression (an UPDATE's unassigned column) cannot differ and is
+    * not compared. One typed event array per row, exploded in the
+    * producer's own stage; an unchanged row's sentinel keeps the array
+    * typed and is dropped right after. Returns `cols` plus [[ChangeTypeCol]].
+    */
+  private[graft] def changeRows(pairs: DataFrame, cols: Seq[String],
+      keys: Seq[String])(hasBefore: Column, before: String => Column,
+      hasAfter: Column, after: String => Column): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val (keyCols, valueCols) = cols.partition(keys.contains)
+    def differs(cs: Seq[String]): Column = cs.filterNot(c => before(c) == after(c))
+      .map(c => !(before(c) <=> after(c))).foldLeft(lit(false))(_ || _)
+    def image(v: String => Column, kind: String): Column =
+      struct(cols.map(c => v(c).as(c)) :+ lit(kind).as(ChangeTypeCol): _*)
+    val events = when(hasBefore && !hasAfter, array(image(before, "delete")))
+      .when(!hasBefore && hasAfter, array(image(after, "insert")))
+      .when(hasBefore && differs(keyCols),
+        array(image(before, "delete"), image(after, "insert")))
+      .when(hasBefore && differs(valueCols),
+        array(image(before, "update_preimage"), image(after, "update_postimage")))
+      .otherwise(array(image(before, "unchanged")))
+    pairs.select(explode(events).as("__e")).select(col("__e.*"))
+      .filter(col(ChangeTypeCol) =!= "unchanged")
   }
 
   /** Per-file min/max manifest — the Iceberg/Delta data-skipping idea. One
@@ -4111,7 +4115,6 @@ object SnapshotStore {
     */
   def transactPartialWithChanges(spark: SparkSession, root: String,
       maxAttempts: Int = 10, txn: Option[Txn] = None,
-      constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil,
       extraTxns: Seq[Txn] = Nil, pinCheck: () => Boolean = () => true,
       onReplay: () => Unit = () => (), evolvedScoped: Boolean = false,
       stagedHook: String => Unit = _ => ())(
@@ -4133,8 +4136,8 @@ object SnapshotStore {
             s"$root spans partition specs (evolution pending); partition-" +
               "scoped operations have no meaning across two layouts — " +
               "OPTIMIZE (full rewrite) to migrate to the current spec first")
-        Staged(stagePartialEvolved(spark, root, base, constraints,
-          matchedRows, transform, stagedHook))
+        Staged(stagePartialEvolved(spark, root, base, matchedRows,
+          transform, stagedHook))
       }
       else if (parts.isEmpty)
         // only reachable with evolvedScoped: a concurrent migration healed
@@ -4175,8 +4178,7 @@ object SnapshotStore {
         if (j < 0) None else Some(rel.substring(0, j))
       }.toSet
       val touchedDirs = touchedDirsEnc.map(decodeRel)
-      val (dir, freshFiles) = writeStaged(root, Some(out), parts,
-        constraints = constraints)
+      val (dir, freshFiles) = writeStaged(root, Some(out), parts)
       // link every untouched partition's files into the new version
       linkParquetTree(base.dataDir, dir, withDv = false,
         keep = rel => !touchedDirs(Option(rel.getParent).fold("")(_.toString)))
@@ -4239,7 +4241,6 @@ object SnapshotStore {
     */
   private def stagePartialEvolved(spark: SparkSession, root: String,
       base: Snapshot,
-      constraints: Seq[(String, org.apache.spark.sql.Column)],
       matchedRows: DataFrame => DataFrame,
       transform: DataFrame => (DataFrame, DataFrame),
       stagedHook: String => Unit): String = {
@@ -4260,8 +4261,7 @@ object SnapshotStore {
     // rewritten rows stage under the CURRENT spec — touched data migrates
     // forward (the same direction the eventual OPTIMIZE takes the rest)
     val (curSub, curCols) = readSpecs(base.dataDir).last
-    val (dir, _) = writeStaged(root, Some(out), curCols, curSub,
-      constraints = constraints)
+    val (dir, _) = writeStaged(root, Some(out), curCols, curSub)
     // hard-link every data file OUTSIDE the touched set, in place — each
     // keeps its own era's layout
     linkParquetTree(base.dataDir, dir, withDv = false,
@@ -4308,8 +4308,7 @@ object SnapshotStore {
     * the commits that wrote them — the same rule as partial copy-on-write).
     */
   def transactMoR(spark: SparkSession, root: String, maxAttempts: Int = 10,
-      txn: Option[Txn] = None,
-      constraints: Seq[(String, org.apache.spark.sql.Column)] = Nil)(
+      txn: Option[Txn] = None)(
       matched: DataFrame => DataFrame)(
       replace: DataFrame => (DataFrame, DataFrame)): Snapshot = {
     import org.apache.spark.sql.functions.col
@@ -4332,7 +4331,7 @@ object SnapshotStore {
       // row constraint.
       val (sub, cols) = currentLayout(root, base)
       val (dir, _) = writeStaged(root, if (out.isEmpty) None else Some(out),
-        cols, sub, constraints = constraints)
+        cols, sub)
       linkParquetTree(base.dataDir, dir, withDv = false)
       // pin the schema: the dir now mixes linked and fresh files, and on
       // partitioned layouts the committed column types/order must not be

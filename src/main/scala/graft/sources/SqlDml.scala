@@ -53,10 +53,9 @@ object SqlDml {
     * single scan that rewrites the snapshot (no join at all), MERGE from
     * the full-outer join it already materializes — instead of
     * `SnapshotStore.diffChanges`, which must shuffle BOTH full snapshots
-    * on the CDC key. Change semantics are identical by construction
-    * (updates emit pre+post only when a value actually changed, null-safe)
-    * and CdcSpec pins the equivalence against the generic diff for every
-    * statement shape.
+    * on the CDC key. UPDATE and MERGE hand their before/after pairs to
+    * `SnapshotStore.changeRows`, the encoder the generic diff uses, and
+    * CdcSpec pins the equivalence for every statement shape and route.
     */
   def execute(spark: SparkSession, sql: String,
       tables: Map[String, String] = Map.empty,
@@ -107,24 +106,9 @@ object SqlDml {
           }
           // single select: every RHS reads the pre-update row
           val out = t.select(cols.map(c => newVal(c).as(c)): _*)
-          val valueChanged = cols.map(c => !(newVal(c) <=> col(c)))
-            .foldLeft(lit(false))(_ || _)
-          def image(vals: String => Column, kind: String): Column =
-            struct(cols.map(c => vals(c).as(c)) :+
-              lit(kind).as(SnapshotStore.ChangeTypeCol): _*)
-          // an UPDATE that moves a row to a NEW key is, in keyed-diff terms,
-          // delete(old key) + insert(new key) — exactly how diffChanges
-          // classifies it (the keys no longer join). Emitting pre/post images
-          // here would strand the old key in every downstream replica.
-          val keyChanged = cdcKeys.map(k => !(newVal(k) <=> col(k)))
-            .foldLeft(lit(false))(_ || _)
-          val evs = when(keyChanged,
-              array(image(col, "delete"), image(newVal, "insert")))
-            .otherwise(array(image(col, "update_preimage"),
-              image(newVal, "update_postimage")))
-          val changes = t.filter(coalesce(cond, lit(false)) && valueChanged)
-            .select(explode(evs).as("c"))
-            .select((cols :+ SnapshotStore.ChangeTypeCol).map(f => col(s"c.$f").as(f)): _*)
+          val changes = SnapshotStore.changeRows(
+            t.filter(coalesce(cond, lit(false))), cols, cdcKeys)(
+            lit(true), col, lit(true), newVal)
           (out, Some(changes))
         }
         // build() is closed over whatever subset the route hands it: on
@@ -336,10 +320,9 @@ object SqlDml {
   }
 
   /** The single-join MERGE plan, returning (result, change rows). The
-    * change frame derives from the SAME full-outer join via the action
-    * resolution that already knows each row's fate — updates emit pre+post
-    * images only when a value actually changed (null-safe), matching
-    * `SnapshotStore.diffChanges` semantics exactly. The two frames are two
+    * change rows are `SnapshotStore.changeRows` over the SAME full-outer
+    * join, with the resolved after-image the result projects — the
+    * encoding `diffChanges` uses, by construction. The two frames are two
     * consumers of one lazy join (recomputed per write); the next step at
     * 100 TB is a single-pass writer emitting both outputs from one task,
     * the public Delta CDF design.
@@ -417,42 +400,15 @@ object SqlDml {
     val (keepN, valN) = compile(m.notMatchedBySourceActions, lit(true), tCol)
 
     val keep = when(matched, keepM).when(sourceOnly, keepI).otherwise(keepN)
-    val out = joined.filter(keep).select(fields.map { f =>
+    def after(c: String): Column = {
+      val f = base.schema(c)
       when(matched, valM(f)).when(sourceOnly, valI(f)).otherwise(valN(f))
-        .cast(f.dataType).as(f.name)
-    }: _*)
-
+        .cast(f.dataType)
+    }
+    val out = joined.filter(keep).select(fields.map(f => after(f.name).as(f.name)): _*)
     // change rows from the same join: per-row fate is already resolved
-    val targetOnly = col("__s").isNull && col("__t").isNotNull
-    def image(vals: StructField => Column, kind: String): Column = struct(
-      fields.map(f => vals(f).cast(f.dataType).as(f.name)) :+
-        lit(kind).as(SnapshotStore.ChangeTypeCol): _*)
-    def changedBy(vals: StructField => Column): Column =
-      fields.map(f => !(vals(f).cast(f.dataType) <=> tCol(f).cast(f.dataType)))
-        .foldLeft(lit(false))(_ || _)
-    // an update arm that moves a row to a NEW cdc key is delete(old)+
-    // insert(new) in keyed-diff terms — how diffChanges classifies it (the
-    // keys no longer join); pre/post images would strand the old key in
-    // every downstream replica
-    def keyChangedBy(vals: StructField => Column): Column =
-      fields.filter(f => cdcKeys.contains(f.name))
-        .map(f => !(vals(f).cast(f.dataType) <=> tCol(f).cast(f.dataType)))
-        .foldLeft(lit(false))(_ || _)
-    def updateEvents(vals: StructField => Column): Column =
-      when(keyChangedBy(vals), array(image(tCol, "delete"), image(vals, "insert")))
-        .otherwise(
-          array(image(tCol, "update_preimage"), image(vals, "update_postimage")))
-    val evs =
-      when(matched && keepM && changedBy(valM), updateEvents(valM))
-      .when(matched && !keepM, array(image(tCol, "delete")))
-      .when(sourceOnly && keepI, array(image(valI, "insert")))
-      .when(targetOnly && !keepN, array(image(tCol, "delete")))
-      .when(targetOnly && keepN && changedBy(valN), updateEvents(valN))
-      .otherwise(array(image(tCol, "unchanged")))
-    val changes = joined.select(explode(evs).as("c"))
-      .filter(col(s"c.${SnapshotStore.ChangeTypeCol}") =!= "unchanged")
-      .select((fields.map(_.name) :+ SnapshotStore.ChangeTypeCol)
-        .map(f => col(s"c.$f").as(f)): _*)
+    val changes = SnapshotStore.changeRows(joined, fields.map(_.name), cdcKeys)(
+      col("__t").isNotNull, c => col(s"$tAlias.$c"), keep, after)
     (out, Some(changes))
   }
 

@@ -23,8 +23,8 @@ import graft.sources.SnapshotStore
   * the generic post-hoc diff, which would full-outer join BOTH complete
   * snapshots per micro-batch — the same optimization SqlDml's statements
   * carry, and the difference between O(batch) and O(table) per commit on
-  * a streaming ingest path. Semantics are identical to
-  * `diffChanges(base, out)` by construction (CdcSpec pins it). Callers
+  * a streaming ingest path. The events come from
+  * `SnapshotStore.changeRows`, the encoder `diffChanges` uses. Callers
   * must hand in batches unique per key (dedupe upstream — arbitrary pick
   * here would be nondeterministic under replay).
   */
@@ -51,20 +51,8 @@ object SnapshotMergeSink {
             .withColumn("__b", lit(true)).alias("b")
           val n = rows.select(cols.map(col): _*).alias("n")
           val j = n.join(b, col(s"n.$keyCol") <=> col(s"b.$keyCol"), "left")
-          def image(side: String, kind: String) = struct(
-            cols.map(c => col(s"$side.$c").as(c)) :+
-              lit(kind).as(SnapshotStore.ChangeTypeCol): _*)
-          val valueChanged = cols.filterNot(_ == keyCol)
-            .map(c => !(col(s"n.$c") <=> col(s"b.$c")))
-            .foldLeft(lit(false))(_ || _)
-          val evs = when(col("b.__b").isNull, array(image("n", "insert")))
-            .when(valueChanged,
-              array(image("b", "update_preimage"), image("n", "update_postimage")))
-            .otherwise(array(image("b", "unchanged")))
-          j.select(explode(evs).as("c"))
-            .filter(col(s"c.${SnapshotStore.ChangeTypeCol}") =!= "unchanged")
-            .select((cols :+ SnapshotStore.ChangeTypeCol)
-              .map(f => col(s"c.$f").as(f)): _*)
+          SnapshotStore.changeRows(j, cols, Seq(keyCol))(
+            col("b.__b").isNotNull, c => col(s"b.$c"), lit(true), c => col(s"n.$c"))
         }
         SnapshotStore.upsertRows(batch.sparkSession, root, txn, keyCol, rows)(
           base => rows.select(base.columns.toIndexedSeq.map(col): _*))(

@@ -136,40 +136,75 @@ class CdcSpec extends SparkSpec {
   }
 
   test("statement-integrated changes equal the generic keyed diff (UPDATE/DELETE/MERGE)") {
-    val root = tmp("graft_cdc_equiv")
-    SnapshotStore.init(spark, root,
-      (1L to 40L).map(i => (i, s"n$i", i * 10)).toDF("id", "name", "v"),
-      cdcKeys = Seq("id"))
-    (25L to 50L).map(i => (i, i % 7)).toDF("sid", "delta")
+    (25L to 50L).map(i => (i, i % 7, i % 4)).toDF("sid", "delta", "sg")
       .createOrReplaceTempView("cdc_equiv_src")
     val stmts = Seq(
       // incl. a no-op assignment arm: rows where v = v must emit NOTHING
       "UPDATE t SET v = CASE WHEN id % 3 = 0 THEN v + 1 ELSE v END WHERE id <= 30",
       "DELETE FROM t WHERE id % 5 = 2",
-      "INSERT INTO t (id, v) VALUES (90, 900), (91, 910)", // name → typed NULL
+      "INSERT INTO t (id, v, g) VALUES (90, 900, 2), (91, 910, 3)", // name → typed NULL
       """MERGE INTO t USING cdc_equiv_src s ON t.id = s.sid
         |WHEN MATCHED AND s.delta = 0 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET v = t.v + s.delta
-        |WHEN NOT MATCHED THEN INSERT (id, name, v) VALUES (s.sid, 'ins', s.delta)
+        |WHEN NOT MATCHED THEN INSERT (id, name, v, g) VALUES (s.sid, 'ins', s.delta, s.sg)
         |WHEN NOT MATCHED BY SOURCE AND t.id < 5 THEN UPDATE SET v = t.v - 1
+        |""".stripMargin,
+      "UPDATE t SET g = g + 1 WHERE id % 4 = 1", // moves rows across partitions
+      """MERGE INTO t USING cdc_equiv_src s ON t.id = s.sid
+        |WHEN MATCHED THEN UPDATE SET v = t.v + s.delta""".stripMargin,
+      "UPDATE t SET id = id + 100 WHERE id % 7 = 3") // moves the CDC key
+    // the composite-key table: a key move, a value update, a two-key MERGE
+    val compositeStmts = Seq(
+      "UPDATE t SET g = g + 1 WHERE id % 4 = 1",
+      "UPDATE t SET v = v * 2 WHERE id % 3 = 0",
+      """MERGE INTO t USING cdc_equiv_src s ON t.id = s.sid AND t.g = s.sg
+        |WHEN MATCHED AND s.delta = 0 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET v = t.v + s.delta
+        |WHEN NOT MATCHED THEN INSERT (id, name, v, g) VALUES (s.sid, 'ins', s.delta, s.sg)
         |""".stripMargin)
-    for (sql <- stmts) {
-      val before = SnapshotStore.latest(root)
-      val snap = SqlDml.execute(spark, sql, Map("t" -> root))
-      val landed = SnapshotStore.changesAt(spark, root, snap.version)
-      val generic = SnapshotStore.diffChanges(
-        SnapshotStore.read(spark, before), SnapshotStore.read(spark, snap), Seq("id"))
-      val cols = Seq("id", "name", "v", "_change_type")
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select(cols.map(col): _*).collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-          .sortBy(t => (t._1, t._4)).toSeq
-      assert(rows(landed) == rows(generic), s"statement vs diff mismatch for: $sql")
-      // MERGE's matched-update arm with delta = t.v change: ensure the
-      // no-op-update suppression really fires (no pre/post with equal rows)
-      assert(landed.filter($"_change_type".startsWith("update")).groupBy($"id")
-        .count().filter($"count" =!= 2).isEmpty,
-        "updates must come as pre+post pairs")
+    // every route of the row-level write router: the full rewrite (flat
+    // copy-on-write), partial copy-on-write (partitioned by the non-key
+    // column g) and deletion vectors (merge-on-read), flat and partitioned
+    val layouts = Seq(
+      ("cow flat", Nil, SnapshotStore.CopyOnWrite, Seq("id"), stmts),
+      ("cow partitioned", Seq("g"), SnapshotStore.CopyOnWrite, Seq("id"), stmts),
+      ("mor flat", Nil, SnapshotStore.MergeOnRead, Seq("id"), stmts),
+      ("mor partitioned", Seq("g"), SnapshotStore.MergeOnRead, Seq("id"), stmts),
+      ("composite key", Nil, SnapshotStore.CopyOnWrite, Seq("id", "g"),
+        compositeStmts))
+    val cols = Seq("id", "name", "v", "g", "_change_type")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getString(4)))
+        .sortBy(t => (t._1, t._4, t._5)).toSeq
+    for ((layout, parts, mode, keys, sqls) <- layouts) {
+      val root = tmp("graft_cdc_equiv")
+      SnapshotStore.init(spark, root,
+        (1L to 40L).map(i => (i, s"n$i", i * 10, i % 4)).toDF("id", "name", "v", "g"),
+        partitionBy = parts, cdcKeys = keys)
+      SnapshotStore.setDmlMode(root, mode)
+      for (sql <- sqls) {
+        val before = SnapshotStore.latest(root)
+        val snap = SqlDml.execute(spark, sql, Map("t" -> root))
+        val landed = SnapshotStore.changesAt(spark, root, snap.version)
+        val generic = SnapshotStore.diffChanges(
+          SnapshotStore.read(spark, before), SnapshotStore.read(spark, snap), keys)
+        assert(rows(landed) == rows(generic),
+          s"$layout: statement vs diff mismatch for: $sql")
+        // MERGE's matched-update arm with delta = t.v change: ensure the
+        // no-op-update suppression really fires (no pre/post with equal rows)
+        assert(landed.filter($"_change_type".startsWith("update")).groupBy($"id")
+          .count().filter($"count" =!= 2).isEmpty,
+          s"$layout: updates must come as pre+post pairs")
+      }
+      // the feed slice of every statement nets to its endpoints' diff
+      val last = SnapshotStore.latest(root).version
+      val net = SnapshotStore.netChanges(spark, root, 1L, last, keys)
+      val direct = SnapshotStore.diffChanges(
+        SnapshotStore.read(spark, SnapshotStore.at(root, 0L)),
+        SnapshotStore.read(spark, SnapshotStore.at(root, last)), keys)
+      assert(rows(net) == rows(direct), s"$layout: netChanges vs diff mismatch")
     }
   }
 

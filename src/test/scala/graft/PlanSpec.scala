@@ -444,6 +444,27 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Generate"), s"explode classification missing:\n$p")
   }
 
+  test("CDC net slice: ONE key exchange, no window, explode classification") {
+    import spark.implicits._
+    import graft.sources.{SnapshotStore, SqlDml}
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_net").toString
+    SnapshotStore.init(spark, root, (1L to 20L).map(i => (i, i * 10)).toDF("id", "v"),
+      cdcKeys = Seq("id"))
+    val t = Map("t" -> root)
+    SqlDml.execute(spark, "UPDATE t SET v = v + 1 WHERE id <= 5", t)
+    SqlDml.execute(spark, "DELETE FROM t WHERE id = 7", t)
+    SqlDml.execute(spark, "INSERT INTO t VALUES (30, 300)", t)
+    val df = SnapshotStore.netChanges(spark, root, 1L, 3L, Seq("id"))
+    // the first/last event per key is one min_by/max_by aggregate over
+    // one shuffle on the key — not row_number windows
+    val simple = df.queryExecution.explainString(ExplainMode.fromString("simple"))
+    def count(op: String) = simple.linesIterator.count(_.contains(op))
+    assert(count("Exchange hashpartitioning") == 1,
+      s"expected exactly 1 key exchange in the net-slice plan:\n$simple")
+    assert(count("Window") == 0, s"no window may pick the first/last event:\n$simple")
+    assert(count("Generate") == 1, s"expected exactly 1 explode:\n$simple")
+  }
+
   test("SQL MERGE: lowers to ONE full-outer join with nested-CASE resolution") {
     import spark.implicits._
     import java.nio.file.Files
